@@ -16,6 +16,7 @@ pushdown) — a strict improvement over the reference's eager execution
 
 from __future__ import annotations
 
+import decimal as _decimal
 from typing import Any, Iterable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
@@ -70,6 +71,29 @@ def _resolve_index(columns: Sequence[str], schema: T.StructType, index: Any) -> 
     raise TypeError(f"cannot resolve index tag from {index!r}")
 
 
+def _local_frame(spark: SparkSession, names: list, vts: list, cols: list) -> DataFrame:
+    """Typed driver-side columns -> one Arrow table -> a LocalRelation
+    frame, whose actions run no Python workers (a frame of pickled rows
+    runs them on every action). Decimals round half-up to the column
+    scale and non-finite ones become NULL, as Spark's row path does."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = schema_from_value_types(names, vts)
+    arrow = to_arrow_schema(schema)
+    arrays = []
+    for vals, f in zip(cols, arrow):
+        if pa.types.is_decimal(f.type):
+            ctx = _decimal.Context(prec=f.type.precision, rounding=_decimal.ROUND_HALF_UP)
+            q = _decimal.Decimal(1).scaleb(-f.type.scale)
+            vals = [
+                v.quantize(q, context=ctx) if v is not None and v.is_finite() else None
+                for v in vals
+            ]
+        arrays.append(pa.array(vals, type=f.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
+
+
 class FxFrame:
     """Thin, lazy wrapper over ``pyspark.sql.DataFrame`` carrying the
     fabrix index tag. ``.df`` is the escape hatch to raw Spark."""
@@ -98,13 +122,8 @@ class FxFrame:
             # zip would silently truncate every column to the shortest
             raise ValueError(f"ragged series lengths: {lengths}")
         vts = [infer_series_type(vals) for vals in series.values()]
-        cols = [
-            [normalize_value(v, vt) for v in vals]
-            for vals, vt in zip(series.values(), vts)
-        ]
-        rows = list(zip(*cols)) if cols and cols[0] else []
-        schema = schema_from_value_types(names, vts)
-        return cls(spark.createDataFrame(rows, schema), index)
+        cols = [[normalize_value(v, vt) for v in vals] for vals, vt in zip(series.values(), vts)]
+        return cls(_local_frame(spark, names, vts, cols), index)
 
     @classmethod
     def from_rows(
@@ -305,11 +324,10 @@ class FxFrame:
 
     def popup_rows(self, values: Iterable[Any]) -> tuple["FxFrame", "FxFrame"]:
         """(removed, remaining) — the reference's popup_rows
-        (fabrix.rs:574-613) used by the upsert split (ec.rs:518-538).
-        The two halves PARTITION the frame: the match predicate is
-        null-safe, so NULL-key rows land in ``remaining`` (under plain
-        ``isin`` both ``cond`` and ``~cond`` are NULL for them and the
-        rows vanished from BOTH halves)."""
+        (fabrix.rs:574-613). The two halves PARTITION the frame: the
+        match predicate is null-safe, so NULL-key rows land in
+        ``remaining`` (under plain ``isin`` both ``cond`` and ``~cond``
+        are NULL for them and the rows vanished from BOTH halves)."""
         self._require_index()
         cond = self._key_match(list(values))
         return self._with(self._df.filter(cond)), self._with(self._df.filter(~cond))

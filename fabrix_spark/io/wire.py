@@ -32,8 +32,8 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
-from ..frame import FxFrame
-from ..types import ValueType, schema_from_value_types
+from ..frame import FxFrame, _local_frame
+from ..types import ValueType
 
 __all__ = ["to_wire", "from_wire", "to_json", "from_json"]
 
@@ -114,9 +114,8 @@ def _dec(v: Any, vt: ValueType) -> Any:
     if vt is ValueType.DATETIME:
         return _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=int(v) // 1000)
     if vt in (ValueType.DECIMAL, ValueType.U64):
-        # U64 rides a DecimalType(20,0) column (types._TO_SPARK) and
-        # Spark's row verifier accepts ONLY decimal.Decimal there — a
-        # raw wire int would fail createDataFrame
+        # U64 rides a DecimalType(20,0) column (types._TO_SPARK); the
+        # frame builder rounds decimal columns as decimal.Decimal values
         return _decimal.Decimal(v)
     if vt is ValueType.BYTES:
         return bytes(v)
@@ -185,7 +184,6 @@ def from_wire(spark: SparkSession, payload: dict, fmt: str = "column") -> FxFram
             # zip would silently truncate every column to the shortest
             raise ValueError(f"ragged column payload lengths: {lengths}")
         cols = [[_dec(v, vt) for v in s["values"]] for s, vt in zip(series, vts)]
-        rows = list(zip(*cols)) if cols else []
     elif fmt == "row":
         d = payload["data"]
         vts = [_parse_vt(t) for t in d["types"]]
@@ -193,16 +191,15 @@ def from_wire(spark: SparkSession, payload: dict, fmt: str = "column") -> FxFram
         if not values:
             raise ValueError("row wire format with no rows cannot carry column names")
         names = list(values[0])
-        rows = [tuple(_dec(r[n], vt) for n, vt in zip(names, vts)) for r in values]
+        cols = [[_dec(r[n], vt) for r in values] for n, vt in zip(names, vts)]
     elif fmt == "dataset":
         d = payload["data"]
         names = list(d["names"])
         vts = [_parse_vt(t) for t in d["types"]]
-        rows = [tuple(_dec(v, vt) for v, vt in zip(r, vts)) for r in d["values"]]
+        cols = [[_dec(r[i], vt) for r in d["values"]] for i, vt in enumerate(vts)]
     else:
         raise ValueError(f"unknown wire format {fmt!r}")
-    schema = schema_from_value_types(names, vts)
-    return FxFrame(spark.createDataFrame(rows, schema), index)
+    return FxFrame(_local_frame(spark, names, vts, cols), index)
 
 
 def to_json(fx: FxFrame, fmt: str = "column") -> str:

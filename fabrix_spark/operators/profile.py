@@ -25,6 +25,7 @@ _SCAN_SHAPED_NODES = {
     "Project",
     "Filter",
     "Relation",
+    "RelationV2",
     "LogicalRelation",
     "LogicalRDD",
     "LocalRelation",
@@ -44,7 +45,7 @@ def _is_scan_shaped(df: DataFrame) -> bool:
 
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     for line in plan.splitlines():
-        m = _re.match(r"^[\s:+-]*([A-Za-z]+)", line)
+        m = _re.match(r"^[\s:+-]*([A-Za-z][A-Za-z0-9]*)", line)
         if m and m.group(1) not in _SCAN_SHAPED_NODES:
             return False
     return True
@@ -53,9 +54,9 @@ def _is_scan_shaped(df: DataFrame) -> bool:
 def profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """Long-format profile: one row per column with
     (column, n_rows, n_nulls, n_distinct, min_value, max_value)."""
-    cols = columns or df.columns
+    cols = df.columns if columns is None else columns
     if not cols:
-        raise ValueError("profile() needs at least one column (got a zero-column DataFrame)")
+        raise ValueError("profile() needs at least one column (got an empty list or a zero-column DataFrame)")
     # Derived inputs (join/aggregate results — anything beyond a
     # projected/filtered scan) are materialized ONCE as the pruned
     # projection (r18, advisor item): the per-column union below

@@ -3,17 +3,14 @@
 plumbing ec.rs:49-92; Excel→DB state machine xl_db.rs:218-300).
 
 Spark-first re-expression: the workbook is parsed driver-side in
-bounded ``batch_size`` chunks (openpyxl ``read_only`` streams rows
-without loading the sheet); each chunk becomes a small DataFrame and
-is handed to a consumer — the first batch may Replace, later batches
-Append/Upsert, exactly the reference's per-batch strategy switch
-(xl_db.rs:219-230, 263-280). Executors do the writing; only the XML
-parse is driver-side (SURVEY.md §7.4: a DSv2 source is only warranted
-if a single sheet exceeds driver memory).
-
-openpyxl is not in this container → the file-open path raises
-ImportError; the batching/transpose/consume engine takes any row
-iterator, so it is fully exercised in tests with synthetic rows.
+bounded ``batch_size`` chunks (the SAX reader streams rows without
+loading the sheet); each chunk becomes a small Arrow-built local frame
+(reading it back runs no Spark job) handed to a consumer — the first
+batch may Replace, later batches Append/Upsert, exactly the
+reference's per-batch strategy switch (xl_db.rs:219-230, 263-280). A
+``SqlExecutor`` consumer writes from the driver over DB-API; a lake or
+JDBC consumer writes from executors. A DSv2 source is only warranted
+if a single sheet exceeds driver memory (SURVEY.md §7.4).
 """
 
 from __future__ import annotations

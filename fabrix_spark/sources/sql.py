@@ -9,9 +9,9 @@ Two backends:
 
 - **DB-API** (sqlite3 built-in; duckdb; any PEP-249 driver):
   driver-side connection like the reference's sqlx pool. Reads land in
-  Spark via Arrow `createDataFrame`; writes stream `toLocalIterator()`
-  in bounded batches with multi-row INSERTs (mutation_dml.rs:25-35).
-  This is the edge path — fine for control-plane tables. DuckDB
+  Spark via Arrow `createDataFrame`; a write collects the frame once and
+  binds its rows with ``executemany`` (mutation_dml.rs:25-35). This is
+  the edge path — fine for control-plane tables. DuckDB
   (``dialect="duckdb"``) is the second LIVE columnar engine behind
   this surface: information_schema catalog, explicit BEGIN/COMMIT
   transactions (DuckDB autocommits per statement otherwise), and
@@ -22,7 +22,7 @@ Two backends:
   parallel; requires the JDBC driver jar on the classpath.
 
 Upsert follows the reference exactly: probe existing index values,
-split the frame (popup_rows, fabrix.rs:574-613), INSERT the new rows,
+split the rows (popup_rows, fabrix.rs:574-613), INSERT the new rows,
 per-key UPDATE the matched ones — wrapped in one transaction.
 """
 
@@ -30,13 +30,12 @@ from __future__ import annotations
 
 import datetime as _dt
 import decimal as _decimal
-from dataclasses import dataclass
-from typing import Any, Iterable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..frame import FxFrame
-from ..plans.adt import Col, Compound, Delete, FnCol, Select, with_primary_key
+from ..plans.adt import Col, Compound, Delete, Select, with_primary_key
 from ..plans.sqlgen import (
     render_alter_modify_column,
     render_compound,
@@ -51,7 +50,7 @@ from ..plans.sqlgen import (
     render_select,
     render_value,
 )
-from ..types import ValueType, from_spark_type
+from ..types import ValueType
 
 __all__ = ["SaveStrategy", "SqlExecutor", "read_jdbc", "write_jdbc", "upsert_jdbc"]
 
@@ -343,45 +342,36 @@ class SqlExecutor:
     # write (§2.4)
     # ------------------------------------------------------------------
 
-    def _insert_rows(self, table: str, columns: list[str], rows: Iterable[tuple]) -> int:
+    def _executemany(self, sql: str, rows: list[tuple]) -> int:
+        if rows:
+            self._cursor().executemany(sql, [tuple(map(_adapt, r)) for r in rows])
+        return len(rows)
+
+    def _insert_rows(self, table: str, columns: list[str], rows: list[tuple]) -> int:
         collist = ", ".join(f'"{c}"' for c in columns)
         ph = ", ".join("?" for _ in columns)
-        cur = self._cursor()
-        n = 0
-        batch: list[tuple] = []
-        for row in rows:
-            batch.append(tuple(_adapt(v) for v in row))
-            if len(batch) >= 1000:
-                cur.executemany(f'INSERT INTO "{table}" ({collist}) VALUES ({ph})', batch)
-                n += len(batch)
-                batch = []
-        if batch:
-            cur.executemany(f'INSERT INTO "{table}" ({collist}) VALUES ({ph})', batch)
-            n += len(batch)
-        return n
+        return self._executemany(f'INSERT INTO "{table}" ({collist}) VALUES ({ph})', rows)
+
+    def _update_rows(self, table: str, columns: list[str], idx: str, rows: list[tuple]) -> int:
+        """Per-row UPDATE ... WHERE index = v (mutation_dml.rs:44-84)."""
+        sets = [i for i, c in enumerate(columns) if c != idx]
+        setlist = ", ".join(f'"{columns[i]}" = ?' for i in sets)
+        k = columns.index(idx)
+        return self._executemany(
+            f'UPDATE "{table}" SET {setlist} WHERE "{idx}" = ?',
+            [tuple(r[i] for i in sets) + (r[k],) for r in rows],
+        )
 
     def insert(self, table: str, fx: FxFrame | DataFrame) -> int:
         df = fx.df if isinstance(fx, FxFrame) else fx
-        return self._insert_rows(table, df.columns, (tuple(r) for r in df.toLocalIterator()))
+        return self._insert_rows(table, df.columns, df.collect())
 
     def update(self, table: str, fx: FxFrame) -> int:
-        """Per-row UPDATE ... WHERE index = v (mutation_dml.rs:44-84).
-        Batched statements; degenerate at scale — prefer upsert/MERGE."""
+        """Per-row UPDATE by index key — degenerate at scale; prefer
+        upsert/MERGE."""
         if fx.index_tag is None:
             raise ValueError("update requires an index tag")
-        idx = fx.index_tag.name
-        cols = [c for c in fx.columns if c != idx]
-        setlist = ", ".join(f'"{c}" = ?' for c in cols)
-        cur = self._cursor()
-        n = 0
-        for r in fx.df.toLocalIterator():
-            d = r.asDict()
-            cur.execute(
-                f'UPDATE "{table}" SET {setlist} WHERE "{idx}" = ?',
-                tuple(_adapt(d[c]) for c in cols) + (_adapt(d[idx]),),
-            )
-            n += 1
-        return n
+        return self._update_rows(table, fx.columns, fx.index_tag.name, fx.df.collect())
 
     def delete(self, d: Delete) -> int:
         cur = self._cursor()
@@ -403,10 +393,11 @@ class SqlExecutor:
         txn_create_and_insert (ec.rs:602-651).
 
         Semantics mirror the reference exactly, including upsert's
-        probe-and-split with per-row UPDATEs — degenerate at scale by
-        design. Big writes belong on the set-based paths:
-        :func:`upsert_jdbc` (parallel staging write + one MERGE-shaped
-        transaction) or the lake anti-join merge (sources/lake.py)."""
+        probe-and-split with per-row UPDATEs. The frame is read with one
+        ``collect()``: the whole saved frame is held on the driver. Big
+        writes belong on the set-based paths: :func:`upsert_jdbc`
+        (parallel staging write + one MERGE-shaped transaction) or the
+        lake anti-join merge (sources/lake.py)."""
         self._begin()
         try:
             n = self._save_inner(table, fx, strategy)
@@ -471,33 +462,30 @@ class SqlExecutor:
             if not exists:
                 self.create_table(table, fx)
                 return self.insert(table, fx)
-            if fx.index_tag is None:
-                raise ValueError("upsert requires an index tag")
-            idx = fx.index_tag.name
-            if fx.index_has_null():
-                # a NULL key matches nothing in the probe and falls
-                # out of BOTH popup_rows halves — the row would
-                # silently vanish from the upsert (r16 self-review)
-                raise ValueError(
-                    f"upsert index {idx!r} contains NULLs; key every row"
-                )
-            # stream the key column in bounded batches — the probe is
-            # batched IN lists like the reference (query_dml.rs:14-28)
-            # without ever materializing the full id list on the driver
-            existing: set[Any] = set()
-            batch: list[Any] = []
-            for r in fx.df.select(idx).toLocalIterator():
-                batch.append(r[0])
-                if len(batch) >= 1000:
-                    existing.update(self.select_existing_ids(table, idx, batch))
-                    batch = []
-            if batch:
-                existing.update(self.select_existing_ids(table, idx, batch))
-            to_update, to_insert = fx.popup_rows(list(existing))
-            n = self.insert(table, to_insert)
-            n += self.update(table, to_update)
-            return n
+            return self._upsert(table, fx)
         raise ValueError(f"unknown save strategy {strategy!r}")
+
+    def _upsert(self, table: str, fx: FxFrame) -> int:
+        """Probe existing keys in batched IN lists (query_dml.rs:14-28),
+        split the rows in Python (popup_rows, fabrix.rs:574-613), INSERT
+        the new ones and UPDATE the matched ones (ec.rs:518-538)."""
+        if fx.index_tag is None:
+            raise ValueError("upsert requires an index tag")
+        idx = fx.index_tag.name
+        columns, rows = fx.columns, fx.df.collect()
+        keys = [r[idx] for r in rows]
+        if None in keys:
+            # a NULL key never matches the probe: the row would insert, not update
+            raise ValueError(f"upsert index {idx!r} contains NULLs; key every row")
+        # dates compare as the ISO text _adapt binds (sqlite returns that
+        # text, DuckDB date objects); numbers compare by value
+        match = lambda v: _adapt(v) if isinstance(v, _dt.date) else v  # noqa: E731
+        existing: set[Any] = set()
+        for i in range(0, len(keys), 1000):
+            existing.update(map(match, self.select_existing_ids(table, idx, keys[i : i + 1000])))
+        new = [r for r, k in zip(rows, keys) if match(k) not in existing]
+        old = [r for r, k in zip(rows, keys) if match(k) in existing]
+        return self._insert_rows(table, columns, new) + self._update_rows(table, columns, idx, old)
 
 
 # ---------------------------------------------------------------------------
@@ -556,10 +544,9 @@ def upsert_jdbc(
 ) -> None:
     """MERGE-shaped upsert through JDBC — the 100 TB SQL write path.
 
-    ``SqlExecutor.save(strategy='upsert')`` mirrors the reference's
-    probe-and-split semantics exactly (ec.rs:518-538) but issues
-    per-row UPDATEs — degenerate at scale, as its docstring says. This
-    is the scale route: (1) all executors write the new rows to a
+    ``SqlExecutor.save(strategy='upsert')`` runs the reference's
+    probe-and-split (ec.rs:518-538) with the whole frame on the driver.
+    This is the scale route: (1) all executors write the new rows to a
     staging table IN PARALLEL via the JDBC datasource, then (2) ONE
     set-based transaction on the driver finalizes:
     ``DELETE matched keys; INSERT all staged rows`` — the same

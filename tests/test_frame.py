@@ -180,3 +180,92 @@ def test_frame_ragged_inputs_refused(spark):
         FxFrame.from_rows(spark, [[1, 2]], names=["a"])
     with pytest.raises(ValueError, match="header"):
         FxFrame.from_column_values(spark, [[1, 2], []], has_header=True)
+
+
+def test_from_series_and_from_rows_pin_schema_and_values(spark):
+    """from_series/from_rows build the frame from one Arrow table: pin
+    the literal schema and collected values for every inferable type, a
+    NULL key, an all-NULL column, int->float / int->decimal /
+    datetime->date coercion and a mismatch that becomes NULL. The frame
+    is a LocalRelation, so reading it back runs no Python workers."""
+    import datetime as dt
+    import decimal
+    import uuid
+
+    u = uuid.UUID("12345678-1234-5678-1234-567812345678")
+    series = {
+        "k": [1, None, 3],
+        "b": [True, None, False],
+        "f": [1.5, 2, None],
+        "s": ["x", 7, None],
+        "dec": [decimal.Decimal("1.25"), 3, None],
+        "u": [u, None, None],
+        "by": [b"\x00\xff", bytearray(b"ab"), None],
+        "ts": [dt.datetime(2024, 1, 2, 3, 4, 5, 6), None, dt.datetime(1969, 12, 31, 23, 59, 59)],
+        "d": [dt.date(2024, 1, 2), dt.datetime(2024, 5, 6, 7, 8, 9), None],
+        "t": [dt.time(1, 2, 3, 4), None, dt.time(23, 59, 59, 999999)],
+        "nul": [None, None, None],
+    }
+    want_schema = (
+        "struct<k:bigint,b:boolean,f:double,s:string,dec:decimal(38,18),u:string,"
+        "by:binary,ts:timestamp_ntz,d:date,t:bigint,nul:bigint>"
+    )
+    want = [
+        (1, True, 1.5, "x", decimal.Decimal("1.250000000000000000"), str(u), b"\x00\xff",
+         dt.datetime(2024, 1, 2, 3, 4, 5, 6), dt.date(2024, 1, 2), 3723000004000, None),
+        (None, None, 2.0, None, decimal.Decimal("3.000000000000000000"), None, b"ab",
+         None, dt.date(2024, 5, 6), None, None),
+        (3, False, None, None, None, None, None,
+         dt.datetime(1969, 12, 31, 23, 59, 59), None, 86399999999000, None),
+    ]
+    by_series = FxFrame.from_series(spark, series, index="k")
+    by_rows = FxFrame.from_rows(spark, list(zip(*series.values())), names=list(series), index="k")
+    for fx in (by_series, by_rows):
+        assert fx.df.schema.simpleString() == want_schema
+        assert [tuple(r) for r in fx.collect()] == want
+        assert fx.index_tag.name == "k" and fx.index_has_null()
+        assert fx.df._jdf.queryExecution().optimizedPlan().toString().startswith("LocalRelation")
+
+    # decimals round half-up to the column scale; a non-finite one is NULL
+    dec = FxFrame.from_series(
+        spark, {"d": [decimal.Decimal("0.1234567890123456785"), decimal.Decimal("NaN")]}
+    )
+    assert [r[0] for r in dec.collect()] == [decimal.Decimal("0.123456789012345679"), None]
+    empty = FxFrame.from_series(spark, {"a": [], "b": []})
+    assert empty.df.schema.simpleString() == "struct<a:bigint,b:bigint>" and empty.collect() == []
+
+
+def test_from_wire_every_value_type_schema_and_values(spark):
+    """The wire decoder builds frames with the same Arrow helper; pin
+    the Spark type and value of every ValueType, including the widened
+    unsigned types, the Decimal(20,0) U64 carrier and the void Null."""
+    import datetime as dt
+    import decimal
+
+    from fabrix_spark.io.wire import from_wire
+
+    cols = {
+        "I8": -128, "I16": 2, "I32": 2**31 - 1, "U8": 255, "U16": 65535, "U32": 2**32 - 1,
+        "U64": 2**64 - 1, "F32": 1.5, "F64": 2.5, "Bool": True, "Date": 19000,
+        "Time": 3723000004000, "DateTime": 1704164645000006000, "String": "s",
+        "Decimal": "1.5", "Uuid": "12345678-1234-5678-1234-567812345678", "Bytes": [0, 255],
+        "Null": None,
+    }
+    payload = {
+        "data": [{"name": n.lower(), "datatype": n, "values": [v, None]} for n, v in cols.items()],
+        "index_tag": None,
+    }
+    fx = from_wire(spark, payload)
+    assert fx.df.schema.simpleString() == (
+        "struct<i8:tinyint,i16:smallint,i32:int,u8:smallint,u16:int,u32:bigint,"
+        "u64:decimal(20,0),f32:float,f64:double,bool:boolean,date:date,time:bigint,"
+        "datetime:timestamp_ntz,string:string,decimal:decimal(38,18),uuid:string,"
+        "bytes:binary,null:void>"
+    )
+    assert [tuple(r) for r in fx.collect()] == [
+        (-128, 2, 2147483647, 255, 65535, 4294967295, decimal.Decimal("18446744073709551615"),
+         1.5, 2.5, True, dt.date(2022, 1, 8), 3723000004000,
+         dt.datetime(2024, 1, 2, 3, 4, 5, 6), "s", decimal.Decimal("1.500000000000000000"),
+         "12345678-1234-5678-1234-567812345678", b"\x00\xff", None),
+        (None,) * 18,
+    ]

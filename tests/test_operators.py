@@ -3217,6 +3217,36 @@ def test_profile_derived_input_materialized_and_empty_cols_guard(spark, sf_dir):
         profile(base.select())
 
 
+def test_profile_explicit_empty_columns_and_v2_scan(spark, sf_dir):
+    """profile() edges: (a) an explicit ``columns=[]`` raises like a
+    zero-column frame instead of silently profiling every column;
+    (b) a DataSource-V2 scan prints as ``RelationV2`` and must count as
+    scan-shaped, so profiling it never checkpoints the whole table."""
+    import pytest as _pytest
+
+    from fabrix_spark.operators.profile import _is_scan_shaped, profile
+
+    base = spark.createDataFrame([(1, "a")], "k int, s string")
+    with _pytest.raises(ValueError, match="at least one column"):
+        profile(base, [])
+
+    key = "spark.sql.sources.useV1SourceList"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "")
+    try:
+        scan = spark.read.parquet(f"{sf_dir}/orders.parquet")
+        plan = scan._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.lstrip().startswith("RelationV2")
+        assert _is_scan_shaped(scan)
+        assert _is_scan_shaped(scan.select("o_orderkey").filter("o_orderkey > 0"))
+        scan_plan = (
+            profile(scan, ["o_orderkey"])._jdf.queryExecution().optimizedPlan().toString()
+        )
+        assert "LogicalRDD" not in scan_plan
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_winsorize_sketch_path_and_ewma_guard(spark):
     """winsorize(method='sketch') with unit buckets equals the exact
     path on an integer column; ewma_decayed refuses configurations

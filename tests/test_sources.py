@@ -132,6 +132,41 @@ def test_consume_excel_state_machine(spark, tmp_path):
     assert cur.fetchone() == (5, 15)
 
 
+def test_excel_to_sqlite_one_spark_job_per_save(spark, tmp_path):
+    """Excel->sqlite REPLACE then UPSERT: each save reads its batch with
+    at most one Spark job (job counts, not timings), and the table holds
+    the last write per key, value by value."""
+    from tests.xlsx_fixture import excel_to_db_run
+
+    db = sqlite3.connect(str(tmp_path / "xl.db"))
+    jobs, expected = excel_to_db_run(
+        spark, SqlExecutor(spark, lambda: db), str(tmp_path / "sheet.xlsx")
+    )
+    assert len(jobs) == 2 and max(jobs) <= 1, jobs
+    got = db.execute("SELECT id, name, price, day, ts, flag FROM sheet ORDER BY id").fetchall()
+    # sqlite stores dates/timestamps as the ISO text _adapt binds, bools as 0/1
+    assert got == [
+        (k, name, price, day.isoformat(), ts.isoformat(sep=" "), int(flag))
+        for k, name, price, day, ts, flag in (expected[k] for k in sorted(expected))
+    ]
+    assert len(got) == 20 and got[7][1] is None and got[3][1] == "n3" and got[15][1] == "u15"
+
+
+def test_save_upsert_duplicate_new_keys_roll_back(spark, ex, fx):
+    """Two rows with the same new key in one UPSERT frame fail on the
+    primary key, and the whole save rolls back."""
+    ex.save("t", fx, SaveStrategy.REPLACE)
+    dup = FxFrame.from_series(
+        spark,
+        {"id": [2, 9, 9], "name": ["B", "x", "y"], "val": [20.0, 9.0, 9.5]},
+        index="id",
+    )
+    with pytest.raises(sqlite3.IntegrityError):
+        ex.save("t", dup, SaveStrategy.UPSERT)
+    rows = ex.raw_select("SELECT id, name, val FROM t ORDER BY id").data()
+    assert [tuple(r) for r in rows] == [(1, "a", 1.5), (2, "b", 2.5), (3, "c", 3.5), (4, "d", 4.5)]
+
+
 # ---------------------------------------------------------------------------
 # stdlib .xlsx SAX parser (fabrix-xl parity, no openpyxl)
 # ---------------------------------------------------------------------------
@@ -300,9 +335,8 @@ def test_save_replace_atomic_on_failure(spark, ex, fx):
 
 
 def test_save_upsert_refuses_null_index(spark, ex, fx):
-    """A NULL upsert key matches nothing in the probe and falls out of
-    BOTH popup_rows halves — the row would silently vanish (r16
-    self-review). Refused loudly instead."""
+    """A NULL upsert key never matches the probe, so the row cannot be
+    upserted by key — refused loudly instead."""
     ex.save("t", fx, SaveStrategy.UPSERT)
     withnull = FxFrame.from_series(
         spark,
@@ -311,6 +345,25 @@ def test_save_upsert_refuses_null_index(spark, ex, fx):
     )
     with pytest.raises(ValueError, match="NULL"):
         ex.save("t", withnull, SaveStrategy.UPSERT)
+
+
+def test_save_upsert_date_and_timestamp_keys_on_sqlite(spark, ex):
+    """sqlite hands DATE/TIMESTAMP keys back from the probe as the ISO
+    text they were bound as; the upsert split must still match them to
+    the frame's date/datetime keys and UPDATE instead of re-INSERTing."""
+    import datetime as dt
+
+    for key, later in (
+        (dt.date(2024, 1, 2), dt.date(2024, 1, 3)),
+        (dt.datetime(2024, 1, 2, 3, 4, 5, 6), dt.datetime(2024, 1, 3)),
+    ):
+        first = FxFrame.from_series(spark, {"k": [key], "v": ["a"]}, index="k")
+        ex.save("dk", first, SaveStrategy.REPLACE)
+        again = FxFrame.from_series(spark, {"k": [key, later], "v": ["A", "b"]}, index="k")
+        assert ex.save("dk", again, SaveStrategy.UPSERT) == 2
+        rows = ex._conn.execute("SELECT k, v FROM dk ORDER BY k").fetchall()
+        # str() of a date/datetime is the ISO text _adapt binds
+        assert rows == [(str(key), "A"), (str(later), "b")]
 
 
 def test_compound_and_empty_in_on_sqlite(ex, fx):

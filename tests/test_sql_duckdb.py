@@ -105,6 +105,20 @@ def test_duckdb_save_rolls_back_atomically(spark, ex, fx):
     assert got[0][1] == "a"
 
 
+def test_duckdb_excel_upsert_one_spark_job_per_save(spark, ex, tmp_path):
+    """Excel->DuckDB REPLACE then UPSERT: at most one Spark job per save
+    and the last write per key, value by value in DuckDB's native types."""
+    from tests.xlsx_fixture import excel_to_db_run
+
+    jobs, expected = excel_to_db_run(spark, ex, str(tmp_path / "sheet.xlsx"))
+    assert len(jobs) == 2 and max(jobs) <= 1, jobs
+    got = ex._conn.execute(
+        'SELECT id, name, price, day, ts, flag FROM "sheet" ORDER BY id'
+    ).fetchall()
+    assert got == [expected[k] for k in sorted(expected)]
+    assert len(got) == 20 and got[7][1] is None and got[15][1] == "u15"
+
+
 def test_duckdb_select_adt_and_delete(ex, fx):
     ex.save("t", fx, SaveStrategy.REPLACE)
     sel = Select(table="t", columns=[Col("id"), Col("val")], filter=[Cond("val", "gt", 2.0)])

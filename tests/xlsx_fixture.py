@@ -90,3 +90,50 @@ def make_test_xlsx(path: str) -> str:
         zf.writestr("xl/worksheets/sheet1.xml", _SHEET1)
         zf.writestr("xl/worksheets/sheet2.xml", _SHEET2)
     return path
+
+
+def excel_to_db_run(spark, ex, path: str):
+    """Write a 30-row sheet to ``path`` and feed it through
+    ``consume_excel`` into ``ex`` in two 15-row batches: REPLACE, then
+    UPSERT (keys 5-14 updated, 15-19 new, key 7's name set to NULL).
+    Each save runs under its own Spark job group.
+
+    Returns (Spark jobs per save, {key: (id, name, price, day, ts, flag)}
+    with the last write per key)."""
+    import datetime as dt
+    import uuid
+
+    from fabrix_spark.sources.excel import XlReadOptions, consume_excel
+    from fabrix_spark.sources.sql import SaveStrategy
+    from fabrix_spark.sources.xlsx import write_xlsx
+
+    def row(key, batch):
+        return [
+            key,
+            None if (batch, key) == (1, 7) else f"{'nu'[batch]}{key}",
+            key + (0.25, 0.75)[batch],
+            dt.date(2024, 1, 1) + dt.timedelta(days=key + 100 * batch),
+            dt.datetime(2024, 1, 1, 8) + dt.timedelta(hours=key, seconds=7 * key, days=batch),
+            (key + batch) % 2 == 0,
+        ]
+
+    rows = [row(k, 0) for k in range(15)] + [row(k, 1) for k in range(5, 20)]
+    write_xlsx([["id", "name", "price", "day", "ts", "flag"]] + rows, path)
+    expected = {r[0]: tuple(r) for r in rows}
+
+    sc = spark.sparkContext
+    jobs = []
+
+    def consumer(fx, i):
+        group = f"excel-save-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "excel save")
+        try:
+            strategy = SaveStrategy.REPLACE if i == 0 else SaveStrategy.UPSERT
+            assert ex.save("sheet", fx, strategy) == 15
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    assert consume_excel(spark, path, consumer, XlReadOptions(index="id", batch_size=15)) == 2
+    return jobs, expected
