@@ -8381,6 +8381,11 @@ def stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for i in range(4):
         bdir = os.path.join(wdir, f"__b={i}")
+        if not os.path.isdir(bdir):
+            # an empty quartile (clustered timestamps, or lo == hi so
+            # every split coincides) writes no directory: skip that
+            # micro-batch — the remaining ones keep ascending order
+            continue
         parts = [f for f in os.listdir(bdir) if f.endswith(".parquet")]
         assert len(parts) == 1, f"bucket {i}: expected one file, got {parts}"
         dst = os.path.join(src, f"b{i:03d}.parquet")

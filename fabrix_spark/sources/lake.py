@@ -21,9 +21,11 @@ immutable version directory by atomically replacing a pointer file —
 
 Readers resolve through the pointer, so there is never an instant
 where the table is missing or half-written: the pointer only moves
-after the new tree has been re-opened successfully, the pointer file
-is fsynced before the single ``os.replace`` (atomic on POSIX), and
-the directory entry is fsynced after. A crash at ANY step leaves the
+after the parquet footer of every file the commit wrote has been
+opened successfully (no Spark job — the manifest pass reads those
+footers anyway), the pointer file is fsynced before the single
+``os.replace`` (atomic on POSIX), and the directory entry is fsynced
+after. A crash at ANY step leaves the
 pointer on a complete tree — before the flip the old version is live,
 after it the new one is. Append and partial (bucket-scoped) upserts
 assemble their new version by HARD-LINKING the untouched files of the
@@ -69,6 +71,14 @@ driver-side metadata lookup, the Iceberg/Delta data-skipping idea.
 multi-column sort, pure column expressions) so pruning works on every
 clustered dimension, not just a sort leader.
 
+Schema record: every write stores the Spark schema of the data
+columns it wrote (physical names, partition columns left out) in the
+version tree's ``_schema.json``, and reads hand it to Spark, so no
+read of a version tree starts a schema-inference job. Partition
+column values still come from directory inference. Trees without a
+record (legacy layouts, older versions) and ``merge_schema=True``
+tables keep inferring from footers.
+
 Scale note: the plan shape (anti join on the index, union,
 partitioned write) is exactly what a warehouse MERGE executes — the
 anti-join shuffles on the key, nothing collects to the driver, and
@@ -95,6 +105,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..frame import FxFrame
 from .sql import SaveStrategy
@@ -116,6 +127,13 @@ _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 def _is_version(name: str) -> bool:
     return _VER_RE.match(name) is not None
+
+
+def _unreadable(vdir: str, why: str) -> RuntimeError:
+    return RuntimeError(
+        f"new table version at {vdir!r} is unreadable ({why}); live table "
+        f"unchanged (pointer not moved), bad output kept for inspection"
+    )
 
 
 def _stat_key(v):
@@ -140,17 +158,14 @@ def _stat_key(v):
     return None  # bytes / nested — no pruning on this column
 
 
-def _file_stats(path: str) -> dict:
-    """Per-file column statistics from the parquet FOOTER only (no
-    data pages read): min/max/null-count per top-level primitive
-    column, merged across row groups. Parquet writers may truncate
-    long string min/max, but truncation preserves bound-ness (stored
-    min <= true min, stored max >= true max), so pruning stays sound.
-    Columns whose footer carries no usable stats are simply absent —
-    absent means "never pruned"."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
+def _footer_stats(md) -> dict:
+    """Per-file column statistics from a parquet FOOTER (pyarrow
+    ``FileMetaData``; no data pages read): min/max/null-count per
+    top-level primitive column, merged across row groups. Parquet
+    writers may truncate long string min/max, but truncation preserves
+    bound-ness (stored min <= true min, stored max >= true max), so
+    pruning stays sound. Columns whose footer carries no usable stats
+    are simply absent — absent means "never pruned"."""
     cols: dict[str, dict] = {}
     for rg in range(md.num_row_groups):
         g = md.row_group(rg)
@@ -192,6 +207,29 @@ def _file_stats(path: str) -> dict:
         "rows": md.num_rows,
         "cols": {k: v for k, v in cols.items() if v is not None},
     }
+
+
+def _all_nullable(t):
+    """A data type's JSON form with every field, array element and map
+    value nullable — what Spark's parquet reader reports anyway
+    (``StructType.asNullable``), so recorded schemas compare equal
+    whatever nullability the written frame declared."""
+    if not isinstance(t, dict):
+        return t  # primitive type name
+    kind = t.get("type")
+    if kind == "struct":
+        fields = [{**f, "nullable": True, "type": _all_nullable(f["type"])} for f in t["fields"]]
+        return {**t, "fields": fields}
+    if kind == "array":
+        return {**t, "elementType": _all_nullable(t["elementType"]), "containsNull": True}
+    if kind == "map":
+        return {
+            **t,
+            "keyType": _all_nullable(t["keyType"]),
+            "valueType": _all_nullable(t["valueType"]),
+            "valueContainsNull": True,
+        }
+    return t
 
 
 def _bloom_indices(key: str, m: int, k: int) -> list[int]:
@@ -674,14 +712,26 @@ class LakeTable:
             return os.path.isdir(os.path.join(self.path, v))
         return bool(self._legacy_entries())
 
-    def _read_raw_physical(self) -> DataFrame:
+    def _reader(self, vdir: str):
+        """A parquet reader for the version tree ``vdir``: with the
+        data schema its writer recorded (Spark starts no inference
+        job), else footer inference — always for ``merge_schema``
+        tables, whose files may legitimately disagree."""
         r = self.spark.read
         if self.merge_schema:
-            r = r.option("mergeSchema", "true")
-        return r.parquet(self.current_dir())
+            return r.option("mergeSchema", "true")
+        recorded = self._schema_doc(vdir).get("data")
+        if recorded is None:
+            return r
+        return r.schema(StructType.fromJson(recorded))
 
-    def _read_raw(self) -> DataFrame:
-        return self._apply_schema_map(self._read_raw_physical())
+    def _read_raw_physical(self, vdir: str | None = None) -> DataFrame:
+        vdir = vdir or self.current_dir()
+        return self._reader(vdir).parquet(vdir)
+
+    def _read_raw(self, vdir: str | None = None) -> DataFrame:
+        vdir = vdir or self.current_dir()
+        return self._apply_schema_map(self._read_raw_physical(vdir), vdir)
 
     def versions(self) -> list[str]:
         """Version directories on disk, oldest → newest. The live one
@@ -705,7 +755,7 @@ class LakeTable:
                     f"unknown version {version!r} for lake table {self.path!r} "
                     f"(on disk: {self.versions()})"
                 )
-            df = self._apply_schema_map(self.spark.read.parquet(vdir), vdir)
+            df = self._read_raw(vdir)
         if _BUCKET_COL in df.columns:
             df = df.drop(_BUCKET_COL)
         return FxFrame(df, self.index)
@@ -722,7 +772,7 @@ class LakeTable:
                     out.append(os.path.relpath(os.path.join(root, n), vdir))
         return sorted(out)
 
-    def _write_manifest(self, ver: str, carry: dict | None = None) -> None:
+    def _write_manifest(self, ver: str, carry: dict | None = None) -> tuple[dict, dict]:
         """Collect per-file footer statistics into ``_manifest.json``
         inside the (still-uncommitted) version tree — the Iceberg/Delta
         file-skipping idea on the pointer-commit layout. Metadata-only:
@@ -730,28 +780,50 @@ class LakeTable:
         linked from the previous version reuse the previous manifest's
         entry by relative path (linked files are bit-identical), so an
         append/bucketed-upsert pays stats collection for its NEW files
-        only. Per-file failures degrade to a stats-less entry (that
-        file is simply never pruned) — the manifest is an optimization,
-        never a correctness gate."""
+        only.
+
+        This pass is also the commit's readability gate: the footer of
+        every new file must open, and the tree must hold at least one
+        data file, or it raises before the pointer can move. Statistics
+        themselves stay best-effort — a footer that opens but yields
+        no usable stats degrades to a stats-less entry (that file is
+        simply never pruned), and bloom filters never fail a commit.
+
+        Returns (manifest file entries, commit metrics: files_added,
+        files_linked, bytes_added — "added" is every file whose footer
+        was opened here, "linked" every entry carried over)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         vdir = os.path.join(self.path, ver)
         prev: dict = carry if carry is not None else {}
         pv = self._current_version()
         if not prev and pv is not None:
             prev = self._load_manifest(os.path.join(self.path, pv)).get("files", {})
+        rels = self._data_files(vdir)
+        if not rels:
+            raise _unreadable(vdir, "it holds no data file")
         files = {}
-        for rel in self._data_files(vdir):
+        added = added_bytes = 0
+        for rel in rels:
             if rel in prev:
                 files[rel] = prev[rel]
                 continue
+            path = os.path.join(vdir, rel)
             try:
-                files[rel] = _file_stats(os.path.join(vdir, rel))
+                md = pq.read_metadata(path)
+            except (OSError, pa.ArrowException) as e:
+                raise _unreadable(vdir, f"the footer of {rel!r} does not open") from e
+            added += 1
+            added_bytes += os.stat(path).st_size
+            try:
+                files[rel] = _footer_stats(md)
             except Exception:
-                files[rel] = {"rows": None, "cols": {}}
+                files[rel] = {"rows": md.num_rows, "cols": {}}
             if self.bloom_cols:
                 try:
                     bf = _file_bloom(
-                        os.path.join(vdir, rel),
-                        [self._to_physical_name(c) for c in self.bloom_cols],
+                        path, [self._to_physical_name(c) for c in self.bloom_cols]
                     )
                     if bf:
                         files[rel]["bloom"] = bf
@@ -769,21 +841,26 @@ class LakeTable:
                 {"version": 1, "buckets": self.buckets or 0, "files": files}, f
             )
         os.replace(tmp, os.path.join(vdir, _MANIFEST))
+        return files, {
+            "files_added": added,
+            "files_linked": len(rels) - added,
+            "bytes_added": added_bytes,
+        }
 
-    def _write_commit_info(self, ver: str, op: str, extra: dict | None = None) -> None:
+    def _write_commit_info(self, ver: str, op: str, files: dict, metrics: dict) -> None:
         """Record what produced a version (``_commit.json`` in the
-        version tree): operation name, wall-clock timestamp, and the
-        row count folded from the manifest — the DESCRIBE HISTORY
-        surface of a table format."""
+        version tree): operation name, wall-clock timestamp, the row
+        and file counts folded from the manifest entries, and what the
+        commit wrote and linked (``metrics``: files_added, files_linked,
+        bytes_added, plus buckets_touched for bucketed merges and any
+        caller ``commit_extra``) — the DESCRIBE HISTORY surface of a
+        table format."""
         vdir = os.path.join(self.path, ver)
-        man = self._load_manifest(vdir).get("files", {})
         rows: int | None = 0
-        for st in man.values():
+        for st in files.values():
             r = st.get("rows")
             rows = None if (rows is None or r is None) else rows + r
-        info = {"op": op, "ts": time.time(), "rows": rows, "files": len(man)}
-        if extra:
-            info.update(extra)
+        info = {"op": op, "ts": time.time(), "rows": rows, "files": len(files), **metrics}
         tmp = os.path.join(vdir, f"_commit_tmp_{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as f:
             json.dump(info, f)
@@ -791,8 +868,11 @@ class LakeTable:
 
     def history(self) -> list[dict]:
         """Commit log of the versions still on disk, oldest → newest:
-        one dict per version with (version, op, ts, rows, files, live).
-        Versions written before commit info existed report op=None.
+        one dict per version with (version, op, ts, rows, files, live)
+        plus, where recorded, what the commit wrote and linked
+        (files_added, files_linked, bytes_added; buckets_touched for
+        bucketed merges). Versions written before commit info existed
+        report op=None.
         Metadata-only — two small JSON reads per retained version."""
         live = self._current_version()
         out = []
@@ -825,11 +905,15 @@ class LakeTable:
         manifest. Returns (surviving relative paths, total file count).
         Files without usable stats always survive — pruning is sound,
         never required."""
-        cur = self.current_dir()
+        return self._prune(self.current_dir(), where)
+
+    def _prune(self, cur: str, where: list[tuple]) -> tuple[list[str], int]:
         man = self._load_manifest(cur).get("files", {})
         # predicate names are LOGICAL; manifest/partition-dir keys are
         # PHYSICAL (files never rewrite on rename) — translate terms
-        where = [(self._to_physical_name(t[0]), *t[1:]) for t in where]
+        mapping = self._schema_map(cur)
+        phys = {logical: p for p, logical in mapping.items()}
+        where = [(phys.get(t[0], t[0]), *t[1:]) for t in where]
         all_files = self._data_files(cur)
         kept = []
         for rel in all_files:
@@ -918,7 +1002,7 @@ class LakeTable:
                 col_map,
             )
         ]
-        return self._read_pruned(kept, cond)
+        return self._read_pruned(kept, cond, cur)
 
     def scan(self, where: list[tuple] | None = None) -> FxFrame:
         """Manifest-pruned read: files whose footer statistics prove
@@ -930,23 +1014,20 @@ class LakeTable:
         construction; with no ``where`` it IS :meth:`read`."""
         if not where:
             return self.read()
-        kept, _total = self.pruned_files(where)
-        return self._read_pruned(kept, _where_to_column(where))
-
-    def _read_pruned(self, kept: list[str] | None, cond) -> FxFrame:
-        """Read `kept` relative paths (None = all files) and apply the
-        residual predicate."""
         cur = self.current_dir()
-        if kept is None:
-            df = self._read_raw().filter(cond)
-        elif not kept:  # provably empty — still typed like the table
-            df = self._read_raw().filter(F.lit(False))
+        kept, _total = self._prune(cur, where)
+        return self._read_pruned(kept, _where_to_column(where), cur)
+
+    def _read_pruned(self, kept: list[str], cond, cur: str) -> FxFrame:
+        """Read the ``kept`` relative paths of the version tree ``cur``
+        (the one they were pruned from) with the tree's schema and
+        apply the residual predicate."""
+        if not kept:  # provably empty — still typed like the table
+            df = self._read_raw(cur).filter(F.lit(False))
         else:
-            r = self.spark.read.option("basePath", cur)
-            if self.merge_schema:  # match _read_raw's footer merging
-                r = r.option("mergeSchema", "true")
+            r = self._reader(cur).option("basePath", cur)
             df = self._apply_schema_map(
-                r.parquet(*[os.path.join(cur, rel) for rel in kept])
+                r.parquet(*[os.path.join(cur, rel) for rel in kept]), cur
             ).filter(cond)
         if _BUCKET_COL in df.columns:
             df = df.drop(_BUCKET_COL)
@@ -1114,16 +1195,22 @@ class LakeTable:
 
     _SCHEMA = "_schema.json"
 
+    def _schema_doc(self, vdir: str) -> dict:
+        """A version tree's ``_schema.json``: ``renames`` (physical →
+        logical column names) and ``data`` (the recorded Spark schema
+        of the data columns, see :meth:`_write_version`). Empty when
+        the tree has none."""
+        try:
+            with open(os.path.join(vdir, self._SCHEMA)) as f:
+                return json.load(f)
+        except (OSError, ValueError):
+            return {}
+
     def _schema_map(self, vdir: str | None = None) -> dict:
         """physical → logical column renames for a version tree
         (empty = identity). Files ALWAYS store the original physical
         names — renames are metadata only."""
-        vdir = vdir or self.current_dir()
-        try:
-            with open(os.path.join(vdir, self._SCHEMA)) as f:
-                return json.load(f).get("renames", {})
-        except (OSError, ValueError):
-            return {}
+        return self._schema_doc(vdir or self.current_dir()).get("renames", {})
 
     def _apply_schema_map(self, df: DataFrame, vdir: str | None = None) -> DataFrame:
         for phys, logical in self._schema_map(vdir).items():
@@ -1159,7 +1246,7 @@ class LakeTable:
         with self._maybe_lock():
             cur = self.current_dir()
             mapping = self._schema_map(cur)
-            logical_now = [mapping.get(c, c) for c in self._read_raw_physical().columns]
+            logical_now = [mapping.get(c, c) for c in self._read_raw_physical(cur).columns]
             if old not in logical_now:
                 raise ValueError(f"no column {old!r} (have {logical_now})")
             if new in logical_now:
@@ -1177,8 +1264,7 @@ class LakeTable:
             dst = os.path.join(self.path, ver)
             os.makedirs(dst, exist_ok=True)
             self._link_tree(cur, dst)
-            with open(os.path.join(dst, self._SCHEMA), "w") as f:
-                json.dump({"renames": mapping}, f)
+            self._write_schema_doc(dst, {**self._schema_doc(cur), "renames": mapping})
             if self.index == old:
                 self.index = new
             self._commit_version(
@@ -1200,14 +1286,23 @@ class LakeTable:
                 pass
         return f"v_{seq:06d}_{uuid.uuid4().hex[:8]}"
 
-    def _write_version(self, df: DataFrame) -> str:
+    def _write_version(self, df: DataFrame, empty_bucket: int = 0) -> str:
         """Write ``df`` as a fresh immutable version tree
         (uncommitted). Buckets hash the LOGICAL index column, then the
         frame renames to physical so files stay schema-uniform across
-        column renames; the live schema map carries into the new
-        tree."""
+        column renames; the live schema map carries into the new tree.
+
+        The tree's ``_schema.json`` also records the Spark schema of
+        the data columns written (physical names, partition columns
+        left out so their values and types still come from directory
+        inference), which :meth:`_reader` hands to Spark instead of
+        inferring it from a footer. ``merge_schema`` tables record
+        none: their files may disagree and reads merge footers.
+        ``empty_bucket`` names the bucket directory that holds the
+        placeholder file of an empty bucketed write."""
         ver = self._new_version()
-        w = self._to_physical_df(self._with_bucket(df)).write.mode("errorifexists")
+        wdf = self._to_physical_df(self._with_bucket(df))
+        w = wdf.write.mode("errorifexists")
         if self._part_cols():
             w = w.partitionBy(*self._part_cols())
         vdir = os.path.join(self.path, ver)
@@ -1221,7 +1316,7 @@ class LakeTable:
             # frame (SPARK-23271 covers only unpartitioned writes), so
             # a CDC delete draining the whole table (or an empty
             # REPLACE) would commit a fileless tree that fails the
-            # readability probe. Represent the empty bucketed table as
+            # readability gate. Represent the empty bucketed table as
             # one empty bucket directory holding a 0-row
             # schema-carrying file: reads, layout checks, and later
             # bucket merges all see a normal bucketed tree (found by
@@ -1237,12 +1332,22 @@ class LakeTable:
                 )
             self._to_physical_df(df).drop(_BUCKET_COL).limit(0).write.mode(
                 "overwrite"
-            ).parquet(os.path.join(vdir, f"{_BUCKET_COL}=0"))
+            ).parquet(os.path.join(vdir, f"{_BUCKET_COL}={empty_bucket}"))
+        doc: dict = {}
         mapping = self._schema_map() if self.exists() else {}
         if mapping:
-            with open(os.path.join(vdir, self._SCHEMA), "w") as f:
-                json.dump({"renames": mapping}, f)
+            doc["renames"] = mapping
+        if not self.merge_schema:
+            part = set(self._part_cols())
+            data = StructType([f for f in wdf.schema.fields if f.name not in part])
+            doc["data"] = _all_nullable(data.jsonValue())
+        if doc:
+            self._write_schema_doc(vdir, doc)
         return ver
+
+    def _write_schema_doc(self, vdir: str, doc: dict) -> None:
+        with open(os.path.join(vdir, self._SCHEMA), "w") as f:
+            json.dump(doc, f)
 
     @staticmethod
     def _link_tree(src: str, dst: str, names: list[str] | None = None) -> None:
@@ -1277,24 +1382,20 @@ class LakeTable:
     ) -> None:
         """Atomically make ``ver`` the live tree.
 
-        Order matters: (1) prove the new tree readable — a failure here
-        leaves the pointer (and therefore readers) untouched; (2) write
+        Order matters: (1) prove the new tree readable without a Spark
+        job — :meth:`_write_manifest` opens the parquet footer of every
+        file this commit wrote and refuses a tree with no data file, so
+        a failure here leaves the pointer (and therefore readers)
+        untouched; the same pass records the manifest and the commit
+        info (what was written and what was linked); (2) write
         the new pointer to a temp file and fsync it; (3) one atomic
         ``os.replace`` onto ``_current``; (4) fsync the directory entry
         so the flip survives power loss; (5) garbage-collect superseded
         trees beyond the retention horizon. A crash between any two
         steps leaves readers on a complete tree — old before step 3,
         new after."""
-        new_dir = os.path.join(self.path, ver)
-        try:
-            self.spark.read.parquet(new_dir).schema
-        except Exception as e:
-            raise RuntimeError(
-                f"new table version at {new_dir!r} is unreadable; live table "
-                f"unchanged (pointer not moved), bad output kept for inspection"
-            ) from e
-        self._write_manifest(ver, carry=_carry_stats)
-        self._write_commit_info(ver, op, extra)
+        files, metrics = self._write_manifest(ver, carry=_carry_stats)
+        self._write_commit_info(ver, op, files, {**metrics, **(extra or {})})
         prev = self._current_version()
         legacy = self._legacy_entries() if prev is None else []
         tmp = os.path.join(self.path, f"_current_tmp_{uuid.uuid4().hex[:8]}")
@@ -1349,14 +1450,25 @@ class LakeTable:
         in beside them (O(#files) metadata, no data copied), flip the
         pointer. Readers therefore never observe a partially-appended
         table, and a crashed append leaves the live tree untouched —
-        same guarantee as every other strategy."""
+        same guarantee as every other strategy.
+
+        The new tree keeps its schema record only when the live tree
+        recorded the same one: linked files written under another (or
+        an unrecorded) schema make readers infer, as before records
+        existed."""
         ver = self._write_version(df)
         dst = os.path.join(self.path, ver)
         prev = self._current_version()
         if prev is not None:
-            self._link_tree(os.path.join(self.path, prev), dst)
+            src = os.path.join(self.path, prev)
+            self._link_tree(src, dst)
         else:
+            src = self.path
             self._link_tree(self.path, dst, names=self._legacy_entries())
+        doc = self._schema_doc(dst)
+        if doc.get("data") != self._schema_doc(src).get("data"):
+            doc.pop("data", None)
+            self._write_schema_doc(dst, doc)
         return ver
 
     def _write(self, df: DataFrame, mode: str, extra: dict | None = None) -> None:
@@ -1407,7 +1519,16 @@ class LakeTable:
         partitions the delta's keys hash into are scanned (partition
         pruning) and rewritten; every other bucket directory is
         hard-linked into the new version untouched, so the merge costs
-        O(delta + touched buckets) regardless of table size."""
+        O(delta + touched buckets) regardless of table size.
+
+        The Spark jobs are the merge's own: reading the live tree uses
+        its recorded schema and the commit is gated on pyarrow footers,
+        so neither starts a job. A 10-key bucketed upsert of a parquet
+        batch runs 4 jobs, all of them stages of the touched-bucket
+        ``collect`` or of the write. The batch is not materialized: it
+        is evaluated once for the touched buckets and again by the
+        write, so it must be deterministic — see
+        :meth:`_merge_bucketed`."""
         key = self.index or (fx.index_tag.name if isinstance(fx, FxFrame) and fx.index_tag else None)
         if key is None:
             raise ValueError("upsert requires an index column")
@@ -1418,30 +1539,35 @@ class LakeTable:
                 return
             self._check_bucket_layout()
             if self.buckets:
-                ver = self._upsert_bucketed(new, key)
-                if ver is not None:
-                    self._commit_version(ver, op="upsert")
+                self._merge_bucketed(new, new.select(key), key, op="upsert")
                 return
             current = self._read_raw()
             kept = current.join(new.select(key), on=key, how="left_anti")
             merged = kept.unionByName(new, allowMissingColumns=self.merge_schema)
             self._commit_version(self._write_version(merged), op="upsert")
 
-    def _upsert_bucketed(self, new: DataFrame, key: str) -> str | None:
-        return self._merge_bucketed(new, new.select(key), key)
-
     def _merge_bucketed(
-        self, ups: DataFrame, touched_keys: DataFrame, key: str
-    ) -> str | None:
+        self, ups: DataFrame, touched_keys: DataFrame, key: str, op: str
+    ) -> None:
         """Bucket-pruned merge, the shared O(delta) write path: every
         row whose key is in ``touched_keys`` leaves, every ``ups`` row
         enters, and only the bucket partitions the touched keys hash
         into are read and rewritten — all other bucket directories
-        hard-link into the new version untouched. :meth:`upsert` is
-        the special case ``touched_keys == ups' keys``;
-        :meth:`apply_changes` additionally lists delete-marked keys
-        that have no replacement row in ``ups``. Returns None on an
-        empty delta (a no-op, not an empty rewrite)."""
+        hard-link into the new version untouched — then one commit
+        (``op``) whose info records ``buckets_touched``.
+        :meth:`upsert` is the special case ``touched_keys == ups'
+        keys``; :meth:`apply_changes` additionally lists delete-marked
+        keys that have no replacement row in ``ups``. An empty delta
+        is a no-op (no commit), not an empty rewrite.
+
+        The touched set comes from one evaluation of the batch and the
+        written rows from another. A batch that changes between them
+        (a key derived from a nondeterministic expression) could put a
+        row into a bucket outside the touched set, whose old files
+        would then be linked beside it (duplicate keys) or whose kept
+        rows were never read (lost rows). So the buckets the write
+        produced are checked against the touched set before anything
+        is linked, and a stray bucket raises with the pointer unmoved."""
         # force-recompute bucket values (r16 lake review): a caller
         # frame still carrying the physical bucket column (e.g.
         # derived from _read_raw) would short-circuit _with_bucket and
@@ -1455,17 +1581,31 @@ class LakeTable:
         # the delta's distinct buckets — bounded by `buckets`, tiny
         touched = [r[0] for r in touched_keys.select(_BUCKET_COL).distinct().collect()]
         if not touched:
-            return None
-        current = self._read_raw()
-        kept = current.filter(F.col(_BUCKET_COL).isin(touched)).join(
+            return
+        cur = self.current_dir()
+        kept = self._read_raw(cur).filter(F.col(_BUCKET_COL).isin(touched)).join(
             touched_keys.select(key), on=key, how="left_anti"
         )
         merged = kept.unionByName(
             self._with_bucket(ups), allowMissingColumns=self.merge_schema
         )
-        ver = self._write_version(merged)
+        # an emptied merge's placeholder file goes into a touched
+        # bucket: every bucket dir the write produced must be touched
+        ver = self._write_version(merged, empty_bucket=min(touched))
         dst = os.path.join(self.path, ver)
-        cur = self.current_dir()
+        touched_set = set(touched)
+        written = {
+            int(n.split("=", 1)[1]) for n in os.listdir(dst) if n.startswith(_BUCKET_COL + "=")
+        }
+        stray = sorted(written - touched_set)
+        if stray:
+            shutil.rmtree(dst, ignore_errors=True)
+            raise RuntimeError(
+                f"bucketed {op} into {self.path!r} wrote rows into buckets {stray} "
+                f"outside the touched set {sorted(touched)}: the batch changed "
+                f"between evaluations (is its key nondeterministic?); live table "
+                f"unchanged (pointer not moved)"
+            )
         # link untouched bucket dirs from wherever the live tree is —
         # INCLUDING a legacy pointerless layout, where current_dir()
         # is the table root (r16 lake review: the old `cur != path`
@@ -1477,10 +1617,10 @@ class LakeTable:
             n
             for n in os.listdir(cur)
             if n.startswith(_BUCKET_COL + "=")
-            and int(n.split("=", 1)[1]) not in set(touched)
+            and int(n.split("=", 1)[1]) not in touched_set
         ]
         self._link_tree(cur, dst, names=untouched)
-        return ver
+        self._commit_version(ver, op=op, extra={"buckets_touched": len(touched)})
 
     def diff(self, from_version: str, to_version: str | None = None) -> DataFrame:
         """Change feed between two retained snapshots (requires an
@@ -1558,9 +1698,7 @@ class LakeTable:
                 # same O(delta) bucket-pruned merge as upsert — a CDC
                 # batch against a 100 TB bucketed table rewrites only
                 # the buckets its keys hash into, never the table
-                ver = self._merge_bucketed(ups, touched_keys, key)
-                if ver is not None:
-                    self._commit_version(ver, op="apply_changes")
+                self._merge_bucketed(ups, touched_keys, key, op="apply_changes")
                 return
             current = self._read_raw()
             kept = current.join(touched_keys, on=key, how="left_anti")
@@ -1648,11 +1786,9 @@ class LakeTable:
                     untouched.append(rel)
             if not cands:
                 return 0
-            reader = self.spark.read.option("basePath", cur)
-            if self.merge_schema:
-                reader = reader.option("mergeSchema", "true")
+            reader = self._reader(cur).option("basePath", cur)
             cdf = self._apply_schema_map(
-                reader.parquet(*[os.path.join(cur, rel) for rel in cands])
+                reader.parquet(*[os.path.join(cur, rel) for rel in cands]), cur
             )
             before = cdf.count()
             cond = compile_filter(filter_tokens)
@@ -1663,7 +1799,7 @@ class LakeTable:
                 remaining = remaining.drop(_BUCKET_COL)
             ver = self._write_version(remaining)
             dst = os.path.join(self.path, ver)
-            after = self.spark.read.parquet(dst).count()
+            after = self._read_raw_physical(dst).count()
             for rel in untouched:
                 sp = os.path.join(cur, rel)
                 dp = os.path.join(dst, rel)
@@ -1699,7 +1835,7 @@ class LakeTable:
             before = current.count()
             remaining = current.filter(~F.coalesce(condition, F.lit(False)))
             ver = self._write_version(remaining)
-            after = self.spark.read.parquet(os.path.join(self.path, ver)).count()
+            after = self._read_raw_physical(os.path.join(self.path, ver)).count()
             self._commit_version(ver, op="delete")
             return before - after
 
@@ -1830,7 +1966,7 @@ def compact(
             t.partition_by = [*t.partition_by, _BUCKET_COL]
         files_before = _glob.glob(os.path.join(cur, "**", "*.parquet"), recursive=True)
         total_bytes = sum(os.path.getsize(f) for f in files_before)
-        df = spark.read.parquet(cur)
+        df = t._read_raw_physical(cur)
         ver = t._write_version(_compact_plan(df, target_file_mb, total_bytes))
         t._commit_version(ver, op="compact")
     files_after = _glob.glob(
@@ -1890,4 +2026,4 @@ class LakeProvider:
             )
         ]
         # prune only — the Select plan applies the compiled filter
-        return t._read_pruned(kept, F.lit(True)).df
+        return t._read_pruned(kept, F.lit(True), cur).df

@@ -135,7 +135,15 @@ def stream_upsert_lake(
     Per batch this runs the lake's MERGE-shaped plan (anti-join on the
     key + union + staged rewrite, sources/lake.py) — the same plan a
     Delta/Iceberg MERGE would execute; layer a table format for true
-    multi-writer ACID. availableNow trigger: drain what exists, stop."""
+    multi-writer ACID. availableNow trigger: drain what exists, stop.
+
+    A micro-batch pays for its merge and nothing else: on a bucketed
+    table the Spark jobs are the touched-bucket ``collect`` and the
+    write, because the lake reads its live tree with the recorded
+    schema and gates the commit on pyarrow footers. The batch is read
+    again by each of those jobs rather than materialized, so it must
+    be deterministic; a bucketed merge refuses a batch whose rows land
+    outside the buckets it computed first."""
     if lake_table.index is None:
         raise ValueError("stream_upsert_lake requires a LakeTable with an index")
     return foreach_batch_save(

@@ -1674,3 +1674,240 @@ def test_compact_shrinks_file_count(spark, tmp_path):
     got = t.read().df.groupBy("lang").count()
     want = docs.groupBy("lang").count()
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+# ---------------------------------------------------------------------------
+# commits gate on footers, reads use the recorded schema, no extra jobs
+# ---------------------------------------------------------------------------
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` starts, counted through a job group."""
+    import uuid as _uuid
+
+    sc = spark.sparkContext
+    group = f"lake-{_uuid.uuid4().hex}"
+    sc.setJobGroup(group, "lake job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _bucket_of(spark, keys, n):
+    return {
+        r[0]
+        for r in spark.createDataFrame([(k,) for k in keys], "id long")
+        .select(F.pmod(F.xxhash64(F.col("id").cast("string")), F.lit(n)).cast("int"))
+        .collect()
+    }
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("staged", ["corrupt_last_file", "no_data_file"])
+def test_commit_gate_refuses_unreadable_multi_bucket_tree(spark, tmp_path, staged):
+    """The commit opens the footer of EVERY new file (the Spark probe
+    it replaced read one) and refuses a tree without data files: a
+    staged 4-bucket tree whose last data file is corrupt, or one that
+    holds only a write marker, is refused before the pointer moves,
+    and reads keep returning the old rows."""
+    import os
+
+    t = LakeTable(spark, str(tmp_path / "t"), index="id", buckets=4)
+    t.save(spark.range(40).withColumn("v", F.col("id") * 2), SaveStrategy.REPLACE)
+    live, before = t.current_dir(), _rows(t.read().df)
+    if staged == "corrupt_last_file":
+        ver = t._write_version(spark.range(100, 140).withColumn("v", F.col("id")))
+        vdir = os.path.join(t.path, ver)
+        rels = t._data_files(vdir)
+        assert len({r.split(os.sep)[0] for r in rels}) == 4
+        with open(os.path.join(vdir, rels[-1]), "r+b") as f:
+            f.seek(-8, os.SEEK_END)
+            f.write(b"\0" * 8)  # clobber the footer length + magic
+    else:
+        ver = "v_999999_deadbeef"
+        os.makedirs(os.path.join(t.path, ver, "fx_bucket=0"))
+        open(os.path.join(t.path, ver, "fx_bucket=0", "_SUCCESS"), "w").close()
+    with pytest.raises(RuntimeError, match="unreadable.*pointer not moved"):
+        t._commit_version(ver)
+    assert t.current_dir() == live
+    assert _rows(t.read().df) == before
+
+
+def _schema_case(spark, tmp_path, case):
+    """A LakeTable for one read-schema parity case, after its writes."""
+    import datetime as dt
+    import decimal
+
+    p = str(tmp_path / case)
+    if case == "bucketed":
+        t = LakeTable(spark, p, index="id", buckets=4)
+        t.save(spark.range(30).withColumn("v", F.col("id") * 3), SaveStrategy.REPLACE)
+        t.upsert(spark.createDataFrame([(3, -1), (99, 7)], "id long, v long"))
+    elif case == "digit_string_partitions":
+        t = LakeTable(spark, p, index="id", partition_by=["grp"])
+        rows = [(1, "01", 1.5), (2, "2", 2.5), (3, "10", None)]
+        t.save(spark.createDataFrame(rows, "id long, grp string, x double"), SaveStrategy.REPLACE)
+    elif case == "renamed_column":
+        t = LakeTable(spark, p, index="id", buckets=4)
+        t.save(spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string"), "replace")
+        t.rename_column("name", "label")
+        t.upsert(spark.createDataFrame([(3, "c")], "id long, label string"))
+    elif case == "temporal_decimal_binary":
+        t = LakeTable(spark, p, index="id", buckets=2)
+        rows = [
+            (
+                i,
+                dt.datetime(2024, 1, 1, 8, i, tzinfo=dt.timezone.utc),
+                dt.datetime(2024, 1, 1, 8, i),
+                decimal.Decimal(f"{i}.125"),
+                bytes([i, 255 - i]),
+                dt.date(2024, 1, 1 + i),
+            )
+            for i in range(4)
+        ]
+        schema = "id long, ts timestamp, ntz timestamp_ntz, amt decimal(12,3), raw binary, day date"
+        t.save(spark.createDataFrame(rows + [(9, None, None, None, None, None)], schema), "replace")
+    elif case == "empty_bucketed":
+        t = LakeTable(spark, p, index="id", buckets=4)
+        t.save(spark.createDataFrame([], "id long, name string"), SaveStrategy.REPLACE)
+    elif case == "unrecorded_tree":
+        # a tree written before schemas were recorded: drop the record
+        t = LakeTable(spark, p, index="id", buckets=4)
+        t.save(spark.range(12).withColumn("v", F.col("id") + 1), SaveStrategy.REPLACE)
+        doc = t._schema_doc(t.current_dir())
+        doc.pop("data")
+        t._write_schema_doc(t.current_dir(), doc)
+    else:  # merge_schema
+        t = LakeTable(spark, p, index="id", buckets=2, merge_schema=True)
+        t.save(spark.createDataFrame([(1, "a")], "id long, name string"), "replace")
+        t.upsert(spark.createDataFrame([(2, "b", 5)], "id long, name string, score int"))
+    return t
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "bucketed",
+        "digit_string_partitions",
+        "renamed_column",
+        "temporal_decimal_binary",
+        "empty_bucketed",
+        "unrecorded_tree",
+        "merge_schema",
+    ],
+)
+def test_recorded_schema_read_matches_inferred_read(spark, tmp_path, case):
+    """Reads hand Spark the schema the writer recorded instead of
+    inferring it from a footer. The frame must be exactly what
+    inference gives — same schema (partition values still come from
+    directory inference: digit-only strings stay ints), same rows.
+    Unrecorded trees and merge_schema tables still infer."""
+    t = _schema_case(spark, tmp_path, case)
+    cur = t.current_dir()
+    recorded = t._schema_doc(cur).get("data")
+    assert (recorded is not None) == (case not in ("unrecorded_tree", "merge_schema"))
+    r = spark.read.option("mergeSchema", "true") if t.merge_schema else spark.read
+    inferred = t._apply_schema_map(r.parquet(cur), cur).drop("fx_bucket")
+    got = t.read().df
+    assert got.schema == inferred.schema
+    assert _rows(got) == _rows(inferred)
+    assert t.scan([("id", ">=", 0)]).df.schema == inferred.schema
+
+
+def test_save_upsert_scan_apply_changes_run_only_their_own_jobs(spark, tmp_path):
+    """Job counts of the lake's hot paths (parent code: 2 / 6 / 2 / 6).
+    No commit starts a readability probe and no read of a version tree
+    starts a schema-inference job: a REPLACE of a 16-bucket table is
+    its write job, a 10-key bucketed upsert of a parquet batch is the
+    touched-bucket collect plus the write, a manifest-pruned point
+    lookup is its collect."""
+    from fabrix_spark.plans.adt import Cond
+
+    src = str(tmp_path / "src")
+    spark.range(2000).select(
+        "id", (F.col("id") * 3).alias("v"), F.concat(F.lit("n"), F.col("id").cast("string")).alias("name")
+    ).write.parquet(src)
+    t = LakeTable(spark, str(tmp_path / "t"), index="id", buckets=16)
+    base = spark.read.parquet(src)
+    assert _spark_jobs(spark, lambda: t.save(base, SaveStrategy.REPLACE)) == 1
+
+    batch_dir = str(tmp_path / "batch")
+    spark.range(10).select(
+        (F.col("id") * 7 + 5).alias("id"), F.lit(-1).cast("long").alias("v"), F.lit("u").alias("name")
+    ).write.parquet(batch_dir)
+    batch = spark.read.parquet(batch_dir)
+    assert _spark_jobs(spark, lambda: t.upsert(batch)) == 4
+
+    rows = []
+    assert _spark_jobs(spark, lambda: rows.extend(t.scan_adt([Cond("id", "eq", 12)]).df.collect())) == 1
+    assert [tuple(r) for r in rows] == [(12, -1, "u")]
+
+    chg_dir = str(tmp_path / "chg")
+    spark.range(10).select(
+        (F.col("id") * 11 + 1).alias("id"),
+        F.lit(-2).cast("long").alias("v"),
+        F.lit("c").alias("name"),
+        F.when(F.col("id") % 2 == 0, "delete").otherwise("update").alias("change"),
+    ).write.parquet(chg_dir)
+    changes = spark.read.parquet(chg_dir)
+    assert _spark_jobs(spark, lambda: t.apply_changes(changes)) == 4
+    got = dict((r["id"], r["v"]) for r in t.read().df.collect())
+    assert len(got) == 2000 - 5 and 1 not in got and got[12] == -2 and got[19] == -1
+
+
+def test_bucketed_upsert_history_records_files_and_buckets(spark, tmp_path):
+    """history() reports what a bucketed upsert wrote and linked, taken
+    from the manifest pass: new files and their bytes, files carried
+    from untouched buckets, and the buckets the keys hashed into."""
+    import os
+
+    t = LakeTable(spark, str(tmp_path / "t"), index="id", buckets=16, retain=1)
+    t.save(spark.range(500).withColumn("v", F.col("id")), SaveStrategy.REPLACE)
+    keys = [k * 37 for k in range(10)]
+    t.upsert(spark.createDataFrame([(k, -k) for k in keys], "id long, v long"))
+    touched = _bucket_of(spark, keys, 16)
+    cur = t.current_dir()
+    new = [r for r in t._data_files(cur) if int(r.split(os.sep)[0].split("=")[1]) in touched]
+    h = t.history()[-1]
+    assert h["op"] == "upsert" and h["buckets_touched"] == len(touched)
+    assert h["files_added"] == len(new)
+    assert h["files_linked"] == h["files"] - len(new) > 0
+    assert h["bytes_added"] == sum(os.path.getsize(os.path.join(cur, r)) for r in new)
+    first = t.history()[0]
+    assert first["files_added"] == first["files"] and first["files_linked"] == 0
+
+
+def test_bucketed_merge_refuses_batch_that_changes_between_evaluations(spark, tmp_path):
+    """The touched buckets come from one evaluation of the batch and
+    the written rows from another. A nondeterministic batch whose key
+    lands in a different bucket the second time must fail the merge
+    before anything is linked or committed: the live table stays as
+    it was (no duplicate keys, no lost rows)."""
+    t = LakeTable(spark, str(tmp_path / "t"), index="id", buckets=16)
+    t.save(spark.range(100).withColumn("v", F.col("id")), SaveStrategy.REPLACE)
+    live, before = t.current_dir(), _rows(t.read().df)
+    first = 5
+    other = next(k for k in range(1000, 2000) if _bucket_of(spark, [k], 16) != _bucket_of(spark, [first], 16))
+    marker = str(tmp_path / "evaluated")
+
+    def flip(_):
+        import os
+
+        if os.path.exists(marker):
+            return other
+        open(marker, "w").close()
+        return first
+
+    key = F.udf(flip, "long").asNondeterministic()
+    batch = spark.range(1).select(key(F.col("id")).alias("id"), F.lit(-1).cast("long").alias("v"))
+    with pytest.raises(RuntimeError, match="outside the touched set"):
+        t.upsert(batch)
+    assert t.current_dir() == live
+    assert _rows(t.read().df) == before
+    assert len(t.versions()) == 1

@@ -2455,3 +2455,28 @@ def test_wire_u64_decimal_carrier_and_tz_datetime(spark):
     }
     with _pytest.raises(ValueError, match="ragged column payload"):
         from_wire(spark, ragged)
+
+
+def test_stream_session_replay_tolerates_empty_quartile_buckets(spark, tmp_path):
+    """stream_session_replay splits events into four time-quartile
+    micro-batches. When timestamps cluster (here two bursts ten hours
+    apart, so the middle quartiles hold no event; lo == hi empties
+    three of them the same way) a quartile's bucket directory is
+    never written. The replay must skip those micro-batches, not fail
+    on the missing directory, and still emit exactly the gap sessions
+    of the full event set."""
+    from fabrix_spark.queries import REGISTRY
+
+    t0 = dt.datetime(2024, 1, 1, 8)
+    t1 = t0 + dt.timedelta(hours=10)
+    five = dt.timedelta(minutes=5)
+    events = [(1, t0), (1, t0 + 2 * five), (1, t1), (2, t1 + five)]
+    sf = tmp_path / "sf"
+    spark.createDataFrame(events, "user_id long, ts timestamp_ntz").coalesce(1).write.parquet(
+        str(sf / "events.parquet")
+    )
+    got = {
+        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
+        for r in REGISTRY["stream_session_replay"].fn(spark, str(sf)).collect()
+    }
+    assert got == {(1, t0, t0 + 2 * five, 2), (1, t1, t1, 1), (2, t1 + five, t1 + five, 1)}
