@@ -26,6 +26,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .similarity import (
+    _finite_vectors,
+    _np_quant,
+    _np_round6,
+    ivf_assign_blocked,
+    kmeans_train_rows,
+)
 from .text import tokens
 from .util import spread
 
@@ -1333,9 +1340,9 @@ def embedding_dedup_pairs(
     ``method='exact'``: the brute-force O(n²) kernel — the recall
     oracle for tests and small corpora only.
 
-    NULL/NaN-component vectors are excluded (see ``_valid_vectors``).
+    NULL/NaN-component vectors are excluded (see ``_finite_vectors``).
     """
-    df = _valid_vectors(df, vec_col)
+    df = _finite_vectors(df, vec_col)
     q = F.transform(F.col(vec_col), lambda x: F.round(x.cast("double") * quantize).cast("long"))
     vecs = spread(df).select(F.col(id_col).alias("__id"), q.alias("__q"))
     # zero-norm vectors excluded: cosine is undefined for them and the
@@ -1524,28 +1531,46 @@ def remove_common_segments(
 # ---------------------------------------------------------------------------
 
 
-def _valid_vectors(df: DataFrame, vec_col: str) -> DataFrame:
-    """Exclude NULL vectors and vectors with NULL/NaN components (r17
-    self-review, the similarity family's r16 contract applied to the
-    dedup-side embedding entries): a NULL embedding crashed the dim
-    derivation / np.stack, and one NaN component killed the whole pass
-    at the ANSI long cast inside the quantizer. A vector that cannot be
-    scored carries no duplication evidence — same rationale as the
-    shingle families' NULL-text exclusion."""
-    v = F.col(vec_col)
-    return df.filter(
-        v.isNotNull() & ~F.exists(v, lambda x: x.isNull() | F.isnan(x.cast("double")))
+def _semdedup_assigned(
+    corpus: DataFrame,
+    k: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    quantize: int,
+    centroids: DataFrame | None,
+) -> DataFrame:
+    """(id, centroid_id, double vector) for SemDeDup's per-cluster
+    stage: each vector assigned to its nearest centroid by the
+    map-only numpy stage (:func:`similarity.ivf_assign_blocked`). The
+    centroid table is trained on the driver
+    (:func:`similarity.kmeans_train_rows`), or an explicit
+    ``centroids`` frame of k rows is collected."""
+    if centroids is None:
+        cents = kmeans_train_rows(
+            corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col, quantize=quantize
+        )
+    else:
+        cents = [(int(r[0]), r[1]) for r in centroids.select(id_col, vec_col).collect()]
+    return ivf_assign_blocked(
+        corpus, cents, id_col=id_col, vec_col=vec_col, quantize=quantize, keep_vec=True
     )
 
 
-def _integral_id(df: DataFrame, col: str) -> bool:
-    """The numpy fast paths coerce the id column to int64; anything
-    else routes through the expression path."""
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+def _cluster_cosines(pdf, id_col: str, vec_col: str, quantize: int):
+    """One cluster's pairwise scores: (ids ascending, exact int64 dot
+    matrix, int64 norms, raw double cosines, and the upper-triangle
+    index pairs (i < j, so ids[i] < ids[j]))."""
+    import numpy as np
 
-    return isinstance(
-        df.schema[col].dataType, (ByteType, ShortType, IntegerType, LongType)
-    )
+    ids = pdf[id_col].to_numpy(dtype=np.int64)
+    order = np.argsort(ids)
+    Q = _np_quant(np.stack(pdf[vec_col].to_numpy()[order]), quantize)
+    n2 = (Q * Q).sum(axis=1)
+    dots = Q @ Q.T
+    raw = dots / np.sqrt(n2[:, None].astype(np.float64) * n2[None, :].astype(np.float64))
+    ii, jj = np.triu_indices(len(ids), k=1)
+    return ids[order], dots, n2, raw, ii, jj
 
 
 def semantic_dup_pairs(
@@ -1557,8 +1582,6 @@ def semantic_dup_pairs(
     vec_col: str = "embedding",
     quantize: int = 1_000_000,
     centroids: DataFrame | None = None,
-    _assign: DataFrame | None = None,
-    _cents: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic duplicate pairs (Abbas et al. 2023,
     arXiv:2303.09540, public literature): k-means-cluster the embedding
@@ -1568,138 +1591,56 @@ def semantic_dup_pairs(
     Scale design: the quadratic comparison is scoped to a cluster, and
     ``k`` is chosen so clusters stay bounded (the paper uses k ~ sqrt(N);
     at 100 TB you raise ``k`` with corpus size so cluster cardinality —
-    and hence the per-cluster self-join — stays constant). Clustering is
-    the deterministic integer-domain Lloyd trainer shared with IVF
-    (:func:`fabrix_spark.operators.similarity.kmeans_train`), centroids
-    are broadcast for assignment, and the self-join shuffles once on
-    ``centroid_id``. Cosines are computed in the quantized int64 domain
-    and rounded to 6 dp, so the pair set is bit-reproducible and a
-    DuckDB oracle re-derives it exactly.
+    and hence the per-cluster comparison — stays constant). Clustering
+    is the deterministic integer-domain Lloyd trainer shared with IVF
+    (:func:`fabrix_spark.operators.similarity.kmeans_train_rows`), the
+    assignment is map-only (see :func:`_semdedup_assigned`), and the
+    data shuffles once on ``centroid_id`` into a per-cluster stage that
+    scores all pairs as ONE numpy int64 matmul — the
+    cosine_topk_blocked architecture. Exact integer dots/norms leave
+    Python; the 6-dp rounding and the threshold cut happen in Spark
+    (F.round), so the pair set is bit-reproducible and a DuckDB oracle
+    re-derives it exactly (the Python side only pre-filters with an
+    epsilon margin no surviving pair can cross).
 
-    Returns (centroid_id, a_id, b_id, cosine) with a_id < b_id.
-    NULL/NaN-component vectors are excluded (see ``_valid_vectors``).
+    Returns (centroid_id, a_id, b_id, cosine) with a_id < b_id. The id
+    column must be integral. NULL vectors, NULL/NaN components and
+    zero-norm vectors are excluded (they have no cosine).
     """
-    corpus = _valid_vectors(corpus, vec_col)
-    from .similarity import (
-        _cosine,
-        _dot,
-        _np_quant,
-        _quantized,
-        ivf_assign,
-        ivf_assign_blocked,
-        kmeans_train_rows,
-    )
+    import numpy as np
+    import pandas as pd
 
-    if centroids is None and _assign is None and _integral_id(corpus, id_col):
-        # fast path: driver-held centroid training (one Spark job per
-        # Lloyd iteration), Arrow-batched map-only assignment, and the
-        # within-cluster pairwise scoring as ONE numpy int64 matmul per
-        # cluster — the cosine_topk_blocked architecture. Exact integer
-        # dots/norms leave Python; the 6-dp rounding and the threshold
-        # cut happen in Spark (F.round), so the emitted pair set is
-        # bit-identical to the expression path and its SQL oracle (the
-        # Python side only pre-filters with an epsilon margin no
-        # surviving pair can cross).
-        import numpy as np
-        import pandas as pd
+    assigned = _semdedup_assigned(corpus, k, iters, id_col, vec_col, quantize, centroids)
+    margin = float(threshold) - 1e-6
 
-        cents = _cents if _cents is not None else kmeans_train_rows(
-            corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col, quantize=quantize
+    def cluster_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids, dots, n2, raw, ii, jj = _cluster_cosines(pdf, id_col, vec_col, quantize)
+        keep = raw[ii, jj] >= margin
+        ii, jj = ii[keep], jj[keep]
+        return pd.DataFrame(
+            {
+                "centroid_id": np.full(len(ii), pdf["centroid_id"].iloc[0], dtype=np.int64),
+                "a_id": ids[ii],
+                "b_id": ids[jj],
+                "dot": dots[ii, jj],
+                "an2": n2[ii],
+                "bn2": n2[jj],
+            }
         )
-        assigned = ivf_assign_blocked(
-            corpus, cents, id_col=id_col, vec_col=vec_col, quantize=quantize,
-            keep_vec=True,
-        )
-        margin = float(threshold) - 1e-6
 
-        def cluster_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            order = np.argsort(ids)
-            ids = ids[order]
-            Q = _np_quant(np.stack(pdf[vec_col].to_numpy()[order]), quantize)
-            n2 = (Q * Q).sum(axis=1)
-            dots = Q @ Q.T
-            raw = dots / np.sqrt(
-                n2[:, None].astype(np.float64) * n2[None, :].astype(np.float64)
-            )
-            ii, jj = np.triu_indices(len(ids), k=1)
-            keep = raw[ii, jj] >= margin
-            ii, jj = ii[keep], jj[keep]
-            return pd.DataFrame(
-                {
-                    "centroid_id": np.full(len(ii), pdf["centroid_id"].iloc[0], dtype=np.int64),
-                    "a_id": ids[ii],
-                    "b_id": ids[jj],
-                    "dot": dots[ii, jj],
-                    "an2": n2[ii],
-                    "bn2": n2[jj],
-                }
-            )
-
-        cand = assigned.groupBy("centroid_id").applyInPandas(
-            cluster_pairs,
-            "centroid_id long, a_id long, b_id long, dot long, an2 long, bn2 long",
-        )
-        return cand.select(
-            "centroid_id",
-            "a_id",
-            "b_id",
-            F.round(
-                F.col("dot")
-                / F.sqrt(F.col("an2").cast("double") * F.col("bn2").cast("double")),
-                6,
-            ).alias("cosine"),
-        ).filter(F.col("cosine") >= F.lit(threshold))
-
-    vecs = (
-        spread(corpus)
-        .select(F.col(id_col), _quantized(F.col(vec_col), quantize).alias("__v"))
-        .withColumn("__n2", _dot(F.col("__v"), F.col("__v"), True))
+    cand = assigned.groupBy("centroid_id").applyInPandas(
+        cluster_pairs,
+        "centroid_id long, a_id long, b_id long, dot long, an2 long, bn2 long",
     )
-    if _assign is None and centroids is None:
-        if _cents is not None:
-            # precomputed driver-held centroids (same deterministic
-            # trainer) — materialize instead of retraining from scratch
-            centroids = corpus.sparkSession.createDataFrame(
-                [(int(cid), [float(x) for x in vec]) for cid, vec in _cents],
-                f"{id_col} long, {vec_col} array<double>",
-            )
-        else:
-            from .similarity import kmeans_train
-
-            centroids = kmeans_train(
-                corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-                quantize=quantize,
-            ).localCheckpoint()
-    assign = _assign if _assign is not None else ivf_assign(
-        corpus, centroids, id_col=id_col, vec_col=vec_col, quantize=quantize, n_probe=1
-    )
-    sides = assign.join(vecs, id_col)
-    a = sides.select(
-        F.col(id_col).alias("a_id"),
+    return cand.select(
         "centroid_id",
-        F.col("__v").alias("__av"),
-        F.col("__n2").alias("__an2"),
-    )
-    b = sides.select(
-        F.col(id_col).alias("b_id"),
-        "centroid_id",
-        F.col("__v").alias("__bv"),
-        F.col("__n2").alias("__bn2"),
-    )
-    return (
-        a.join(b, "centroid_id")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select(
-            "centroid_id",
-            "a_id",
-            "b_id",
-            _cosine(
-                F.col("__av"), F.col("__bv"), F.col("__an2"), F.col("__bn2"), True
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= F.lit(threshold))
-    )
+        "a_id",
+        "b_id",
+        F.round(
+            F.col("dot") / F.sqrt(F.col("an2").cast("double") * F.col("bn2").cast("double")),
+            6,
+        ).alias("cosine"),
+    ).filter(F.col("cosine") >= F.lit(threshold))
 
 
 def semantic_prune(
@@ -1719,104 +1660,45 @@ def semantic_prune(
     keep cluster exemplars and drop high-similarity followers).
 
     Returns the kept rows as (``id_col``, centroid_id). The pruned set
-    is the input ids minus these. The cluster assignment is a map-only
-    literal-centroid expression (no join, no checkpoint) recomputed on
-    each side — recomputing a narrow projection is cheaper than
-    materializing it between jobs.
-    NULL/NaN-component vectors are excluded (see ``_valid_vectors``).
+    is the input ids minus these. The dominance rule is entirely
+    CLUSTER-LOCAL, so the kept set comes out of ONE per-cluster Arrow
+    stage behind the single shuffle on centroid_id (clustering and
+    assignment as in :func:`semantic_dup_pairs`). The threshold
+    decision uses a two-band comparison: raw cosines further than 1e-6
+    from the threshold decide directly (6-dp rounding moves a value by
+    < 5e-7 + repr error), and only the rare in-band values go through
+    the exact F.round(x, 6) decimal twin (``_np_round6``) — the same
+    decision as the SQL oracle's ``round(cos, 6) >= threshold``.
+    The id column must be integral. NULL vectors, NULL/NaN components
+    and zero-norm vectors are excluded (they have no cosine).
     """
-    corpus = _valid_vectors(corpus, vec_col)
-    from .similarity import ivf_assign, ivf_assign_blocked, ivf_assign_expr, kmeans_train_rows
+    import numpy as np
+    import pandas as pd
 
-    if centroids is None:
-        cents = kmeans_train_rows(
-            corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col, quantize=quantize
+    assigned = _semdedup_assigned(corpus, k, iters, id_col, vec_col, quantize, centroids)
+    thr = float(threshold)
+
+    def cluster_kept(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids, _, _, raw, ii, jj = _cluster_cosines(pdf, id_col, vec_col, quantize)
+        vals = raw[ii, jj]
+        dup = vals >= thr + 1e-6
+        band = np.abs(vals - thr) < 1e-6
+        if band.any():
+            dup[band] = _np_round6(vals[band]) >= thr
+        pruned = np.zeros(len(ids), dtype=bool)
+        pruned[jj[dup]] = True
+        return pd.DataFrame(
+            {
+                id_col: ids[~pruned],
+                "centroid_id": np.full(
+                    int((~pruned).sum()), pdf["centroid_id"].iloc[0], dtype=np.int64
+                ),
+            }
         )
-        if _integral_id(corpus, id_col):
-            # FUSED fast path: the dominance rule ("drop b iff a
-            # lower-id cluster-mate has cosine >= threshold") is
-            # entirely CLUSTER-LOCAL, so the kept set is computable
-            # inside ONE per-cluster Arrow stage — pairs shuffle +
-            # distinct + anti-join collapse into the single shuffle on
-            # centroid_id. The threshold decision uses a two-band
-            # comparison: raw cosines further than 1e-6 from the
-            # threshold decide directly (6-dp rounding moves a value
-            # by < 5e-7 + repr error), and only the rare in-band
-            # values go through the exact F.round(x, 6) decimal twin
-            # (_np_round6) — bit-identical to the expression path's
-            # `F.round(cos, 6) >= threshold` and the SQL oracle.
-            import numpy as np
-            import pandas as pd
 
-            from .similarity import _np_quant, _np_round6
-
-            thr = float(threshold)
-
-            def cluster_kept(pdf: pd.DataFrame) -> pd.DataFrame:
-                ids = pdf[id_col].to_numpy(dtype=np.int64)
-                order = np.argsort(ids)
-                ids = ids[order]
-                Q = _np_quant(np.stack(pdf[vec_col].to_numpy()[order]), quantize)
-                n2 = (Q * Q).sum(axis=1)
-                raw = (Q @ Q.T) / np.sqrt(
-                    n2[:, None].astype(np.float64) * n2[None, :].astype(np.float64)
-                )
-                ii, jj = np.triu_indices(len(ids), k=1)
-                vals = raw[ii, jj]
-                dup = vals >= thr + 1e-6
-                band = np.abs(vals - thr) < 1e-6
-                if band.any():
-                    dup[band] = _np_round6(vals[band]) >= thr
-                pruned = np.zeros(len(ids), dtype=bool)
-                pruned[jj[dup]] = True
-                return pd.DataFrame(
-                    {
-                        id_col: ids[~pruned],
-                        "centroid_id": np.full(
-                            int((~pruned).sum()),
-                            pdf["centroid_id"].iloc[0],
-                            dtype=np.int64,
-                        ),
-                    }
-                )
-
-            assigned = ivf_assign_blocked(
-                corpus, cents, id_col=id_col, vec_col=vec_col, quantize=quantize,
-                keep_vec=True,
-            )
-            return assigned.groupBy("centroid_id").applyInPandas(
-                cluster_kept, f"{id_col} long, centroid_id long"
-            )
-        assign = ivf_assign_expr(
-            corpus, cents, id_col=id_col, vec_col=vec_col, quantize=quantize
-        )
-        pairs = semantic_dup_pairs(
-            corpus,
-            k=k,
-            iters=iters,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            quantize=quantize,
-            centroids=None,
-            _assign=None,
-            _cents=cents,
-        )
-    else:
-        assign = ivf_assign(
-            corpus, centroids, id_col=id_col, vec_col=vec_col, quantize=quantize, n_probe=1
-        ).localCheckpoint()
-        pairs = semantic_dup_pairs(
-            corpus,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            quantize=quantize,
-            centroids=centroids,
-            _assign=assign,
-        )
-    pruned = pairs.select(F.col("b_id").alias(id_col)).distinct()
-    return assign.join(pruned, id_col, "left_anti").select(id_col, "centroid_id")
+    return assigned.groupBy("centroid_id").applyInPandas(
+        cluster_kept, f"{id_col} long, centroid_id long"
+    )
 
 
 def overlap_pairs(
@@ -1904,14 +1786,14 @@ def decontaminate_semantic(
     self-joins and never shuffles on anything but its own id."""
     from .similarity import cosine_range_search
 
-    # probe only scoreable vectors (see _valid_vectors); the id SPINE
+    # probe only scoreable vectors (see _finite_vectors); the id SPINE
     # stays the unfiltered corpus, so NULL/NaN-vector rows still report
     # max_benchmark_cosine = -1 / contaminated = false instead of
     # crashing the pass — a vector that cannot be scored cannot be
     # declared contaminated
     hits = cosine_range_search(
-        _valid_vectors(corpus, vec_col),
-        _valid_vectors(benchmark, vec_col),
+        _finite_vectors(corpus, vec_col),
+        _finite_vectors(benchmark, vec_col),
         threshold=threshold,
         id_col=id_col,
         vec_col=vec_col,

@@ -39,12 +39,16 @@ def _is_scan_shaped(df: DataFrame) -> bool:
     projected/filtered) relation — the shape whose per-column
     re-execution is cost-free. Joins/aggregates/windows/generators make
     it DERIVED: re-executing that subtree once per profiled column
-    repeats real work N times (and a non-deterministic source would
-    profile N different snapshots), so the caller materializes first."""
+    repeats real work N times, so the caller materializes first. A
+    nondeterministic expression anywhere (``rand()`` over a scan) is
+    derived too: each re-execution would profile a different
+    snapshot."""
     import re as _re
 
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    for line in plan.splitlines():
+    optimized = df._jdf.queryExecution().optimizedPlan()
+    if not optimized.deterministic():
+        return False
+    for line in optimized.toString().splitlines():
         m = _re.match(r"^[\s:+-]*([A-Za-z][A-Za-z0-9]*)", line)
         if m and m.group(1) not in _SCAN_SHAPED_NODES:
             return False

@@ -28,7 +28,6 @@ __all__ = [
     "lsh_cosine_topk",
     "knn_graph",
     "ivf_assign",
-    "ivf_assign_expr",
     "ivf_assign_blocked",
     "kmeans_train",
     "kmeans_train_rows",
@@ -631,15 +630,23 @@ def ivf_assign(
 
 
 def _integral_id(df: DataFrame, col: str) -> bool:
-    """The driver-held trainers (:func:`kmeans_train_rows` /
-    :func:`pq_train_rows`) coerce seed ids with ``int(...)`` and emit a
-    ``long`` id schema; any non-integral id column routes through the
-    all-DataFrame path, which preserves the input id type."""
+    """Whether ``col`` has an integral type. The numpy stages carry
+    ids as int64 numpy arrays (seed and centroid ids, SemDeDup's
+    ``a_id < b_id`` order), where a string id would die deep in an
+    executor with an opaque cast error."""
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
     return isinstance(
         df.schema[col].dataType, (ByteType, ShortType, IntegerType, LongType)
     )
+
+
+def _require_integral_id(df: DataFrame, col: str) -> None:
+    """Refuse a non-integral id column up front (see :func:`_integral_id`)."""
+    if not _integral_id(df, col):
+        raise ValueError(
+            f"id column {col!r} must be integral, got {df.schema[col].dataType.simpleString()}"
+        )
 
 
 def _round_half_up(p: float) -> int:
@@ -668,8 +675,8 @@ def _np_quant(m, quantize: int):
     there the two rules provably agree (repr error < half-ULP ≈ 1e-10
     at this magnitude, binary ``+0.5`` error likewise) — and the rare
     near-tie elements go through :func:`_round_half_up` so repr-tie
-    values (the 0.49999999999999994 class) match the expression path
-    bit-for-bit regardless of which dispatch branch runs."""
+    values (the 0.49999999999999994 class) match ``_quantized`` and the
+    SQL oracles bit-for-bit."""
     import numpy as np
 
     s = m.astype(np.float64) * quantize
@@ -709,7 +716,10 @@ def _np_assign(Q, n2, C, cn2, cids):
     """Nearest-centroid ids for a quantized batch: exact int64 dot
     matmul, IEEE double cosine, 6-dp decimal rounding, argmax with the
     (cos desc, cid asc) tie-break — ``np.argmax`` returns the FIRST
-    max and ``cids`` is ascending, which IS max_by(cid, (cos, -cid))."""
+    max and ``cids`` is ascending, which IS max_by(cid, (cos, -cid)).
+    Every norm must be nonzero (callers drop zero-norm rows, and
+    :func:`_prep_centroids` zero-norm centroids): a 0/0 NaN would win
+    the argmax."""
     import numpy as np
 
     dots = Q @ C.T
@@ -721,90 +731,26 @@ def _np_assign(Q, n2, C, cn2, cids):
 def _prep_centroids(centroid_rows: list[tuple[int, list[float]]], quantize: int):
     """(ascending cids, quantized k×dim int64 matrix, k norms) — the
     driver-held form every numpy stage broadcasts. Quantization uses
-    :func:`_round_half_up` (bit-exact ``F.round`` parity)."""
+    :func:`_round_half_up` (bit-exact ``F.round`` parity). Centroids
+    :func:`ivf_assign` excludes are dropped here too: a NULL vector,
+    a NULL/NaN component, and a zero norm (no cosine to it). With none
+    left the table is empty and the stages assign nothing."""
+    import math
+
     import numpy as np
 
-    rows = sorted(centroid_rows)
-    cids = np.asarray([cid for cid, _ in rows], dtype=np.int64)
-    C = np.asarray(
-        [[_round_half_up(float(x) * quantize) for x in cvec] for _, cvec in rows],
-        dtype=np.int64,
-    )
-    return cids, C, (C * C).sum(axis=1)
-
-
-def _centroid_argmax(
-    v: Column, n2: Column, centroid_rows: list[tuple[int, list[float]]], quantize: int
-) -> Column:
-    """Nearest-centroid id as ONE column expression over an already-
-    quantized vector column: array_max over (cos, -cid, cid) structs —
-    lexicographic struct order reproduces the join path's
-    ``max_by(centroid_id, struct(cos, -centroid_id))`` tie-break.
-
-    Centroid components are quantized DRIVER-SIDE with
-    :func:`_round_half_up` (bit-exact ``F.round`` parity) and inlined
-    as long literals, and each centroid's norm is one precomputed
-    literal: Catalyst does NOT constant-fold higher-order functions, so
-    quantizing via a ``transform`` over a literal array would re-run
-    interpreted per row × per centroid — the pre-quantized form keeps
-    the per-row work to k integer dot products, the same arithmetic the
-    broadcast-join path does per joined pair."""
-    import math as _math
-
-    scored = []
-    for cid, cvec in centroid_rows:
-        if cvec is None or any(x is None or not _math.isfinite(float(x)) for x in cvec):
-            # a NaN component would die in _round_half_up; exclusion
-            # matches ivf_assign's _finite_vectors contract
+    kept = []
+    for cid, cvec in sorted(centroid_rows):
+        if cvec is None or not all(x is not None and math.isfinite(x) for x in cvec):
             continue
-        qc = [_round_half_up(float(x) * quantize) for x in cvec]
-        if not any(qc):
-            continue  # zero-norm centroid: no defined cosine to it
-        c = F.array(*[F.lit(q).cast("long") for q in qc])
-        cn2 = F.lit(sum(q * q for q in qc)).cast("long")
-        scored.append(
-            F.struct(
-                _cosine(v, c, n2, cn2, True).alias("cos"),
-                F.lit(-int(cid)).cast("long").alias("nc"),
-                F.lit(int(cid)).cast("long").alias("cid"),
-            )
-        )
-    if not scored:
-        raise ValueError("no scoreable centroids (all NULL/NaN/zero-norm)")
-    return F.array_max(F.array(*scored))["cid"]
-
-
-def ivf_assign_expr(
-    corpus: DataFrame,
-    centroid_rows: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    quantize: int = 1_000_000,
-) -> DataFrame:
-    """Nearest-centroid assignment with the centroid table inlined as a
-    LITERAL expression — a map-only plan: no broadcast join, no max_by
-    aggregate shuffle, no job at all until an action. Bit-identical to
-    ``ivf_assign(n_probe=1)``: the literal centroid arrays go through
-    the SAME ``_quantized`` expression (Catalyst constant-folds them
-    with its own round semantics, so no Python rounding can drift) and
-    the argmax is an ``array_max`` over (cos, -cid, cid) structs —
-    lexicographic struct order == the join path's
-    ``max_by(centroid_id, struct(cos, -centroid_id))`` tie-break.
-
-    This is the small-centroid-table path (the k×dim table a FAISS
-    coarse quantizer holds in RAM); for centroid tables too big to
-    inline (k×dim beyond ~10⁴ entries) use :func:`ivf_assign`, whose
-    broadcast join scales with the build side."""
-    out = (
-        spread(_finite_vectors(corpus, vec_col))
-        .select(F.col(id_col), _quantized(F.col(vec_col), quantize).alias("__v"))
-        .withColumn("__n2", _dot(F.col("__v"), F.col("__v"), True))
-        .filter(F.col("__n2") > 0)
-    )
-    return out.withColumn(
-        "centroid_id",
-        _centroid_argmax(F.col("__v"), F.col("__n2"), centroid_rows, quantize),
-    ).select(id_col, "centroid_id")
+        q = [_round_half_up(float(x) * quantize) for x in cvec]
+        if any(q):
+            kept.append((cid, q))
+    cids = np.asarray([cid for cid, _ in kept], dtype=np.int64)
+    if not kept:
+        return cids, cids.reshape(0, 0), cids
+    C = np.asarray([q for _, q in kept], dtype=np.int64)
+    return cids, C, (C * C).sum(axis=1)
 
 
 def kmeans_train_rows(
@@ -815,20 +761,28 @@ def kmeans_train_rows(
     vec_col: str = "embedding",
     quantize: int = 1_000_000,
 ) -> list[tuple[int, list[float]]]:
-    """:func:`kmeans_train` with the centroid table held on the DRIVER
-    (k×dim floats — exactly what FAISS keeps in RAM for its coarse
-    quantizer), cutting each Lloyd iteration to ONE Spark job: an
-    Arrow-batched numpy stage assigns each batch (exact int64 matmul +
-    6-dp decimal-rounded cosine — see :func:`_np_assign`) and emits
-    per-partition (centroid, dim) PARTIAL integer sums; one tiny
-    aggregate folds the partials, the same in-Spark rounded division as
-    the DataFrame trainer produces the means, and only the k×dim
-    result rows come back to the driver. Partial int64 sums are
-    associative, so centroids are independent of partitioning and
-    bit-identical to :func:`kmeans_train` / the SQL oracle."""
+    """Deterministic Lloyd iterations for IVF centroid training with
+    the centroid table held on the DRIVER (k×dim floats — exactly what
+    FAISS keeps in RAM for its coarse quantizer). Seed = the k
+    lowest-id vectors; each iteration is ONE Spark job: an
+    Arrow-batched numpy stage assigns each batch to its nearest
+    centroid by cosine (exact int64 matmul + 6-dp decimal-rounded
+    cosine — see :func:`_np_assign`) and emits per-partition
+    (centroid, dim) PARTIAL integer sums; one tiny aggregate folds the
+    partials, one rounded division per component produces the means,
+    and only the k×dim result rows come back to the driver. Partial
+    int64 sums are associative, so centroids are independent of
+    partitioning and reproducible bit-for-bit — a DuckDB oracle
+    re-derives identical centroids. Empty clusters drop (standard
+    Lloyd behavior), and so does a zero-norm seed, which has no cosine
+    to anything; zero-norm vectors join no cluster.
+
+    Returns [(centroid id, components in the input's float domain)]
+    sorted by id. The id column must be integral."""
     import numpy as np
     import pandas as pd
 
+    _require_integral_id(corpus, id_col)
     # NULL ids sort FIRST under asc() and would crash int(r[0]) on the
     # driver; NULL embeddings would crash np.stack inside the executor;
     # a NaN component would silently train a garbage centroid via
@@ -852,10 +806,11 @@ def kmeans_train_rows(
         def partials(batches, _bc=bc):
             b_cids, b_C, b_cn2 = _bc.value
             for pdf in batches:
-                if pdf.empty:
+                if pdf.empty or not len(b_cids):
                     continue
                 Q = _np_quant(np.stack(pdf["__dv"].to_numpy()), quantize)
                 n2 = (Q * Q).sum(axis=1)
+                Q, n2 = Q[n2 > 0], n2[n2 > 0]
                 a = _np_assign(Q, n2, b_C, b_cn2, b_cids)
                 for cid in np.unique(a):
                     members = Q[a == cid]
@@ -884,8 +839,8 @@ def kmeans_train_rows(
             by_cid.setdefault(int(r["centroid_id"]), []).append(
                 (int(r["dim"]), int(r["__cc"]))
             )
-        # __cc / quantize is the same IEEE double division the
-        # DataFrame trainer folds in Spark — values identical
+        # __cc / quantize: the same IEEE double division the SQL oracle
+        # folds — values identical
         cents = [
             (cid, [cc / quantize for _, cc in sorted(comps)])
             for cid, comps in sorted(by_cid.items())
@@ -901,16 +856,17 @@ def ivf_assign_blocked(
     quantize: int = 1_000_000,
     keep_vec: bool = False,
 ) -> DataFrame:
-    """Arrow-batched numpy twin of ``ivf_assign(n_probe=1)`` for a
-    driver-held centroid table: map-only (no join, no aggregate), one
-    int64 matmul per batch, bit-identical assignment (see
-    :func:`_np_assign` for the rounding/tie-break parity argument).
-    ``keep_vec=True`` carries the double vector through for a
-    downstream per-cluster stage. Requires an integral id column
-    (callers fall back to :func:`ivf_assign` otherwise)."""
+    """``ivf_assign(n_probe=1)`` for a driver-held centroid table as
+    an Arrow-batched numpy stage: map-only (no join, no aggregate), one
+    int64 matmul per batch, the same assignment (see :func:`_np_assign`
+    for the rounding/tie-break argument) and the same exclusions (NULL
+    vectors, NULL/NaN components, zero norms). ``keep_vec=True``
+    carries the double vector through for a downstream per-cluster
+    stage. The id column must be integral."""
     import numpy as np
     import pandas as pd
 
+    _require_integral_id(corpus, id_col)
     bc = corpus.sparkSession.sparkContext.broadcast(
         _prep_centroids(centroid_rows, quantize)
     )
@@ -921,19 +877,22 @@ def ivf_assign_blocked(
     def block(batches):
         b_cids, b_C, b_cn2 = bc.value
         for pdf in batches:
-            if pdf.empty:
+            if pdf.empty or not len(b_cids):
                 continue
             Q = _np_quant(np.stack(pdf["__dv"].to_numpy()), quantize)
             n2 = (Q * Q).sum(axis=1)
-            a = _np_assign(Q, n2, b_C, b_cn2, b_cids)
-            out = {id_col: pdf["__id"].to_numpy(dtype=np.int64), "centroid_id": a}
+            nz = n2 > 0
+            out = {
+                id_col: pdf["__id"].to_numpy(dtype=np.int64)[nz],
+                "centroid_id": _np_assign(Q[nz], n2[nz], b_C, b_cn2, b_cids),
+            }
             if keep_vec:
-                out[vec_col] = pdf["__dv"]
+                out[vec_col] = pdf["__dv"][nz].to_numpy()
             yield pd.DataFrame(out)
 
     # no spread(): vectorized-matmul stage — see kmeans_train_rows
     return (
-        corpus
+        _finite_vectors(corpus, vec_col)
         .select(F.col(id_col).alias("__id"), _as_double(F.col(vec_col)).alias("__dv"))
         .mapInPandas(block, schema)
     )
@@ -947,81 +906,15 @@ def kmeans_train(
     vec_col: str = "embedding",
     quantize: int = 1_000_000,
 ) -> DataFrame:
-    """Deterministic Lloyd iterations for IVF centroid training,
-    entirely as DataFrame ops: seed = the k lowest-id vectors, then
-    per iteration (1) assign every vector to its nearest centroid by
-    cosine (broadcast hash join — the corpus never shuffles for
-    assignment), (2) recompute centroids as the element-wise mean via
-    posexplode → (cluster, dim) hash aggregate.
-
-    All arithmetic stays in the quantized int64 domain (sums exact,
-    one rounded division per component), so training is reproducible
-    bit-for-bit on any engine/partitioning — a DuckDB oracle re-derives
-    identical centroids. Shuffle ledger per iteration: ONE aggregate
-    keyed (centroid, dim) + one k×dim regroup; empty clusters drop
-    (standard Lloyd behavior).
-
-    Returns (id_col, vec_col) centroids in the input's float domain,
-    directly consumable by ivf_assign / ivf_cosine_topk.
-
-    Delegates to :func:`kmeans_train_rows` (one job per iteration,
-    bit-identical output — pinned by test) whenever the centroid table
-    fits comfortably on the driver; :func:`_kmeans_train_df` remains
-    the path for centroid tables too large to hold (k × dim beyond
-    ~10⁶ entries)."""
-    first = corpus.select(vec_col).first()
-    dim = len(first[0]) if first is not None and first[0] is not None else None
-    if dim is not None and k * dim <= 1_000_000 and _integral_id(corpus, id_col):
-        rows = kmeans_train_rows(
-            corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col, quantize=quantize
-        )
-        return corpus.sparkSession.createDataFrame(
-            [(cid, vec) for cid, vec in rows],
-            f"{id_col} long, {vec_col} array<double>",
-        )
-    return _kmeans_train_df(corpus, k, iters, id_col, vec_col, quantize)
-
-
-def _kmeans_train_df(
-    corpus: DataFrame,
-    k: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-    quantize: int,
-) -> DataFrame:
-    """The all-DataFrame Lloyd loop (see :func:`kmeans_train`): the
-    scale path for centroid tables too large to hold on the driver,
-    and the parity reference the fast trainer is tested against."""
-    # same NULL/NaN exclusion as kmeans_train_rows (parity twins must
-    # see the same input rows)
-    corpus = _finite_vectors(corpus, vec_col).where(F.col(id_col).isNotNull())
-    cents = corpus.orderBy(F.col(id_col).asc()).limit(k).select(id_col, vec_col)
-    for _ in range(iters):
-        assign = ivf_assign(corpus, cents, id_col=id_col, vec_col=vec_col,
-                            quantize=quantize, n_probe=1)
-        qv = spread(corpus).select(F.col(id_col), _quantized(F.col(vec_col), quantize).alias("__q"))
-        comp = assign.join(qv, id_col).select(
-            "centroid_id", F.posexplode("__q").alias("dim", "val")
-        )
-        means = comp.groupBy("centroid_id", "dim").agg(
-            F.sum("val").alias("__s"), F.count("*").alias("__c")
-        )
-        cents = (
-            means.select(
-                "centroid_id", "dim",
-                F.round(F.col("__s") / F.col("__c")).cast("long").alias("__cc"),
-            )
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "__cc"))),
-                    lambda st: st["__cc"] / quantize,
-                ).alias(vec_col)
-            )
-            .select(F.col("centroid_id").alias(id_col), vec_col)
-        )
-    return cents
+    """:func:`kmeans_train_rows` as a DataFrame of (id_col long,
+    vec_col array<double>) centroids, directly consumable by
+    ivf_assign / ivf_cosine_topk."""
+    rows = kmeans_train_rows(
+        corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col, quantize=quantize
+    )
+    return corpus.sparkSession.createDataFrame(
+        rows, f"{id_col} long, {vec_col} array<double>"
+    )
 
 
 def ivf_cosine_topk(
@@ -1509,35 +1402,6 @@ def _sub(vec: Column, s: int, sub_dim: int) -> Column:
     return F.slice(vec, s * sub_dim + 1, sub_dim)
 
 
-def _l2_assign(vecs: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
-    """Nearest codebook entry per vector by EXACT integer squared-L2:
-    d² = |v|² − 2⟨v,c⟩ + |c|² — every term int64, so the argmin (and
-    therefore the whole trained codebook) is bit-reproducible on any
-    engine with no rounding step at all. Codebook broadcast; ties
-    break (d² asc, code asc). ``vecs``: (id, __v, __n2); ``cents``:
-    (code, __c, __cn2)."""
-    one = _pair_key  # NULL-safe, non-foldable (r16; see its docstring)
-    scored = (
-        vecs.withColumn("__one", one(id_col))
-        .join(F.broadcast(cents.withColumn("__one", one("code"))), "__one")
-        .select(
-            id_col,
-            "code",
-            (
-                F.col("__n2")
-                - F.lit(2) * _dot(F.col("__v"), F.col("__c"), True)
-                + F.col("__cn2")
-            ).alias("__d2"),
-        )
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("__d2").asc(), F.col("code").asc())
-    return (
-        scored.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .select(id_col, "code")
-    )
-
-
 def pq_train_rows(
     corpus: DataFrame,
     dim: int,
@@ -1548,24 +1412,30 @@ def pq_train_rows(
     vec_col: str = "embedding",
     quantize: int = 1_000_000,
 ) -> list[tuple[int, int, list[int], int]]:
-    """:func:`pq_train` with the codebooks held on the DRIVER (the PQ
+    """Product-quantization codebooks held on the DRIVER (the PQ
     codebook is definitionally RAM-sized — m × n_codes × dim/m ints;
-    FAISS keeps exactly this in memory), cutting training to ONE Spark
-    job per Lloyd iteration for ALL subspaces at once: an Arrow-batched
-    numpy stage slices each batch into subspaces, assigns by exact
-    int64 squared-L2 (argmin-first over ascending codes == the
-    (d² asc, code asc) tie-break — no rounding anywhere in the metric),
-    and emits per-partition (subspace, code, dim) integer partial sums;
-    one tiny aggregate + the same in-Spark rounded division produce the
-    means. Associative int64 partials ⇒ partitioning-independent and
-    bit-identical to the DataFrame trainer (pinned by test).
+    FAISS keeps exactly this in memory): the vector is split into
+    ``m`` contiguous subspaces of ``dim/m`` components, and each
+    subspace trains its own ``n_codes``-entry codebook by the
+    :func:`kmeans_train_rows` recipe — seed = the n_codes lowest-id
+    subvectors, ONE Spark job per Lloyd iteration for ALL subspaces at
+    once. An Arrow-batched numpy stage slices each batch into
+    subspaces, assigns by exact int64 squared-L2 (argmin-first over
+    ascending codes == the (d² asc, code asc) tie-break — no rounding
+    anywhere in the metric), and emits per-partition (subspace, code,
+    dim) integer partial sums; one tiny aggregate + one in-Spark
+    rounded division produce the means. Associative int64 partials ⇒
+    partitioning-independent, and a DuckDB oracle re-derives identical
+    codebooks.
 
-    Returns [(subspace, code, components list[int], cn2)] sorted."""
+    Returns [(subspace, code, components list[int], cn2)] sorted. The
+    id column must be integral."""
     import numpy as np
     import pandas as pd
 
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
+    _require_integral_id(corpus, id_col)
     sub_dim = dim // m
     # same NULL/NaN gate as kmeans_train_rows: NULL ids seed first and
     # crash int(r[0]); NULL embeddings crash the executor stack; NaN
@@ -1669,94 +1539,13 @@ def pq_train(
     vec_col: str = "embedding",
     quantize: int = 1_000_000,
 ) -> DataFrame:
-    """Product-quantization codebooks: the vector is split into ``m``
-    contiguous subspaces of ``dim/m`` components; each subspace trains
-    its own ``n_codes``-entry codebook by deterministic Lloyd
-    iterations (seed = the n_codes lowest-id subvectors, integer-L2
-    assignment via :func:`_l2_assign`, exact int64 component means
-    rounded once — the :func:`kmeans_train` recipe per subspace, so a
-    DuckDB oracle re-derives identical codebooks).
-
-    Returns (subspace, code, __c array<long>, __cn2 long) in the
-    quantized domain. Scale shape per subspace and iteration: one
-    broadcast-codebook assignment over the corpus (map-only), one
-    (code, dim) hash aggregate — the corpus never shuffles.
-
-    Delegates to :func:`pq_train_rows` (one job per iteration for all
-    subspaces, bit-identical — pinned by test) whenever the codebook
-    fits the driver; the all-DataFrame loop remains the reference and
-    the path for outsized codebooks."""
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    # NULL/NaN exclusion (r17 self-review): the expression path dies
-    # at the ANSI long cast; the numpy path silently trains garbage
-    # codewords from NaN.astype(int64)
-    corpus = _finite_vectors(corpus, vec_col)
-    if m * n_codes * (dim // m) <= 1_000_000 and _integral_id(corpus, id_col):
-        rows = pq_train_rows(
-            corpus, dim, m, n_codes, iters, id_col, vec_col, quantize
-        )
-        return corpus.sparkSession.createDataFrame(
-            rows, "subspace int, code long, __c array<long>, __cn2 long"
-        )
-    return _pq_train_df(corpus, dim, m, n_codes, iters, id_col, vec_col, quantize)
-
-
-def _pq_train_df(
-    corpus: DataFrame,
-    dim: int,
-    m: int = 4,
-    n_codes: int = 8,
-    iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    quantize: int = 1_000_000,
-) -> DataFrame:
-    """The all-DataFrame per-subspace Lloyd loop (see :func:`pq_train`)."""
-    sub_dim = dim // m
-    parts = []
-    for s in range(m):
-        sl = (
-            spread(corpus)
-            .select(
-                F.col(id_col),
-                _quantized(_sub(F.col(vec_col), s, sub_dim), quantize).alias("__v"),
-            )
-            .withColumn("__n2", _dot(F.col("__v"), F.col("__v"), True))
-        )
-        cents = (
-            sl.orderBy(F.col(id_col).asc())
-            .limit(n_codes)
-            .select(F.col(id_col).alias("code"), F.col("__v").alias("__c"), F.col("__n2").alias("__cn2"))
-        )
-        for _ in range(iters):
-            assign = _l2_assign(sl, cents, id_col)
-            comp = assign.join(sl.select(id_col, "__v"), id_col).select(
-                "code", F.posexplode("__v").alias("dim", "val")
-            )
-            means = comp.groupBy("code", "dim").agg(
-                F.sum("val").alias("__s"), F.count("*").alias("__cnt")
-            )
-            cents = (
-                means.select(
-                    "code",
-                    "dim",
-                    F.round(F.col("__s") / F.col("__cnt")).cast("long").alias("__cc"),
-                )
-                .groupBy("code")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("dim", "__cc"))),
-                        lambda st: st["__cc"],
-                    ).alias("__c")
-                )
-                .withColumn("__cn2", _dot(F.col("__c"), F.col("__c"), True))
-            )
-        parts.append(cents.select(F.lit(s).alias("subspace"), "code", "__c", "__cn2"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    """:func:`pq_train_rows` as a DataFrame of (subspace int, code
+    long, __c array<long>, __cn2 long) codebooks in the quantized
+    domain."""
+    rows = pq_train_rows(corpus, dim, m, n_codes, iters, id_col, vec_col, quantize)
+    return corpus.sparkSession.createDataFrame(
+        rows, "subspace int, code long, __c array<long>, __cn2 long"
+    )
 
 
 def pq_encode(
@@ -1774,92 +1563,61 @@ def pq_encode(
     256-entry codebooks, m bytes per vector — a 100 TB float corpus
     compresses to the point where the ADC scan is CPU-bound, not
     IO-bound). Encoding is map-only; the corpus never shuffles: the
-    fast path collects the (RAM-sized) codebooks once and encodes all
-    m subspaces in ONE Arrow-batched numpy pass (exact int64 L2,
-    argmin-first == the (d² asc, code asc) tie-break — bit-identical
-    to the broadcast-join path, pinned by test)."""
+    (RAM-sized) codebooks are collected once and all m subspaces are
+    encoded in ONE Arrow-batched numpy pass (exact int64 L2,
+    argmin-first == the (d² asc, code asc) tie-break). The id column
+    keeps its own Spark type."""
     import numpy as np
     import pandas as pd
 
-    # NULL/NaN exclusion (r17 self-review): NULL vectors crash
-    # np.stack, a NaN component encodes to a garbage int64 code
-    # silently on the numpy path and kills the expression path's cast
-    corpus = _finite_vectors(corpus, vec_col)
     sub_dim = dim // m
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    if isinstance(
-        corpus.schema[id_col].dataType, (ByteType, ShortType, IntegerType, LongType)
-    ):
-        cb_rows = codebooks.select("subspace", "code", "__c").collect()
-        packed_d: dict[int, dict[int, list[int]]] = {}
-        for r in cb_rows:
-            packed_d.setdefault(int(r["subspace"]), {})[int(r["code"])] = [
-                int(x) for x in r["__c"]
-            ]
-        packed = [
-            (
-                np.asarray(sorted(packed_d[s]), dtype=np.int64),
-                np.asarray(
-                    [packed_d[s][c] for c in sorted(packed_d[s])], dtype=np.int64
-                ),
-            )
-            for s in range(m)
+    packed_d: dict[int, dict[int, list[int]]] = {}
+    for r in codebooks.select("subspace", "code", "__c").collect():
+        packed_d.setdefault(int(r["subspace"]), {})[int(r["code"])] = [
+            int(x) for x in r["__c"]
         ]
-        bc = corpus.sparkSession.sparkContext.broadcast(packed)
+    packed = [
+        (
+            np.asarray(sorted(packed_d[s]), dtype=np.int64),
+            np.asarray([packed_d[s][c] for c in sorted(packed_d[s])], dtype=np.int64),
+        )
+        for s in range(m)
+    ]
+    bc = corpus.sparkSession.sparkContext.broadcast(packed)
 
-        def encode(batches):
-            pk = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                ids = pdf["__id"].to_numpy(dtype=np.int64)
-                Q = _np_quant(np.stack(pdf["__dv"].to_numpy()), quantize)
-                frames = []
-                for s, (codes, C) in enumerate(pk):
-                    Qs = Q[:, s * sub_dim : (s + 1) * sub_dim]
-                    n2 = (Qs * Qs).sum(axis=1)
-                    cn2 = (C * C).sum(axis=1)
-                    d2 = n2[:, None] - 2 * (Qs @ C.T) + cn2[None, :]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                id_col: ids,
-                                "subspace": np.full(len(ids), s, dtype=np.int32),
-                                "code": codes[np.argmin(d2, axis=1)],
-                            }
-                        )
+    def encode(batches):
+        pk = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids = pdf["__id"].to_numpy()
+            Q = _np_quant(np.stack(pdf["__dv"].to_numpy()), quantize)
+            frames = []
+            for s, (codes, C) in enumerate(pk):
+                Qs = Q[:, s * sub_dim : (s + 1) * sub_dim]
+                n2 = (Qs * Qs).sum(axis=1)
+                cn2 = (C * C).sum(axis=1)
+                d2 = n2[:, None] - 2 * (Qs @ C.T) + cn2[None, :]
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            id_col: ids,
+                            "subspace": np.full(len(ids), s, dtype=np.int32),
+                            "code": codes[np.argmin(d2, axis=1)],
+                        }
                     )
-                yield pd.concat(frames, ignore_index=True)
+                )
+            yield pd.concat(frames, ignore_index=True)
 
-        # no spread(): vectorized-matmul stage — see kmeans_train_rows
-        return (
-            corpus
-            .select(
-                F.col(id_col).alias("__id"), _as_double(F.col(vec_col)).alias("__dv")
-            )
-            .mapInPandas(encode, f"{id_col} long, subspace int, code long")
-        )
-    parts = []
-    for s in range(m):
-        sl = (
-            spread(corpus)
-            .select(
-                F.col(id_col),
-                _quantized(_sub(F.col(vec_col), s, sub_dim), quantize).alias("__v"),
-            )
-            .withColumn("__n2", _dot(F.col("__v"), F.col("__v"), True))
-        )
-        cb = codebooks.filter(F.col("subspace") == s).select("code", "__c", "__cn2")
-        parts.append(
-            _l2_assign(sl, cb, id_col).select(
-                id_col, F.lit(s).alias("subspace"), "code"
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    id_type = corpus.schema[id_col].dataType.simpleString()
+    # NULL/NaN exclusion (r17 self-review): NULL vectors crash
+    # np.stack, and a NaN component would encode to a garbage int64 code.
+    # No spread(): vectorized-matmul stage — see kmeans_train_rows
+    return (
+        _finite_vectors(corpus, vec_col)
+        .select(F.col(id_col).alias("__id"), _as_double(F.col(vec_col)).alias("__dv"))
+        .mapInPandas(encode, f"{id_col} {id_type}, subspace int, code long")
+    )
 
 
 def pq_cosine_topk(

@@ -1,4 +1,7 @@
+import importlib.util
 import os
+import pathlib
+import uuid
 
 import pytest
 
@@ -16,3 +19,34 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def verify_local():
+    """``tools/verify_local.py`` as a module: its ``compare`` is the
+    exact oracle comparison the registry sweep uses."""
+    spec = importlib.util.spec_from_file_location(
+        "verify_local", pathlib.Path(__file__).resolve().parent.parent / "tools" / "verify_local.py"
+    )
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` → the number of Spark jobs ``fn`` starts,
+    counted through a job group."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job count")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

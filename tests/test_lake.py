@@ -1681,21 +1681,6 @@ def test_compact_shrinks_file_count(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def _spark_jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` starts, counted through a job group."""
-    import uuid as _uuid
-
-    sc = spark.sparkContext
-    group = f"lake-{_uuid.uuid4().hex}"
-    sc.setJobGroup(group, "lake job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _bucket_of(spark, keys, n):
     return {
         r[0]
@@ -1820,7 +1805,7 @@ def test_recorded_schema_read_matches_inferred_read(spark, tmp_path, case):
     assert t.scan([("id", ">=", 0)]).df.schema == inferred.schema
 
 
-def test_save_upsert_scan_apply_changes_run_only_their_own_jobs(spark, tmp_path):
+def test_save_upsert_scan_apply_changes_run_only_their_own_jobs(spark, spark_jobs, tmp_path):
     """Job counts of the lake's hot paths (parent code: 2 / 6 / 2 / 6).
     No commit starts a readability probe and no read of a version tree
     starts a schema-inference job: a REPLACE of a 16-bucket table is
@@ -1835,17 +1820,17 @@ def test_save_upsert_scan_apply_changes_run_only_their_own_jobs(spark, tmp_path)
     ).write.parquet(src)
     t = LakeTable(spark, str(tmp_path / "t"), index="id", buckets=16)
     base = spark.read.parquet(src)
-    assert _spark_jobs(spark, lambda: t.save(base, SaveStrategy.REPLACE)) == 1
+    assert spark_jobs(lambda: t.save(base, SaveStrategy.REPLACE)) == 1
 
     batch_dir = str(tmp_path / "batch")
     spark.range(10).select(
         (F.col("id") * 7 + 5).alias("id"), F.lit(-1).cast("long").alias("v"), F.lit("u").alias("name")
     ).write.parquet(batch_dir)
     batch = spark.read.parquet(batch_dir)
-    assert _spark_jobs(spark, lambda: t.upsert(batch)) == 4
+    assert spark_jobs(lambda: t.upsert(batch)) == 4
 
     rows = []
-    assert _spark_jobs(spark, lambda: rows.extend(t.scan_adt([Cond("id", "eq", 12)]).df.collect())) == 1
+    assert spark_jobs(lambda: rows.extend(t.scan_adt([Cond("id", "eq", 12)]).df.collect())) == 1
     assert [tuple(r) for r in rows] == [(12, -1, "u")]
 
     chg_dir = str(tmp_path / "chg")
@@ -1856,7 +1841,7 @@ def test_save_upsert_scan_apply_changes_run_only_their_own_jobs(spark, tmp_path)
         F.when(F.col("id") % 2 == 0, "delete").otherwise("update").alias("change"),
     ).write.parquet(chg_dir)
     changes = spark.read.parquet(chg_dir)
-    assert _spark_jobs(spark, lambda: t.apply_changes(changes)) == 4
+    assert spark_jobs(lambda: t.apply_changes(changes)) == 4
     got = dict((r["id"], r["v"]) for r in t.read().df.collect())
     assert len(got) == 2000 - 5 and 1 not in got and got[12] == -2 and got[19] == -1
 

@@ -1701,53 +1701,133 @@ def test_chunk_documents_model(spark):
 
 def test_kmeans_fast_trainer_matches_dataframe_trainer(spark, sf_dir):
     """kmeans_train_rows (driver-held centroids, numpy partial sums)
-    must be bit-identical to the all-DataFrame Lloyd loop, and both
-    assignment twins (literal-expression, Arrow-blocked numpy) must be
-    bit-identical to the broadcast-join ivf_assign."""
+    must be bit-identical to the all-DataFrame Lloyd loop over two
+    iterations (the registry oracles cover one), and the Arrow-blocked
+    numpy assignment must be bit-identical to the broadcast-join
+    ivf_assign."""
     from fabrix_spark.operators import similarity
+    from tests.lloyd_reference import kmeans_train_df
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     want = sorted(
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in similarity._kmeans_train_df(emb, 8, 2, "vec_id", "embedding", 1_000_000).collect()
+        (int(r[0]), [float(x) for x in r[1]]) for r in kmeans_train_df(emb, 8, 2).collect()
     )
     rows = similarity.kmeans_train_rows(emb, k=8, iters=2)
     assert want == sorted(rows)
-    # kmeans_train delegates and agrees too
     assert want == sorted(
         (int(r[0]), [float(x) for x in r[1]])
         for r in similarity.kmeans_train(emb, k=8, iters=2).collect()
     )
     cdf = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     a_join = {r[0]: r[1] for r in similarity.ivf_assign(emb, cdf).collect()}
-    a_expr = {r[0]: r[1] for r in similarity.ivf_assign_expr(emb, rows).collect()}
     a_np = {r[0]: r[1] for r in similarity.ivf_assign_blocked(emb, rows).collect()}
-    assert a_join == a_expr == a_np
+    assert a_join == a_np
 
 
-def test_semantic_dedup_fast_path_matches_join_path(spark, sf_dir):
-    """The numpy fast path (blocked assignment + per-cluster matmul,
-    margin pre-filter, exact F.round in Spark) emits the identical pair
-    set and kept set as the expression/join path driven by explicit
-    centroids."""
-    from fabrix_spark.operators import dedup, similarity
+LLOYD_FAMILY_QUERIES = (
+    "d_semdedup_pairs",
+    "d_semdedup",
+    "pipeline_multimodal_curation",
+    "sim_ivf_trained",
+    "smp_cluster_balanced",
+    "sim_pq_topk",
+    "sim_ivfpq_topk",
+    "sim_pq_refined",
+    "sim_pq_store_topk",
+)
 
+
+def test_lloyd_family_queries_match_duckdb_oracles(spark, sf_dir, verify_local):
+    """Every registry query built on the Lloyd trainers, PQ encoding
+    or SemDeDup hash-matches its DuckDB oracle (verify_local's exact
+    compare), so an oracle drift in these families fails the default
+    run, not only the manual sweep."""
+    from fabrix_spark.queries import REGISTRY
+
+    con = verify_local.oracle_con(sf_dir)
+    errors = {}
+    for name in LLOYD_FAMILY_QUERIES:
+        qd = REGISTRY[name]
+        s_tbl = qd.fn(spark, sf_dir).toArrow()
+        err = verify_local.compare(s_tbl, con.execute(qd.oracle).arrow())
+        if err or s_tbl.num_rows == 0:
+            errors[name] = err or "empty result"
+    assert not errors, errors
+
+
+def test_lloyd_family_job_counts(spark, sf_dir, spark_jobs):
+    """Spark jobs per call, warm. kmeans_train_rows: the seed collect
+    plus one assignment-and-means job pair per iteration; kmeans_train
+    adds the collect of its returned frame; pq_train is the same for
+    all subspaces at once; SemDeDup is the trainer plus the one
+    shuffle on centroid_id."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cdf = similarity.kmeans_train(emb, k=8, iters=1).localCheckpoint()
-    old_pairs = sorted(
-        tuple(r) for r in dedup.semantic_dup_pairs(emb, threshold=0.375, centroids=cdf).collect()
+    calls = {
+        "kmeans_train": lambda: similarity.kmeans_train(emb, k=8, iters=1).collect(),
+        "kmeans_train_rows": lambda: similarity.kmeans_train_rows(emb, k=8, iters=1),
+        "pq_train": lambda: similarity.pq_train(emb, 64, m=4, n_codes=8).collect(),
+        "semantic_dup_pairs": lambda: dedup.semantic_dup_pairs(
+            emb, k=8, iters=1, threshold=0.375
+        ).collect(),
+        "semantic_prune": lambda: dedup.semantic_prune(
+            emb, k=8, iters=1, threshold=0.375
+        ).collect(),
+    }
+    for fn in calls.values():
+        fn()
+    got = {name: spark_jobs(fn) for name, fn in calls.items()}
+    assert got == {
+        "kmeans_train": 4,
+        "kmeans_train_rows": 3,
+        "pq_train": 4,
+        "semantic_dup_pairs": 5,
+        "semantic_prune": 5,
+    }
+
+
+def test_lloyd_stages_skip_zero_norm_vectors_and_centroids(spark):
+    """A zero vector has no cosine to anything, so the numpy stages
+    follow ivf_assign's contract: a zero-norm row is assigned to no
+    centroid and a zero-norm seed trains no centroid (its 0/0 NaN
+    cosine must not win np.argmax and pull every row into it)."""
+    corpus = spark.createDataFrame(
+        [
+            (1, [1.0, 2.0, 3.0, 1.0]),
+            (2, [0.0, 0.0, 0.0, 0.0]),
+            (5, [2.0, 1.0, 1.0, 2.0]),
+            (7, [1.0, 1.0, 2.0, 0.5]),
+            (9, [0.5, 2.0, 1.0, 1.0]),
+            (11, [2.0, 2.0, 1.0, 0.5]),
+        ],
+        "vec_id long, embedding array<double>",
     )
-    new_pairs = sorted(
-        tuple(r) for r in dedup.semantic_dup_pairs(emb, k=8, iters=1, threshold=0.375).collect()
-    )
-    assert old_pairs == new_pairs and len(new_pairs) > 0
-    old_keep = sorted(
-        tuple(r) for r in dedup.semantic_prune(emb, threshold=0.375, centroids=cdf).collect()
-    )
-    new_keep = sorted(
-        tuple(r) for r in dedup.semantic_prune(emb, k=8, iters=1, threshold=0.375).collect()
-    )
-    assert old_keep == new_keep
+    mean = [1.3, 1.6, 1.6, 1.0]  # of the five nonzero rows
+    assert similarity.kmeans_train_rows(corpus, k=2) == [(1, mean)]
+
+    cents = [(1, [1.0, 2.0, 3.0, 1.0]), (2, [0.0, 0.0, 0.0, 0.0])]
+    cdf = spark.createDataFrame(cents, "vec_id long, embedding array<double>")
+    want = {1: 1, 5: 1, 7: 1, 9: 1, 11: 1}
+    assert dict(map(tuple, similarity.ivf_assign(corpus, cdf).collect())) == want
+    assert dict(map(tuple, similarity.ivf_assign_blocked(corpus, cents).collect())) == want
+
+    pairs = sorted(map(tuple, dedup.semantic_dup_pairs(corpus, k=2, threshold=0.9).collect()))
+    assert pairs == [(1, 1, 7, 0.981156)]
+    kept = sorted(map(tuple, dedup.semantic_prune(corpus, k=2, threshold=0.9).collect()))
+    assert kept == [(1, 1), (5, 1), (9, 1), (11, 1)]
+
+
+def test_lloyd_family_refuses_non_integral_ids(emb):
+    """The numpy stages carry ids as int64, so the trainers and
+    SemDeDup refuse a string id up front, naming the column."""
+    emb_s = emb.withColumn("vec_id", F.col("vec_id").cast("string"))
+    for call in (
+        lambda: similarity.kmeans_train(emb_s, k=2),
+        lambda: similarity.pq_train(emb_s, 64, m=4, n_codes=2),
+        lambda: dedup.semantic_dup_pairs(emb_s, k=2),
+        lambda: dedup.semantic_prune(emb_s, k=2),
+    ):
+        with pytest.raises(ValueError, match="'vec_id' must be integral, got string"):
+            call()
 
 
 def test_np_round6_matches_spark_round(spark):
@@ -1812,25 +1892,30 @@ def test_sigstore_build_once_single_build_under_contention(spark, tmp_path):
 
 def test_pq_fast_trainer_and_encoder_match_dataframe_path(spark, sf_dir):
     """pq_train_rows (driver-held codebooks, one numpy job per Lloyd
-    iteration for ALL subspaces) and the numpy encode fast path must be
-    bit-identical to the per-subspace broadcast-join DataFrame path."""
+    iteration for ALL subspaces) must be bit-identical to the
+    per-subspace broadcast-join DataFrame loop over two iterations, and
+    so must pq_encode's numpy pass be to the join assignment; the
+    encoder carries any id type through, a string id included."""
     from pyspark.sql import functions as F
 
     from fabrix_spark.operators import similarity
+    from tests.lloyd_reference import pq_encode_df, pq_train_df
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     want = sorted(
         (int(r["subspace"]), int(r["code"]), [int(x) for x in r["__c"]], int(r["__cn2"]))
-        for r in similarity._pq_train_df(emb, 64, 4, 8, 2).collect()
+        for r in pq_train_df(emb, 64, 4, 8, 2).collect()
     )
     rows = similarity.pq_train_rows(emb, 64, m=4, n_codes=8, iters=2)
     assert want == sorted(rows)
     cb = similarity.pq_train(emb, 64, m=4, n_codes=8, iters=1)
     fast = {(r[0], r[1]): r[2] for r in similarity.pq_encode(emb, cb, 64, m=4).collect()}
-    # a non-integral id routes through the broadcast-join path
+    join = {(r[0], r[1]): r[2] for r in pq_encode_df(emb, cb, 64, m=4).collect()}
+    assert fast == join and len(fast) > 0
     emb_s = emb.withColumn("vec_id", F.col("vec_id").cast("string"))
-    slow = {(int(r[0]), r[1]): r[2] for r in similarity.pq_encode(emb_s, cb, 64, m=4).collect()}
-    assert fast == slow and len(fast) > 0
+    enc_s = similarity.pq_encode(emb_s, cb, 64, m=4)
+    assert enc_s.schema["vec_id"].dataType.simpleString() == "string"
+    assert {(int(r[0]), r[1]): r[2] for r in enc_s.collect()} == fast
 
 
 def test_metrics_and_graph_edge_contracts(spark):
@@ -3247,6 +3332,24 @@ def test_profile_explicit_empty_columns_and_v2_scan(spark, sf_dir):
         spark.conf.set(key, old)
 
 
+def test_profile_nondeterministic_projection_is_materialized(spark, sf_dir):
+    """A nondeterministic expression over a bare scan (``rand()``,
+    ``monotonically_increasing_id()``) is not scan-shaped:
+    re-running it once per profiled column would profile a different
+    snapshot per column, so profile() materializes it first."""
+    from fabrix_spark.operators.profile import _is_scan_shaped, profile
+
+    scan = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    noisy = scan.select("o_orderkey", F.rand(7).alias("r"))
+    assert not _is_scan_shaped(noisy)
+    assert not _is_scan_shaped(scan.filter(F.rand(3) > 0.5))
+    assert not _is_scan_shaped(scan.withColumn("u", F.monotonically_increasing_id()))
+    plan = profile(noisy, ["o_orderkey", "r"])._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in plan
+    rows = {r["column"]: r for r in profile(noisy, ["o_orderkey", "r"]).collect()}
+    assert rows["r"]["n_rows"] == rows["o_orderkey"]["n_rows"] == scan.count()
+
+
 def test_winsorize_sketch_path_and_ewma_guard(spark):
     """winsorize(method='sketch') with unit buckets equals the exact
     path on an integer column; ewma_decayed refuses configurations
@@ -4422,36 +4525,22 @@ def test_bpe_encode_plan_shape(spark):
 
 
 @pytest.mark.slow
-def test_staged_queries_oracle_parity(spark, sf_dir):
+def test_staged_queries_oracle_parity(spark, sf_dir, verify_local):
     """Every STAGED query (the r12 promotion candidates in queries.py)
     passes the EXACT verify_local compare against its DuckDB oracle at
     sf0.001 — same column-name, type-family, and canonical-value
     semantics the driver gate uses — so promotion to the live registry
     is a decorator swap, not new verification work."""
-    import importlib.util
-    import pathlib
-
-    import duckdb
-
     from fabrix_spark.queries import STAGED
 
-    spec = importlib.util.spec_from_file_location(
-        "verify_local",
-        str(pathlib.Path(__file__).resolve().parent.parent / "tools" / "verify_local.py"),
-    )
-    vl = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(vl)
-
-    con = duckdb.connect()
-    for t in vl.TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = verify_local.oracle_con(sf_dir)
 
     assert STAGED, "no staged queries found"
     for name, qd in STAGED.items():
         s_tbl = qd.fn(spark, sf_dir).toArrow()
         assert qd.oracle is not None, f"{name} has no oracle"
         o_tbl = con.execute(qd.oracle).arrow()
-        err = vl.compare(s_tbl, o_tbl)
+        err = verify_local.compare(s_tbl, o_tbl)
         assert err is None, f"{name}: {err}"
         assert s_tbl.num_rows > 0, f"{name}: empty result"
 
@@ -5838,10 +5927,10 @@ def test_ann_family_excludes_poisoned_vectors(spark):
     assign = similarity.ivf_assign(corpus, corpus.filter("vec_id in (1, 5)")).collect()
     assert {r["vec_id"] for r in assign} == clean
 
-    expr_assign = similarity.ivf_assign_expr(
+    blocked_assign = similarity.ivf_assign_blocked(
         corpus, [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 1.0, 0.0])]
     ).collect()
-    assert {r["vec_id"] for r in expr_assign} == clean
+    assert {r["vec_id"] for r in blocked_assign} == clean
 
     for out in (
         similarity.rp_topk(corpus, q, k=3, out_dim=4),
@@ -5869,6 +5958,7 @@ def test_ann_family_excludes_poisoned_vectors(spark):
     rows_cb = similarity.pq_train_rows(corpus, dim=4, m=2, n_codes=2)
     assert all(math.isfinite(float(x)) for _, _, vec, _ in rows_cb for x in vec)
 
+    # seeds are ids 1 and 2; the zero-norm seed 2 trains no centroid
     cents = similarity.kmeans_train_rows(corpus, k=2)
-    assert len(cents) == 2
+    assert [cid for cid, _ in cents] == [1]
     assert all(math.isfinite(x) for _, vec in cents for x in vec)

@@ -117,15 +117,21 @@ def compare(s_tbl: pa.Table, o_tbl: pa.Table) -> str | None:
     return None
 
 
+def oracle_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--staged"]
     use_staged = "--staged" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
     spark = get_spark("verify_local")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_con(sf_dir)
 
     if use_staged:
         # --staged verifies the promotion candidates instead of the
