@@ -30,7 +30,8 @@ from .similarity import (
     _finite_vectors,
     _np_quant,
     _np_round6,
-    ivf_assign_blocked,
+    _require_integral_id,
+    ivf_assign,
     kmeans_train_rows,
 )
 from .text import tokens
@@ -126,21 +127,6 @@ def shingle_hash32(sh: Column) -> Column:
     """First 8 hex chars of md5 → uint32-range long. Engine-independent
     (unlike murmur3 ``F.hash``), so signatures are reproducible."""
     return F.conv(F.substring(F.md5(sh.cast("binary")), 1, 8), 16, 10).cast("long")
-
-
-def _shingle_sets_expr(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """Expression-pipeline twin of the :func:`_shingle_frame` kernel —
-    kept as the bit-equality reference the kernel is pinned against
-    (tests) and as the fallback shape auditors can diff plans with.
-    Same row contract as ``_shingle_sets`` (NULL-text exclusion)."""
-    return (
-        spread(df)
-        .filter(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col).alias("__id"),
-            F.array_distinct(shingles(F.col(text_col), n)).alias("__set"),
-        )
-    )
 
 
 # Spark's ``F.split(F.trim(text), r"\s+")`` semantics, replicated for
@@ -1540,20 +1526,21 @@ def _semdedup_assigned(
     quantize: int,
     centroids: DataFrame | None,
 ) -> DataFrame:
-    """(id, centroid_id, double vector) for SemDeDup's per-cluster
-    stage: each vector assigned to its nearest centroid by the
-    map-only numpy stage (:func:`similarity.ivf_assign_blocked`). The
-    centroid table is trained on the driver
-    (:func:`similarity.kmeans_train_rows`), or an explicit
-    ``centroids`` frame of k rows is collected."""
+    """(id, centroid_id, vector) for SemDeDup's per-cluster stage:
+    each vector assigned to its nearest centroid by the map-only numpy
+    stage (:func:`similarity.ivf_assign`). The centroid table is
+    trained on the driver (:func:`similarity.kmeans_train_rows`), or an
+    explicit ``centroids`` frame of k rows is collected. The id column
+    must be integral (the per-cluster stage orders ids as int64), and
+    NULL-id rows are dropped up front, as the trainer drops them."""
+    _require_integral_id(corpus, id_col)
+    corpus = corpus.where(F.col(id_col).isNotNull())
     if centroids is None:
-        cents = kmeans_train_rows(
+        centroids = kmeans_train_rows(
             corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col, quantize=quantize
         )
-    else:
-        cents = [(int(r[0]), r[1]) for r in centroids.select(id_col, vec_col).collect()]
-    return ivf_assign_blocked(
-        corpus, cents, id_col=id_col, vec_col=vec_col, quantize=quantize, keep_vec=True
+    return ivf_assign(
+        corpus, centroids, id_col=id_col, vec_col=vec_col, quantize=quantize, keep_vec=True
     )
 
 
@@ -1597,15 +1584,17 @@ def semantic_dup_pairs(
     assignment is map-only (see :func:`_semdedup_assigned`), and the
     data shuffles once on ``centroid_id`` into a per-cluster stage that
     scores all pairs as ONE numpy int64 matmul — the
-    cosine_topk_blocked architecture. Exact integer dots/norms leave
-    Python; the 6-dp rounding and the threshold cut happen in Spark
-    (F.round), so the pair set is bit-reproducible and a DuckDB oracle
-    re-derives it exactly (the Python side only pre-filters with an
-    epsilon margin no surviving pair can cross).
+    :func:`~fabrix_spark.operators.similarity.cosine_topk` architecture.
+    Exact integer dots/norms leave Python; the 6-dp rounding and the
+    threshold cut happen in Spark (F.round), so the pair set is
+    bit-reproducible and a DuckDB oracle re-derives it exactly (the
+    Python side only pre-filters with an epsilon margin no surviving
+    pair can cross).
 
     Returns (centroid_id, a_id, b_id, cosine) with a_id < b_id. The id
-    column must be integral. NULL vectors, NULL/NaN components and
-    zero-norm vectors are excluded (they have no cosine).
+    column must be integral; NULL-id rows are dropped. NULL vectors,
+    NULL/NaN components and zero-norm vectors are excluded (they have
+    no cosine).
     """
     import numpy as np
     import pandas as pd
@@ -1669,8 +1658,9 @@ def semantic_prune(
     < 5e-7 + repr error), and only the rare in-band values go through
     the exact F.round(x, 6) decimal twin (``_np_round6``) — the same
     decision as the SQL oracle's ``round(cos, 6) >= threshold``.
-    The id column must be integral. NULL vectors, NULL/NaN components
-    and zero-norm vectors are excluded (they have no cosine).
+    The id column must be integral; NULL-id rows are dropped. NULL
+    vectors, NULL/NaN components and zero-norm vectors are excluded
+    (they have no cosine).
     """
     import numpy as np
     import pandas as pd

@@ -678,8 +678,9 @@ def cluster_balanced_sample(
     salt: str = "",
 ) -> DataFrame:
     """Cluster-balanced (diversity) sampling over an embedding column:
-    assign every vector to its nearest centroid (broadcast quantizer —
-    the corpus never shuffles for assignment), then keep at most
+    assign every vector to its nearest centroid (the centroid table is
+    collected and broadcast — the corpus never shuffles for
+    assignment), then keep at most
     ``cap`` vectors per cluster by the deterministic md5 rank of the
     id — the embedding-space analogue of per-source capping, used to
     flatten over-represented semantic regions before training (the
@@ -689,9 +690,10 @@ def cluster_balanced_sample(
     Output: (id, cluster_id, cluster_n) for kept rows — cluster_n is
     the PRE-cap cluster population, so the balancing is auditable.
 
-    Scale shape: one broadcast-join assignment pass + one shuffle on
-    cluster_id for the capped rank. Parallelism within the rank is
-    bounded by the number of clusters — at corpus scale train enough
+    Scale shape: one map-only assignment pass + one shuffle on
+    cluster_id for the capped rank (centroid ids must be integral).
+    Parallelism within the rank is bounded by the number of clusters —
+    at corpus scale train enough
     centroids (k ≫ cores; k ~ √N is the usual IVF sizing) so the
     per-cluster rank partitions stay balanced; the md5 rank makes the
     kept set independent of partitioning, so results never change

@@ -1,13 +1,18 @@
 """Similarity search over embedding columns (ArrayType(FloatType)).
 
-Baseline: brute-force cosine top-k (broadcast the query side — the
-corpus side never shuffles). Scale path: deterministic random-
-hyperplane LSH bucketing so candidate generation is an equi-join on
-bucket signature instead of a cross join.
+Baseline: brute-force cosine top-k (the query side is broadcast — the
+corpus side never shuffles). Scale paths: deterministic random-
+hyperplane LSH bucketing and IVF/PQ inverted lists, so candidate
+generation is an equi-join on a bucket or list key instead of a cross
+join.
 
-No UDFs: dot products are ``zip_with`` + ``aggregate`` expressions
-(JVM codegen). Quantized int64 scoring available for bit-exact
-reproducibility across engines.
+Vectors quantize to int64, so every dot product and norm is exact and
+results reproduce bitwise across engines. Where a whole corpus batch
+meets a small driver-held table (brute-force top-k, IVF assignment,
+Lloyd training, PQ encoding) the scoring is one Arrow-batched numpy
+matmul; elsewhere dot products are ``zip_with`` + ``aggregate``
+expressions (JVM codegen). Rounding to 6 dp stays in Spark or uses the
+exact ``F.round`` twins, so both kinds agree bit for bit.
 """
 
 from __future__ import annotations
@@ -21,14 +26,12 @@ from .util import spread
 __all__ = [
     "cosine_topk",
     "cosine_range_search",
-    "cosine_topk_blocked",
     "plane_sign",
     "plane_signs",
     "hyperplane_lsh_buckets",
     "lsh_cosine_topk",
     "knn_graph",
     "ivf_assign",
-    "ivf_assign_blocked",
     "kmeans_train",
     "kmeans_train_rows",
     "ivf_cosine_topk",
@@ -76,22 +79,11 @@ def _quantized_guarded(vec: Column, scale: int) -> Column:
     )
 
 
-def _as_double_guarded(vec: Column) -> Column:
-    """Unquantized twin of :func:`_quantized_guarded`: NaN and NULL
-    components both map to NULL (NaN would otherwise survive the cast
-    and ``NaN > 0`` is false for the norm filter anyway, but mapping it
-    to NULL keeps the two guarded casters' exclusion mechanics
-    identical: poisoned component → NULL element → NULL norm →
-    excluded by ``n2 > 0``)."""
-    return F.transform(
-        vec,
-        lambda x: F.when(~(x.isNull() | F.isnan(x.cast("double"))), x.cast("double")),
+def _dot(a: Column, b: Column) -> Column:
+    """Exact int64 dot product of two quantized vectors."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, x: acc + x
     )
-
-
-def _dot(a: Column, b: Column, integer: bool) -> Column:
-    zero = F.lit(0).cast("long") if integer else F.lit(0.0)
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), zero, lambda acc, x: acc + x)
 
 
 def _finite_vectors(df: DataFrame, vec_col: str) -> DataFrame:
@@ -112,7 +104,9 @@ def _finite_vectors(df: DataFrame, vec_col: str) -> DataFrame:
 
 def _pair_key(col: str) -> Column:
     """Single-valued non-foldable join key so corpus × broadcast-queries
-    runs as a broadcast HASH join rather than a nested-loop node.
+    runs as a broadcast HASH join rather than a nested-loop node — the
+    pairing of the expression scorers (:func:`cosine_range_search`,
+    :func:`rp_topk`); the numpy kernels pair nothing.
 
     ``pmod(xxhash64(id), 1)`` is always 0, never NULL (xxhash64 hashes
     a NULL input to the seed — so NULL-id rows still pair; the old
@@ -124,6 +118,41 @@ def _pair_key(col: str) -> Column:
     return F.pmod(F.xxhash64(F.col(col)), F.lit(1))
 
 
+def _arrow_quantized(vecs, quantize: int, dim: int | None = None):
+    """(kept row indices, quantized int64 matrix, squared norms) of an
+    Arrow list column of embeddings — the row filter and quantizer of
+    the :func:`cosine_topk` and :func:`ivf_assign` kernels. A row with
+    no cosine is dropped: a NULL or empty vector, a NULL, NaN or
+    infinite component, or a zero norm (the expression scorers drop the
+    same rows through ``_finite_vectors`` / ``_quantized_guarded`` and
+    ``n2 > 0``). ``dim`` fixes the width (default: the first non-empty
+    vector's); a vector of another length raises ValueError, since a
+    ragged matrix has no matmul."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(vecs, pa.ChunkedArray):
+        vecs = vecs.combine_chunks()
+    lens = pc.list_value_length(vecs).fill_null(0).to_numpy(zero_copy_only=False)
+    rows = np.nonzero(lens)[0]
+    widths = lens[rows]
+    if dim is None:
+        dim = int(widths[0]) if len(widths) else 0
+    bad = widths[widths != dim]
+    if len(bad):
+        raise ValueError(f"embedding length {int(bad[0])} differs from the dimension {dim}")
+    # flatten() skips NULL lists and honours the batch slice; NULL
+    # components come out as NaN
+    m = np.asarray(vecs.flatten().to_numpy(zero_copy_only=False), dtype=np.float64)
+    m = m.reshape(len(rows), dim)
+    ok = np.isfinite(m).all(axis=1)
+    Q = _np_quant(m[ok], quantize)
+    n2 = (Q * Q).sum(axis=1)
+    nz = n2 > 0
+    return rows[ok][nz], Q[nz], n2[nz]
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -131,60 +160,108 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str | None = None,
-    quantize: int | None = 1_000_000,
+    quantize: int = 1_000_000,
 ) -> DataFrame:
     """Brute-force cosine top-k: for each query vector, the k nearest
-    corpus vectors (excluding itself when ids collide).
+    corpus vectors (excluding itself when ids collide, NULL ids
+    included — ``eqNullSafe`` semantics). Returns (q_id, c_id, cosine,
+    rank) with ids in their own Spark types; the per-query order is
+    (cosine desc, c_id asc).
 
-    The query side is broadcast — the big corpus never moves. Per-query
-    ranking is a window partitioned by query id with a deterministic
-    (score desc, id asc) order. With ``quantize`` set, dots/norms are
-    exact int64 so results reproduce bitwise on any engine.
-    """
+    The queries are collected to the driver as Arrow and broadcast once
+    as an int64 matrix. Each corpus Arrow batch is scored against every
+    query by ONE numpy ``(batch × dim) @ (dim × n_queries)`` int64
+    matmul, and only rows at-or-near the batch's per-query k-th score
+    leave Python (tie-safe cut — see the comment in ``block``). The
+    kernel emits the exact integer dot and norms; the 6-dp rounding and
+    the ranking window run in Spark, so the scores are bit-identical to
+    the all-expression recipe and its DuckDB oracle (quantization is
+    ``F.round``'s half-up twin, :func:`_np_quant`). Ids never become
+    numpy: they ride as Arrow columns selected by the kernel's row
+    indices, and self-pairs are found by Arrow set lookup.
+
+    NULL vectors, NULL/NaN/infinite components and zero-norm vectors
+    are excluded on both sides (they have no cosine).
+
+    Scale shape: the corpus never shuffles and nothing joins — map-side
+    scoring plus a local top-k, then the per-query window ranks only
+    ``≈ batches × k`` (plus round-ties) candidates per query. The query
+    side must fit on the driver."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
     query_id_col = query_id_col or id_col
-    if quantize:
-        cvec = _quantized_guarded(F.col(vec_col), quantize)
-        integer = True
-    else:
-        cvec = _as_double_guarded(F.col(vec_col))
-        integer = False
+    qt = queries.select(F.col(query_id_col), F.col(vec_col)).toArrow()
+    q_rows, qm, q_n2 = _arrow_quantized(qt.column(1), quantize)
+    q_ids = qt.column(0).combine_chunks().take(q_rows)
+    # self-exclusion: query column j is excluded for the corpus rows
+    # whose id is keys[q_key[j]] (set lookup matches NULL to NULL)
+    keys = pc.unique(q_ids)
+    q_key = pc.index_in(q_ids, value_set=keys).to_numpy(zero_copy_only=False)
+    dim = qm.shape[1]
+    bc = corpus.sparkSession.sparkContext.broadcast((q_ids, keys, q_key, qm.T.copy(), q_n2))
 
-    # single-valued non-foldable key (see ivf_assign): the corpus ×
-    # broadcast-queries pairing runs as a broadcast HASH join rather
-    # than a nested-loop node. Both sides drop NULL/NaN vectors and
-    # zero-norm vectors (cosine undefined; the 0/0 double division is
-    # an ANSI DIVIDE_BY_ZERO task killer) — the NaN/NULL guard is
-    # FUSED into the quantize pass (r18): a poisoned component becomes
-    # a NULL element, the norm goes NULL, and the n2 > 0 filter below
-    # drops the row, so the old standalone _finite_vectors exists()
-    # traversal no longer runs.
-    one = _pair_key
-    c = (
-        spread(corpus)
-        .select(F.col(id_col).alias("c_id"), cvec.alias("c_vec"))
-        .withColumn("c_n2", _dot(F.col("c_vec"), F.col("c_vec"), integer))
-        .filter(F.col("c_n2") > 0)
-        .withColumn("__one", one("c_id"))
-    )
-    q = (
-        queries.select(F.col(query_id_col).alias("q_id"), cvec.alias("q_vec"))
-        .withColumn("q_n2", _dot(F.col("q_vec"), F.col("q_vec"), integer))
-        .filter(F.col("q_n2") > 0)
-        .withColumn("__one", one("q_id"))
-    )
+    def block(batches):
+        b_qids, b_keys, b_qkey, b_qt, b_qn2 = bc.value
+        for batch in batches:
+            if not len(b_qids):
+                continue
+            rows, cm, c_n2 = _arrow_quantized(batch.column(1), quantize, dim)
+            if not len(rows):
+                continue
+            c_ids = batch.column(0).take(rows)
+            dots = cm @ b_qt  # (batch, nq) int64 — exact
+            raw = dots / np.sqrt(c_n2[:, None].astype(np.float64) * b_qn2[None, :])
+            c_key = pc.index_in(c_ids, value_set=b_keys.cast(c_ids.type)).fill_null(-1)
+            np.putmask(
+                raw, c_key.to_numpy(zero_copy_only=False)[:, None] == b_qkey[None, :], -np.inf
+            )
+            # Batch-local preselection must never clip a candidate the
+            # global (rounded-cosine desc, c_id asc) rank could keep.
+            # Keep every row whose raw score is within 2e-6 of the
+            # per-query k-th largest: two scores that round equal at
+            # 6 dp differ by < 1e-6, so any candidate below that cut
+            # is strictly out-ranked by ≥ k batch-mates after rounding
+            # — regardless of c_id ties. (A fixed +N slack can clip
+            # the lowest-c_id members of a large tie group, e.g. many
+            # exact-duplicate embeddings in one Arrow batch.)
+            nb = len(rows)
+            if nb > k:
+                kth = np.partition(raw, nb - k, axis=0)[nb - k]
+                mask = raw >= (kth - 2e-6)
+            else:
+                mask = np.ones_like(raw, dtype=bool)
+            mask &= raw != -np.inf  # self-pairs never leave the batch
+            ii, jj = np.nonzero(mask)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b_qids.take(jj),
+                    c_ids.take(ii),
+                    pa.array(dots[ii, jj]),
+                    pa.array(c_n2[ii]),
+                    pa.array(b_qn2[jj]),
+                ],
+                ["q_id", "c_id", "dot", "c_n2", "q_n2"],
+            )
 
-    scored = (
-        c.join(F.broadcast(q), "__one")
-        .filter(~F.col("c_id").eqNullSafe(F.col("q_id")))
-        .select(
-            "q_id",
-            "c_id",
-            F.round(
-                _dot(F.col("c_vec"), F.col("q_vec"), integer)
-                / F.sqrt(F.col("c_n2").cast("double") * F.col("q_n2").cast("double")),
-                6,
-            ).alias("cosine"),
-        )
+    schema = T.StructType(
+        [
+            T.StructField("q_id", queries.schema[query_id_col].dataType),
+            T.StructField("c_id", corpus.schema[id_col].dataType),
+            T.StructField("dot", T.LongType()),
+            T.StructField("c_n2", T.LongType()),
+            T.StructField("q_n2", T.LongType()),
+        ]
+    )
+    scored = corpus.select(F.col(id_col), F.col(vec_col)).mapInArrow(block, schema).select(
+        "q_id",
+        "c_id",
+        F.round(
+            F.col("dot") / F.sqrt(F.col("c_n2").cast("double") * F.col("q_n2").cast("double")),
+            6,
+        ).alias("cosine"),
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -197,7 +274,7 @@ def cosine_range_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str | None = None,
-    quantize: int | None = 1_000_000,
+    quantize: int = 1_000_000,
     exclude_self: bool = True,
 ) -> DataFrame:
     """Cosine RANGE search: every corpus vector within ``threshold``
@@ -212,32 +289,27 @@ def cosine_range_search(
     collide — e.g. decontamination, where a zero-based benchmark id
     colliding with a zero-based corpus id must still be probed.
 
-    Scale shape: strictly better than top-k — the broadcast-hash join
-    against the (small) query side plus a per-row threshold filter is
-    MAP-ONLY: no window, no shuffle, nothing ranked, so the corpus
-    scan parallelizes perfectly and output size is bounded by how much
-    actually matches. With ``quantize`` set, dots/norms are exact
-    int64 so results reproduce bitwise on any engine."""
+    Scale shape: the broadcast-hash join against the (small) query
+    side plus a per-row threshold filter is MAP-ONLY: no window, no
+    shuffle, nothing ranked, so the corpus scan parallelizes perfectly
+    and output size is bounded by how much actually matches. Dots and
+    norms are exact int64, so results reproduce bitwise on any
+    engine."""
     query_id_col = query_id_col or id_col
-    if quantize:
-        cvec = _quantized_guarded(F.col(vec_col), quantize)
-        integer = True
-    else:
-        cvec = _as_double_guarded(F.col(vec_col))
-        integer = False
-    # NULL/NaN/zero-norm exclusion: same contract as cosine_topk — the
-    # guard is fused into the quantize pass (r18), poisoned components
-    # become NULL elements and the n2 > 0 filter excludes the row
+    cvec = _quantized_guarded(F.col(vec_col), quantize)
+    # NULL/NaN/zero-norm exclusion: the guard is fused into the quantize
+    # pass (r18), poisoned components become NULL elements and the
+    # n2 > 0 filter excludes the row
     c = (
         spread(corpus)
         .select(F.col(id_col).alias("c_id"), cvec.alias("c_vec"))
-        .withColumn("c_n2", _dot(F.col("c_vec"), F.col("c_vec"), integer))
+        .withColumn("c_n2", _dot(F.col("c_vec"), F.col("c_vec")))
         .filter(F.col("c_n2") > 0)
         .withColumn("__one", _pair_key("c_id"))
     )
     q = (
         queries.select(F.col(query_id_col).alias("q_id"), cvec.alias("q_vec"))
-        .withColumn("q_n2", _dot(F.col("q_vec"), F.col("q_vec"), integer))
+        .withColumn("q_n2", _dot(F.col("q_vec"), F.col("q_vec")))
         .filter(F.col("q_n2") > 0)
         .withColumn("__one", _pair_key("q_id"))
     )
@@ -250,7 +322,7 @@ def cosine_range_search(
             "q_id",
             "c_id",
             F.round(
-                _dot(F.col("c_vec"), F.col("q_vec"), integer)
+                _dot(F.col("c_vec"), F.col("q_vec"))
                 / F.sqrt(F.col("c_n2").cast("double") * F.col("q_n2").cast("double")),
                 6,
             ).alias("cosine"),
@@ -259,151 +331,7 @@ def cosine_range_search(
     )
 
 
-def cosine_topk_blocked(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str | None = None,
-    quantize: int = 1_000_000,
-) -> DataFrame:
-    """Brute-force cosine top-k via Arrow-batched matrix multiply —
-    the throughput path for the same contract as :func:`cosine_topk`.
-
-    Each corpus partition arrives as pandas batches; one numpy
-    ``(batch × dim) @ (dim × n_queries)`` int64 matmul scores a whole
-    batch against every query at once (~10-100× the per-pair
-    ``aggregate`` expression), then only rows at-or-near the per-batch
-    per-query k-th score leave Python (tie-safe cut — see the comment
-    in ``block``). Final ranking happens in Spark on the exact integer
-    dot/norm values, so results are bit-identical to the expression
-    path (and its DuckDB oracle): quantization uses half-away-from-zero
-    rounding like ``F.round``, and all emitted scores are int64 — no
-    float ever crosses an engine boundary.
-
-    Scale shape: corpus never shuffles (map-side scoring + local
-    top-k); the global window ranks only ``≈ partitions × k`` (plus
-    round-ties) candidate rows per query. Query side must fit in a
-    broadcast (same contract as the expression path)."""
-    import numpy as np
-    import pandas as pd
-
-    query_id_col = query_id_col or id_col
-    if not _integral_id(queries, query_id_col) or not _integral_id(corpus, id_col):
-        # the vectorized kernel packs ids into int64 numpy arrays; a
-        # string or NULL id would die deep in the executor with an
-        # opaque cast error — fall back to the expression path, which
-        # handles any id type with the same contract (r16 self-review)
-        return cosine_topk(
-            corpus, queries, k=k, id_col=id_col, vec_col=vec_col,
-            query_id_col=query_id_col, quantize=quantize,
-        )
-    q_rows = queries.select(F.col(query_id_col), F.col(vec_col)).collect()
-    import math as _math
-
-    # driver-side twin of _finite_vectors: a NaN query component would
-    # quantize to a garbage int64 column of the broadcast matrix and
-    # silently mis-rank every candidate for that query
-    q_rows = [
-        r
-        for r in q_rows
-        if r[0] is not None
-        and r[1] is not None
-        and all(x is not None and _math.isfinite(float(x)) for x in r[1])
-    ]
-    if not q_rows:
-        empty = "q_id long, c_id long, cosine double, rank int"
-        return corpus.sparkSession.createDataFrame([], empty)
-
-    # _np_quant, NOT a naive floor(s+0.5): the naive form diverges
-    # from F.round on repr-tie values (the 0.49999999999999994 class),
-    # which would break this path's bit-parity contract with
-    # cosine_topk and the oracle (r16 self-review)
-    def _quant(m: "np.ndarray") -> "np.ndarray":
-        return _np_quant(m, quantize)
-
-    q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-    qm = _quant(np.asarray([list(r[1]) for r in q_rows]))
-    q_n2 = (qm * qm).sum(axis=1)
-    # ship the (tiny) query matrix to executors once, not per task
-    bc = corpus.sparkSession.sparkContext.broadcast((q_ids, qm.T.copy(), q_n2))
-
-    def block(batches):
-        b_qids, b_qt, b_qn2 = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf["__cid"].to_numpy(dtype=np.int64)
-            cm = _quant(np.stack(pdf["__cvec"].to_numpy()))
-            dots = cm @ b_qt  # (batch, nq) int64 — exact
-            c_n2 = (cm * cm).sum(axis=1)
-            # Batch-local preselection must never clip a candidate the
-            # global (rounded-cosine desc, c_id asc) rank could keep.
-            # Keep every row whose raw score is within 2e-6 of the
-            # per-query k-th largest: two scores that round equal at
-            # 6 dp differ by < 1e-6, so any candidate below that cut
-            # is strictly out-ranked by ≥ k batch-mates after rounding
-            # — regardless of c_id ties. (A fixed +N slack can clip
-            # the lowest-c_id members of a large tie group, e.g. many
-            # exact-duplicate embeddings in one Arrow batch.)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                raw = dots / np.sqrt(
-                    c_n2[:, None].astype(np.float64) * b_qn2[None, :]
-                )
-            # zero-norm vectors give 0/0 = NaN, and np.partition sorts
-            # NaN LARGEST — one such row would poison the per-query
-            # kth cut (candidates silently clipped, or the whole batch
-            # emitting nothing). Zero-norm rows have no defined cosine
-            # and are excluded, like the expression path's NULL-cosine
-            # rows falling out of the top-k (r16 self-review).
-            np.putmask(raw, ~np.isfinite(raw), -np.inf)
-            np.putmask(raw, c_ids[:, None] == b_qids[None, :], -np.inf)
-            nb = len(c_ids)
-            if nb > k:
-                kth = np.partition(raw, nb - k, axis=0)[nb - k]
-                mask = raw >= (kth - 2e-6)
-            else:
-                mask = np.ones_like(raw, dtype=bool)
-            mask &= raw != -np.inf  # self-pairs never leave the batch
-            ii, jj = np.nonzero(mask)
-            rows = {
-                "q_id": b_qids[jj],
-                "c_id": c_ids[ii],
-                "dot": dots[ii, jj],
-                "c_n2": c_n2[ii],
-                "q_n2": b_qn2[jj],
-                "self": np.zeros(len(ii), dtype=bool),
-            }
-            yield pd.DataFrame(rows)
-
-    # NULL ids cannot enter the int64/stack kernel — excluded
-    # (documented divergence from the expression path, which pairs
-    # NULL-id rows; this is the triage path). _finite_vectors, not a
-    # bare isNotNull: a NaN component casts to a garbage int64 INSIDE
-    # the kernel (before the isfinite mask, which only sees the
-    # already-cast values) and emitted silently wrong candidates —
-    # the exact twin EXCLUDES such rows (r17 self-review)
-    cand = _finite_vectors(corpus, vec_col).where(
-        F.col(id_col).isNotNull()
-    ).select(
-        F.col(id_col).alias("__cid"), _as_double(F.col(vec_col)).alias("__cvec")
-    ).mapInPandas(
-        block, "q_id long, c_id long, dot long, c_n2 long, q_n2 long, self boolean"
-    )
-    scored = cand.filter(~F.col("self")).select(
-        "q_id",
-        "c_id",
-        F.round(
-            F.col("dot") / F.sqrt(F.col("c_n2").cast("double") * F.col("q_n2").cast("double")),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def _cosine(a: Column, b: Column, a_n2: Column, b_n2: Column, integer: bool) -> Column:
+def _cosine(a: Column, b: Column, a_n2: Column, b_n2: Column) -> Column:
     """6-dp rounded cosine from precomputed squared norms — NULL when
     either norm is 0 (or NULL): cosine is undefined there, and under
     ANSI mode the bare 0/0 double division is TASK-KILLING, not NaN.
@@ -418,7 +346,7 @@ def _cosine(a: Column, b: Column, a_n2: Column, b_n2: Column, integer: bool) -> 
     return F.when(
         (a_n2 > 0) & (b_n2 > 0),
         F.round(
-            _dot(a, b, integer) / F.sqrt(a_n2.cast("double") * b_n2.cast("double")), 6
+            _dot(a, b) / F.sqrt(a_n2.cast("double") * b_n2.cast("double")), 6
         ),
     )
 
@@ -489,8 +417,8 @@ def rp_topk(
     touches ``out_dim``-wide vectors only, and the full-width vectors
     are re-read for just ``k·oversample`` rows per query. The
     per-query ranking window has the same shape as cosine_topk —
-    compose with the blocked/LSH/IVF candidate structures when the
-    query side grows."""
+    compose with the LSH/IVF candidate structures when the query side
+    grows."""
     query_id_col = query_id_col or id_col
     proj = signed_projection(F.col(vec_col), out_dim)
     full = _quantized(F.col(vec_col), quantize)
@@ -510,8 +438,8 @@ def rp_topk(
                 proj.alias(f"{tag}_p"),
                 full.alias(f"{tag}_vec"),
             )
-            .withColumn(f"{tag}_pn2", _dot(F.col(f"{tag}_p"), F.col(f"{tag}_p"), True))
-            .withColumn(f"{tag}_n2", _dot(F.col(f"{tag}_vec"), F.col(f"{tag}_vec"), True))
+            .withColumn(f"{tag}_pn2", _dot(F.col(f"{tag}_p"), F.col(f"{tag}_p")))
+            .withColumn(f"{tag}_n2", _dot(F.col(f"{tag}_vec"), F.col(f"{tag}_vec")))
             .filter(F.col(f"{tag}_n2") > 0)
             .withColumn("__one", _pair_key(f"{tag}_id"))
         )
@@ -534,7 +462,7 @@ def rp_topk(
             "q_id",
             "c_id",
             _cosine(
-                F.col("c_p"), F.col("q_p"), F.col("c_pn2"), F.col("q_pn2"), True
+                F.col("c_p"), F.col("q_p"), F.col("c_pn2"), F.col("q_pn2")
             ).alias("__pcos"),
         )
     )
@@ -556,7 +484,7 @@ def rp_topk(
             "q_id",
             "c_id",
             _cosine(
-                F.col("c_vec"), F.col("q_vec"), F.col("c_n2"), F.col("q_n2"), True
+                F.col("c_vec"), F.col("q_vec"), F.col("c_n2"), F.col("q_n2")
             ).alias("cosine"),
         )
     )
@@ -564,89 +492,16 @@ def rp_topk(
     return kept.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    quantize: int = 1_000_000,
-    n_probe: int = 1,
-) -> DataFrame:
-    """Assign each vector to its ``n_probe`` nearest centroids by
-    cosine (IVF coarse quantizer). Centroids are broadcast — the corpus
-    never shuffles for assignment. Deterministic tie-break:
-    (cosine desc, centroid id asc)."""
-    cvec = _quantized(F.col(vec_col), quantize)
-    # single-valued but non-foldable key: Catalyst would fold lit==lit
-    # back into a nested-loop cross join; a derived 0 keeps the
-    # broadcast HASH join (build side = n_centroids rows). _pair_key,
-    # not the old length(cast)*0 form — that one was NULL for NULL ids
-    # (silently unassigned rows) and foldable once the id is provably
-    # non-null (r16 self-review; see _pair_key's docstring)
-    one = _pair_key
-    # NULL/NaN/zero-norm vectors and centroids excluded — the family
-    # contract (r17 self-review): a NaN component killed the whole
-    # assignment at the quantizer's ANSI long cast, a zero-norm row
-    # the cosine division
-    vecs = (
-        spread(_finite_vectors(corpus, vec_col))
-        .select(F.col(id_col), cvec.alias("__v"))
-        .withColumn("__v_n2", _dot(F.col("__v"), F.col("__v"), True))
-        .filter(F.col("__v_n2") > 0)
-        .withColumn("__one", one(id_col))
-    )
-    cents = (
-        _finite_vectors(centroids, vec_col)
-        .select(F.col(id_col).alias("centroid_id"), cvec.alias("__c"))
-        .withColumn("__c_n2", _dot(F.col("__c"), F.col("__c"), True))
-        .filter(F.col("__c_n2") > 0)
-        .withColumn("__one", one("centroid_id"))
-    )
-
-    scored = vecs.join(F.broadcast(cents), "__one").select(
-        id_col,
-        "centroid_id",
-        _cosine(F.col("__v"), F.col("__c"), F.col("__v_n2"), F.col("__c_n2"), True).alias(
-            "__cos"
-        ),
-    )
-    if n_probe == 1:
-        # nearest-only: a max_by hash aggregate (map-side partials, no
-        # sort) instead of a window — the ordering struct (cos desc,
-        # centroid asc via negation) is unique per row, so the result
-        # is identical to the row_number path bit-for-bit
-        return scored.groupBy(id_col).agg(
-            F.max_by(
-                "centroid_id",
-                F.struct(F.col("__cos"), (-F.col("centroid_id")).alias("__nc")),
-            ).alias("centroid_id")
-        )
-    w = Window.partitionBy(id_col).orderBy(F.col("__cos").desc(), F.col("centroid_id").asc())
-    return (
-        scored.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= n_probe)
-        .select(id_col, "centroid_id")
-    )
-
-
-def _integral_id(df: DataFrame, col: str) -> bool:
-    """Whether ``col`` has an integral type. The numpy stages carry
-    ids as int64 numpy arrays (seed and centroid ids, SemDeDup's
-    ``a_id < b_id`` order), where a string id would die deep in an
-    executor with an opaque cast error."""
+def _require_integral_id(df: DataFrame, col: str) -> None:
+    """Refuse a non-integral id column up front. The numpy stages carry
+    seed and centroid ids (and SemDeDup's ``a_id < b_id`` order) as
+    int64 numpy arrays, where a string id would die deep in an executor
+    with an opaque cast error."""
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
-    return isinstance(
-        df.schema[col].dataType, (ByteType, ShortType, IntegerType, LongType)
-    )
-
-
-def _require_integral_id(df: DataFrame, col: str) -> None:
-    """Refuse a non-integral id column up front (see :func:`_integral_id`)."""
-    if not _integral_id(df, col):
-        raise ValueError(
-            f"id column {col!r} must be integral, got {df.schema[col].dataType.simpleString()}"
-        )
+    dt = df.schema[col].dataType
+    if not isinstance(dt, (ByteType, ShortType, IntegerType, LongType)):
+        raise ValueError(f"id column {col!r} must be integral, got {dt.simpleString()}")
 
 
 def _round_half_up(p: float) -> int:
@@ -712,29 +567,30 @@ def _np_round6(a):
     return out.reshape(a.shape)
 
 
-def _np_assign(Q, n2, C, cn2, cids):
-    """Nearest-centroid ids for a quantized batch: exact int64 dot
-    matmul, IEEE double cosine, 6-dp decimal rounding, argmax with the
-    (cos desc, cid asc) tie-break — ``np.argmax`` returns the FIRST
-    max and ``cids`` is ascending, which IS max_by(cid, (cos, -cid)).
-    Every norm must be nonzero (callers drop zero-norm rows, and
-    :func:`_prep_centroids` zero-norm centroids): a 0/0 NaN would win
-    the argmax."""
+def _np_assign(Q, n2, C, cn2, cids, n_probe: int = 1):
+    """The ``n_probe`` nearest centroid ids per row of a quantized
+    batch, shape (rows, min(n_probe, k)): exact int64 dot matmul, IEEE
+    double cosine, 6-dp decimal rounding, then a STABLE descending
+    argsort — ``cids`` is ascending, so equal rounded cosines keep the
+    lower id first, which is the (cos desc, cid asc) tie-break. Every
+    norm must be nonzero (callers drop zero-norm rows, and
+    :func:`_prep_centroids` zero-norm centroids): a 0/0 NaN would sort
+    first."""
     import numpy as np
 
     dots = Q @ C.T
     raw = dots / np.sqrt(n2[:, None].astype(np.float64) * cn2[None, :].astype(np.float64))
     cos = _np_round6(raw)
-    return cids[np.argmax(cos, axis=1)]
+    return cids[np.argsort(-cos, axis=1, kind="stable")[:, :n_probe]]
 
 
 def _prep_centroids(centroid_rows: list[tuple[int, list[float]]], quantize: int):
     """(ascending cids, quantized k×dim int64 matrix, k norms) — the
     driver-held form every numpy stage broadcasts. Quantization uses
-    :func:`_round_half_up` (bit-exact ``F.round`` parity). Centroids
-    :func:`ivf_assign` excludes are dropped here too: a NULL vector,
-    a NULL/NaN component, and a zero norm (no cosine to it). With none
-    left the table is empty and the stages assign nothing."""
+    :func:`_round_half_up` (bit-exact ``F.round`` parity). A centroid
+    with no cosine is dropped: a NULL vector, a NULL/NaN component, or
+    a zero norm. With none left the table is empty and the stages
+    assign nothing."""
     import math
 
     import numpy as np
@@ -751,6 +607,12 @@ def _prep_centroids(centroid_rows: list[tuple[int, list[float]]], quantize: int)
         return cids, cids.reshape(0, 0), cids
     C = np.asarray([q for _, q in kept], dtype=np.int64)
     return cids, C, (C * C).sum(axis=1)
+
+
+def _seed(corpus: DataFrame, n: int, id_col: str) -> DataFrame:
+    """The ``n`` lowest-id rows (NULL ids skipped): the Lloyd trainers'
+    seed and the default IVF quantizer."""
+    return corpus.where(F.col(id_col).isNotNull()).orderBy(F.col(id_col).asc()).limit(n)
 
 
 def kmeans_train_rows(
@@ -788,9 +650,7 @@ def kmeans_train_rows(
     # a NaN component would silently train a garbage centroid via
     # NaN.astype(int64) — exclude all three (r16/r17 self-review)
     corpus = _finite_vectors(corpus, vec_col).where(F.col(id_col).isNotNull())
-    seed = (
-        corpus.orderBy(F.col(id_col).asc()).limit(k).select(id_col, vec_col).collect()
-    )
+    seed = _seed(corpus, k, id_col).select(id_col, vec_col).collect()
     cents = [(int(r[0]), [float(x) for x in r[1]]) for r in seed]
     dim = len(cents[0][1]) if cents else 0
     spark = corpus.sparkSession
@@ -811,7 +671,7 @@ def kmeans_train_rows(
                 Q = _np_quant(np.stack(pdf["__dv"].to_numpy()), quantize)
                 n2 = (Q * Q).sum(axis=1)
                 Q, n2 = Q[n2 > 0], n2[n2 > 0]
-                a = _np_assign(Q, n2, b_C, b_cn2, b_cids)
+                a = _np_assign(Q, n2, b_C, b_cn2, b_cids)[:, 0]
                 for cid in np.unique(a):
                     members = Q[a == cid]
                     yield pd.DataFrame(
@@ -848,54 +708,65 @@ def kmeans_train_rows(
     return cents
 
 
-def ivf_assign_blocked(
+def _centroid_rows(centroids: DataFrame, id_col: str, vec_col: str) -> list:
+    """Collect a centroid frame (k rows) as ``[(cid, vec)]``; NULL ids
+    are skipped. Centroid ids must be integral."""
+    _require_integral_id(centroids, id_col)
+    return [
+        (int(r[0]), r[1])
+        for r in centroids.where(F.col(id_col).isNotNull()).select(id_col, vec_col).collect()
+    ]
+
+
+def ivf_assign(
     corpus: DataFrame,
-    centroid_rows: list[tuple[int, list[float]]],
+    centroids: DataFrame | list[tuple[int, list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     quantize: int = 1_000_000,
+    n_probe: int = 1,
     keep_vec: bool = False,
 ) -> DataFrame:
-    """``ivf_assign(n_probe=1)`` for a driver-held centroid table as
-    an Arrow-batched numpy stage: map-only (no join, no aggregate), one
-    int64 matmul per batch, the same assignment (see :func:`_np_assign`
-    for the rounding/tie-break argument) and the same exclusions (NULL
-    vectors, NULL/NaN components, zero norms). ``keep_vec=True``
-    carries the double vector through for a downstream per-cluster
-    stage. The id column must be integral."""
-    import numpy as np
-    import pandas as pd
+    """Assign each vector to its ``n_probe`` nearest centroids by
+    cosine (IVF coarse quantizer): one row (id, centroid_id) per
+    vector and probe, with the deterministic (cosine desc, centroid id
+    asc) tie-break (see :func:`_np_assign`).
 
-    _require_integral_id(corpus, id_col)
-    bc = corpus.sparkSession.sparkContext.broadcast(
-        _prep_centroids(centroid_rows, quantize)
-    )
-    schema = f"{id_col} long, centroid_id long" + (
-        f", {vec_col} array<double>" if keep_vec else ""
-    )
+    ``centroids`` is a frame of k rows (``id_col``, ``vec_col``),
+    collected once, or the driver rows ``[(cid, vec)]`` themselves.
+    Centroid ids must be integral. The table is broadcast and each
+    corpus Arrow batch is assigned by one int64 matmul — map-only, no
+    join, no aggregate. The corpus id keeps its own Spark type and a
+    NULL id stays NULL. NULL vectors, NULL/NaN/infinite components and
+    zero norms are excluded (no cosine). ``keep_vec=True`` carries the
+    vector through for a downstream per-cluster stage."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    if isinstance(centroids, DataFrame):
+        centroids = _centroid_rows(centroids, id_col, vec_col)
+    bc = corpus.sparkSession.sparkContext.broadcast(_prep_centroids(centroids, quantize))
+    src = corpus.select(F.col(id_col), F.col(vec_col))
+    fields = [src.schema[0], T.StructField("centroid_id", T.LongType())]
+    if keep_vec:
+        fields.append(src.schema[1])
 
     def block(batches):
         b_cids, b_C, b_cn2 = bc.value
-        for pdf in batches:
-            if pdf.empty or not len(b_cids):
+        for batch in batches:
+            if not len(b_cids):
                 continue
-            Q = _np_quant(np.stack(pdf["__dv"].to_numpy()), quantize)
-            n2 = (Q * Q).sum(axis=1)
-            nz = n2 > 0
-            out = {
-                id_col: pdf["__id"].to_numpy(dtype=np.int64)[nz],
-                "centroid_id": _np_assign(Q[nz], n2[nz], b_C, b_cn2, b_cids),
-            }
+            rows, Q, n2 = _arrow_quantized(batch.column(1), quantize, b_C.shape[1])
+            probes = _np_assign(Q, n2, b_C, b_cn2, b_cids, n_probe)
+            take = np.repeat(rows, probes.shape[1])
+            cols = [batch.column(0).take(take), pa.array(probes.ravel())]
             if keep_vec:
-                out[vec_col] = pdf["__dv"][nz].to_numpy()
-            yield pd.DataFrame(out)
+                cols.append(batch.column(1).take(take))
+            yield pa.RecordBatch.from_arrays(cols, [f.name for f in fields])
 
     # no spread(): vectorized-matmul stage — see kmeans_train_rows
-    return (
-        _finite_vectors(corpus, vec_col)
-        .select(F.col(id_col).alias("__id"), _as_double(F.col(vec_col)).alias("__dv"))
-        .mapInPandas(block, schema)
-    )
+    return src.mapInArrow(block, T.StructType(fields))
 
 
 def kmeans_train(
@@ -943,12 +814,13 @@ def ivf_cosine_topk(
     # default centroid seed
     corpus = _finite_vectors(corpus, vec_col)
     queries = _finite_vectors(queries, vec_col)
-    if centroids is None:
-        centroids = corpus.orderBy(F.col(id_col).asc()).limit(n_centroids)
-    c_assign = ivf_assign(corpus, centroids, id_col, vec_col, n_probe=1).withColumnRenamed(
+    cents = _centroid_rows(
+        _seed(corpus, n_centroids, id_col) if centroids is None else centroids, id_col, vec_col
+    )
+    c_assign = ivf_assign(corpus, cents, id_col, vec_col, n_probe=1).withColumnRenamed(
         id_col, "c_id"
     )
-    q_assign = ivf_assign(queries, centroids, id_col, vec_col, n_probe=n_probe).withColumnRenamed(
+    q_assign = ivf_assign(queries, cents, id_col, vec_col, n_probe=n_probe).withColumnRenamed(
         id_col, "q_id"
     )
     cand = (
@@ -960,10 +832,10 @@ def ivf_cosine_topk(
 
     cvec = corpus.select(
         F.col(id_col).alias("c_id"), _quantized(F.col(vec_col), 1_000_000).alias("c_vec")
-    ).withColumn("c_n2", _dot(F.col("c_vec"), F.col("c_vec"), True))
+    ).withColumn("c_n2", _dot(F.col("c_vec"), F.col("c_vec")))
     qvec = queries.select(
         F.col(id_col).alias("q_id"), _quantized(F.col(vec_col), 1_000_000).alias("q_vec")
-    ).withColumn("q_n2", _dot(F.col("q_vec"), F.col("q_vec"), True))
+    ).withColumn("q_n2", _dot(F.col("q_vec"), F.col("q_vec")))
     scored = (
         cand.join(cvec, "c_id")
         .join(F.broadcast(qvec), "q_id")
@@ -971,7 +843,7 @@ def ivf_cosine_topk(
             "q_id",
             "c_id",
             _cosine(
-                F.col("c_vec"), F.col("q_vec"), F.col("c_n2"), F.col("q_n2"), True
+                F.col("c_vec"), F.col("q_vec"), F.col("c_n2"), F.col("q_n2")
             ).alias("cosine"),
         )
     )
@@ -1039,7 +911,7 @@ def mmr_rerank(
         .select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__raw"))
         .join(F.broadcast(pool_ids), "__id")
         .select("__id", _quantized(F.col("__raw"), quantize).alias("__v"))
-        .withColumn("__n2", _dot(F.col("__v"), F.col("__v"), True))
+        .withColumn("__n2", _dot(F.col("__v"), F.col("__v")))
     )
     p = rel.join(vecs, rel.c_id == vecs.__id).select("q_id", "c_id", "__v", "__n2")
     a = p.select("q_id", F.col("c_id").alias("a_id"), F.col("__v").alias("__av"), F.col("__n2").alias("__an2"))
@@ -1049,7 +921,7 @@ def mmr_rerank(
         .filter(F.col("a_id") != F.col("b_id"))
         .select(
             "q_id", "a_id", "b_id",
-            _cosine(F.col("__av"), F.col("__bv"), F.col("__an2"), F.col("__bn2"), True).alias("sim"),
+            _cosine(F.col("__av"), F.col("__bv"), F.col("__an2"), F.col("__bn2")).alias("sim"),
         )
     )
     sims = bar(sims)
@@ -1251,7 +1123,7 @@ def lsh_cosine_topk(
             F.col(id_col).alias("c_id"),
             _quantized(F.col(vec_col), 1_000_000).alias("c_vec"),
         )
-        .withColumn("c_n2", _dot(F.col("c_vec"), F.col("c_vec"), True))
+        .withColumn("c_n2", _dot(F.col("c_vec"), F.col("c_vec")))
         .filter(F.col("c_n2") > 0)
     )
     qvec = (
@@ -1260,7 +1132,7 @@ def lsh_cosine_topk(
             F.col(id_col).alias("q_id"),
             _quantized(F.col(vec_col), 1_000_000).alias("q_vec"),
         )
-        .withColumn("q_n2", _dot(F.col("q_vec"), F.col("q_vec"), True))
+        .withColumn("q_n2", _dot(F.col("q_vec"), F.col("q_vec")))
         .filter(F.col("q_n2") > 0)
     )
     scored = (
@@ -1270,7 +1142,7 @@ def lsh_cosine_topk(
             "q_id",
             "c_id",
             _cosine(
-                F.col("c_vec"), F.col("q_vec"), F.col("c_n2"), F.col("q_n2"), True
+                F.col("c_vec"), F.col("q_vec"), F.col("c_n2"), F.col("q_n2")
             ).alias("cosine"),
         )
     )
@@ -1337,7 +1209,7 @@ def knn_graph(
     # nodes have no defined-cosine edges and drop from the graph
     vec = _finite_vectors(corpus, vec_col).select(
         F.col(id_col).alias("__id"), _quantized(F.col(vec_col), quantize).alias("__v")
-    ).withColumn("__n2", _dot(F.col("__v"), F.col("__v"), True)).filter(F.col("__n2") > 0)
+    ).withColumn("__n2", _dot(F.col("__v"), F.col("__v"))).filter(F.col("__n2") > 0)
     s = vec.select(
         F.col("__id").alias("src"), F.col("__v").alias("s_v"), F.col("__n2").alias("s_n2")
     )
@@ -1375,7 +1247,7 @@ def knn_graph(
         with_dot = paired.mapInPandas(_score, schema=out_schema)
     else:
         with_dot = paired.select(
-            "src", "dst", "s_n2", "d_n2", _dot(F.col("s_v"), F.col("d_v"), True).alias("dot")
+            "src", "dst", "s_n2", "d_n2", _dot(F.col("s_v"), F.col("d_v")).alias("dot")
         )
     scored = with_dot.select(
         "src",
@@ -1441,12 +1313,7 @@ def pq_train_rows(
     # crash int(r[0]); NULL embeddings crash the executor stack; NaN
     # components silently train garbage codewords via NaN.astype(int64)
     corpus = _finite_vectors(corpus, vec_col).where(F.col(id_col).isNotNull())
-    seed = (
-        corpus.orderBy(F.col(id_col).asc())
-        .limit(n_codes)
-        .select(id_col, vec_col)
-        .collect()
-    )
+    seed = _seed(corpus, n_codes, id_col).select(id_col, vec_col).collect()
     # quantize seeds driver-side with the exact F.round twin
     books: list[dict[int, list[int]]] = []
     for s in range(m):
@@ -1701,7 +1568,7 @@ def _adc_topk(
         "q_id",
         "subspace",
         "code",
-        _dot(F.col("__qs"), F.col("__c"), True).alias("__dt"),
+        _dot(F.col("__qs"), F.col("__c")).alias("__dt"),
         "__cn2",
     )
     qn2 = queries.select(
@@ -1709,7 +1576,6 @@ def _adc_topk(
         _dot(
             _quantized(F.col(vec_col), quantize),
             _quantized(F.col(vec_col), quantize),
-            True,
         ).alias("__qn2"),
     ).filter(F.col("__qn2") > 0)
     scored = (
@@ -1746,10 +1612,10 @@ def _adc_topk(
     )
     cvec = _finite_vectors(corpus, vec_col).select(
         F.col(id_col).alias("c_id"), _quantized(F.col(vec_col), quantize).alias("c_vec")
-    ).withColumn("c_n2", _dot(F.col("c_vec"), F.col("c_vec"), True)).filter(F.col("c_n2") > 0)
+    ).withColumn("c_n2", _dot(F.col("c_vec"), F.col("c_vec"))).filter(F.col("c_n2") > 0)
     qvec = queries.select(
         F.col(id_col).alias("q_id"), _quantized(F.col(vec_col), quantize).alias("q_vec")
-    ).withColumn("q_n2", _dot(F.col("q_vec"), F.col("q_vec"), True)).filter(F.col("q_n2") > 0)
+    ).withColumn("q_n2", _dot(F.col("q_vec"), F.col("q_vec"))).filter(F.col("q_n2") > 0)
     exact = (
         cand.join(cvec, "c_id")
         .join(F.broadcast(qvec), "q_id")
@@ -1757,7 +1623,7 @@ def _adc_topk(
             "q_id",
             "c_id",
             _cosine(
-                F.col("c_vec"), F.col("q_vec"), F.col("c_n2"), F.col("q_n2"), True
+                F.col("c_vec"), F.col("q_vec"), F.col("c_n2"), F.col("q_n2")
             ).alias("cosine"),
         )
     )
@@ -1796,11 +1662,11 @@ def ivfpq_topk(
     # NULL/NaN exclusion at entry (family contract, r17 self-review)
     corpus = _finite_vectors(corpus, vec_col)
     queries = _finite_vectors(queries, vec_col)
-    centroids = corpus.orderBy(F.col(id_col).asc()).limit(n_centroids)
-    c_assign = ivf_assign(corpus, centroids, id_col, vec_col, quantize, n_probe=1).withColumnRenamed(
+    cents = _centroid_rows(_seed(corpus, n_centroids, id_col), id_col, vec_col)
+    c_assign = ivf_assign(corpus, cents, id_col, vec_col, quantize, n_probe=1).withColumnRenamed(
         id_col, "c_id"
     )
-    q_assign = ivf_assign(queries, centroids, id_col, vec_col, quantize, n_probe=n_probe).withColumnRenamed(
+    q_assign = ivf_assign(queries, cents, id_col, vec_col, quantize, n_probe=n_probe).withColumnRenamed(
         id_col, "q_id"
     )
     cand = (
@@ -1832,7 +1698,7 @@ def ivfpq_topk(
         "q_id",
         "subspace",
         "code",
-        _dot(F.col("__qs"), F.col("__c"), True).alias("__dt"),
+        _dot(F.col("__qs"), F.col("__c")).alias("__dt"),
         "__cn2",
     )
     qn2 = queries.select(
@@ -1840,7 +1706,6 @@ def ivfpq_topk(
         _dot(
             _quantized(F.col(vec_col), quantize),
             _quantized(F.col(vec_col), quantize),
-            True,
         ).alias("__qn2"),
     ).filter(F.col("__qn2") > 0)
     scored = (
@@ -2155,5 +2020,5 @@ def pca_project(
     comp = F.array(*[F.lit(int(x)).cast("long") for x in component])
     q = _quantized(F.col(vec_col), quantize)
     return df.where(F.col(vec_col).isNotNull()).select(
-        id_col, _dot(q, comp, True).alias("proj_q")
+        id_col, _dot(q, comp).alias("proj_q")
     )

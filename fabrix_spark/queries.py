@@ -1113,7 +1113,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("cents").cast("double") / F.count("*")).alias("__mean")
     )
     # single-valued non-foldable key → broadcast HASH join, not a
-    # nested-loop node (same trick as similarity.ivf_assign)
+    # nested-loop node (see similarity._pair_key)
     one = lambda c: (F.length(F.col(c).cast("string")) * 0).alias("__one")  # noqa: E731
     return (
         v.withColumn("__one", one("l_partkey"))
@@ -4067,20 +4067,6 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     return similarity.cosine_topk(emb, queries, k=5)
-
-
-@register(
-    "sim_cosine_topk_blocked",
-    # bit-identical contract to sim_cosine_topk (exact int64 dot/norm
-    # math on both paths) — same oracle, different physical plan:
-    # Arrow-batched numpy matmul + batch-local top-k instead of the
-    # per-pair aggregate expression
-    oracle=REGISTRY["sim_cosine_topk"].oracle,
-)
-def sim_cosine_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return similarity.cosine_topk_blocked(emb, queries, k=5)
 
 
 def _lsh_topk_oracle(n_planes: int = 6, n_tables: int = 4, dim: int = 64, k: int = 5) -> str:

@@ -1,10 +1,12 @@
-"""All-DataFrame Lloyd trainers: the multi-iteration references for the
-Arrow/numpy trainers in ``fabrix_spark.operators.similarity``.
+"""All-DataFrame references for the Arrow/numpy stages in
+``fabrix_spark.operators.similarity``: the brute-force cosine top-k
+and IVF assignment as Spark expressions over a broadcast join, and the
+Lloyd trainers built on them.
 
-The registry's DuckDB oracles re-derive one Lloyd iteration; these
-loops give the same integer-domain recipe for any number of
-iterations as plain DataFrame ops (broadcast assignment, posexplode
-means), so the numpy trainers are pinned against them bit for bit.
+The registry's DuckDB oracles re-derive one Lloyd iteration and the
+registry's query shapes; these give the same integer-domain recipes
+for any iteration count, probe count and id type as plain DataFrame
+ops, so the numpy stages are pinned against them bit for bit.
 """
 
 from __future__ import annotations
@@ -14,14 +16,101 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from fabrix_spark.operators.similarity import (
+    _cosine,
     _dot,
     _finite_vectors,
     _pair_key,
     _quantized,
+    _quantized_guarded,
     _sub,
-    ivf_assign,
 )
 from fabrix_spark.operators.util import spread
+
+
+def cosine_topk_expr(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str | None = None,
+    quantize: int = 1_000_000,
+) -> DataFrame:
+    """``cosine_topk`` as expressions: corpus × broadcast queries on a
+    single-valued hash key, exact int64 dots, null-safe self-exclusion,
+    and the (cosine desc, c_id asc) window. NULL/NaN components and
+    zero norms drop at ``n2 > 0``."""
+    query_id_col = query_id_col or id_col
+    cvec = _quantized_guarded(F.col(vec_col), quantize)
+    c = (
+        spread(corpus)
+        .select(F.col(id_col).alias("c_id"), cvec.alias("c_vec"))
+        .withColumn("c_n2", _dot(F.col("c_vec"), F.col("c_vec")))
+        .filter(F.col("c_n2") > 0)
+        .withColumn("__one", _pair_key("c_id"))
+    )
+    q = (
+        queries.select(F.col(query_id_col).alias("q_id"), cvec.alias("q_vec"))
+        .withColumn("q_n2", _dot(F.col("q_vec"), F.col("q_vec")))
+        .filter(F.col("q_n2") > 0)
+        .withColumn("__one", _pair_key("q_id"))
+    )
+    scored = (
+        c.join(F.broadcast(q), "__one")
+        .filter(~F.col("c_id").eqNullSafe(F.col("q_id")))
+        .select(
+            "q_id",
+            "c_id",
+            F.round(
+                _dot(F.col("c_vec"), F.col("q_vec"))
+                / F.sqrt(F.col("c_n2").cast("double") * F.col("q_n2").cast("double")),
+                6,
+            ).alias("cosine"),
+        )
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def ivf_assign_join(
+    corpus: DataFrame,
+    centroids: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    quantize: int = 1_000_000,
+    n_probe: int = 1,
+) -> DataFrame:
+    """``ivf_assign`` as a broadcast join of the corpus against the
+    centroid frame: the ``n_probe`` best centroids per id by the
+    (cosine desc, centroid id asc) window. NULL vectors, NULL/NaN
+    components and zero norms are excluded. Rows group by id, so the
+    corpus ids must be distinct and non-NULL."""
+    cvec = _quantized(F.col(vec_col), quantize)
+    vecs = (
+        spread(_finite_vectors(corpus, vec_col))
+        .select(F.col(id_col), cvec.alias("__v"))
+        .withColumn("__v_n2", _dot(F.col("__v"), F.col("__v")))
+        .filter(F.col("__v_n2") > 0)
+        .withColumn("__one", _pair_key(id_col))
+    )
+    cents = (
+        _finite_vectors(centroids, vec_col)
+        .select(F.col(id_col).alias("centroid_id"), cvec.alias("__c"))
+        .withColumn("__c_n2", _dot(F.col("__c"), F.col("__c")))
+        .filter(F.col("__c_n2") > 0)
+        .withColumn("__one", _pair_key("centroid_id"))
+    )
+    scored = vecs.join(F.broadcast(cents), "__one").select(
+        id_col,
+        "centroid_id",
+        _cosine(F.col("__v"), F.col("__c"), F.col("__v_n2"), F.col("__c_n2")).alias("__cos"),
+    )
+    w = Window.partitionBy(id_col).orderBy(F.col("__cos").desc(), F.col("centroid_id").asc())
+    return (
+        scored.withColumn("__r", F.row_number().over(w))
+        .filter(F.col("__r") <= n_probe)
+        .select(id_col, "centroid_id")
+    )
 
 
 def kmeans_train_df(
@@ -33,13 +122,13 @@ def kmeans_train_df(
     quantize: int = 1_000_000,
 ) -> DataFrame:
     """Seed = the k lowest-id vectors; each iteration assigns by
-    cosine (:func:`ivf_assign`) and recomputes every centroid as the
-    rounded int64 component mean. Returns (id_col, vec_col)."""
+    cosine (:func:`ivf_assign_join`) and recomputes every centroid as
+    the rounded int64 component mean. Returns (id_col, vec_col)."""
     corpus = _finite_vectors(corpus, vec_col).where(F.col(id_col).isNotNull())
     cents = corpus.orderBy(F.col(id_col).asc()).limit(k).select(id_col, vec_col)
     for _ in range(iters):
-        assign = ivf_assign(corpus, cents, id_col=id_col, vec_col=vec_col,
-                            quantize=quantize, n_probe=1)
+        assign = ivf_assign_join(corpus, cents, id_col=id_col, vec_col=vec_col,
+                                 quantize=quantize, n_probe=1)
         qv = spread(corpus).select(F.col(id_col), _quantized(F.col(vec_col), quantize).alias("__q"))
         comp = assign.join(qv, id_col).select(
             "centroid_id", F.posexplode("__q").alias("dim", "val")
@@ -76,7 +165,7 @@ def l2_assign(vecs: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
             "code",
             (
                 F.col("__n2")
-                - F.lit(2) * _dot(F.col("__v"), F.col("__c"), True)
+                - F.lit(2) * _dot(F.col("__v"), F.col("__c"))
                 + F.col("__cn2")
             ).alias("__d2"),
         )
@@ -98,7 +187,7 @@ def _subvectors(corpus: DataFrame, s: int, sub_dim: int, id_col: str, vec_col: s
             F.col(id_col),
             _quantized(_sub(F.col(vec_col), s, sub_dim), quantize).alias("__v"),
         )
-        .withColumn("__n2", _dot(F.col("__v"), F.col("__v"), True))
+        .withColumn("__n2", _dot(F.col("__v"), F.col("__v")))
     )
 
 
@@ -145,7 +234,7 @@ def pq_train_df(
                         lambda st: st["__cc"],
                     ).alias("__c")
                 )
-                .withColumn("__cn2", _dot(F.col("__c"), F.col("__c"), True))
+                .withColumn("__cn2", _dot(F.col("__c"), F.col("__c")))
             )
         parts.append(cents.select(F.lit(s).alias("subspace"), "code", "__c", "__cn2"))
     out = parts[0]

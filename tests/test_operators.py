@@ -220,9 +220,19 @@ def test_jaccard_pairs(spark):
     assert all(3 not in p for p in pairs)
 
 
+def _shingle_sets_expr(df, text_col, id_col, n):
+    """Expression-pipeline twin of the ``dedup._shingle_frame`` kernel:
+    the bit-equality reference the kernel is pinned against. Same row
+    contract as ``dedup._shingle_sets`` (NULL-text exclusion)."""
+    return df.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col).alias("__id"),
+        F.array_distinct(dedup.shingles(F.col(text_col), n)).alias("__set"),
+    )
+
+
 def test_shingle_kernel_matches_expression_pipeline(spark):
     """The r18 Arrow shingle/signature kernel must be BIT-identical to
-    the expression pipeline it replaced (_shingle_sets_expr +
+    the expression pipeline it replaced (_shingle_sets_expr above +
     transform/array_min minhash): same distinct-shingle arrays in the
     same first-occurrence order, same md5-derived h32 mins — over a
     synthetic corpus AND adversarial whitespace. Java-regex semantics
@@ -254,12 +264,12 @@ def test_shingle_kernel_matches_expression_pipeline(spark):
         for i in range(60)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    exp_sets = {r["__id"]: r["__set"] for r in dedup._shingle_sets_expr(df, "text", "doc_id", 3).collect()}
+    exp_sets = {r["__id"]: r["__set"] for r in _shingle_sets_expr(df, "text", "doc_id", 3).collect()}
     got_sets = {r["__id"]: r["__set"] for r in dedup._shingle_sets(df, "text", "doc_id", 3).collect()}
     assert got_sets == exp_sets
 
     # signatures: kernel vs the expression path over materialized sets
-    sets = dedup._shingle_sets_expr(df, "text", "doc_id", 3).localCheckpoint()
+    sets = _shingle_sets_expr(df, "text", "doc_id", 3).localCheckpoint()
     exp_sigs = {
         r["doc_id"]: tuple(r[f"mh_{i}"] for i in range(16))
         for r in dedup.minhash_signatures(df, 16, 3, "text", "doc_id", sets=sets).collect()
@@ -820,40 +830,62 @@ def test_rebalance_groups(spark):
     )
 
 
-def test_cosine_topk_blocked_matches_expression_path(emb):
+def _topk_tuples(df):
+    return sorted(
+        ((r["q_id"], r["c_id"], r["cosine"], r["rank"]) for r in df.collect()),
+        key=lambda t: (str(t[0]), t[3]),
+    )
+
+
+def test_cosine_topk_matches_expression_reference(emb):
+    """The Arrow/numpy cosine_topk is bit-identical to the all-expression
+    recipe (broadcast join, per-pair aggregate dots) — for long ids, for
+    string ids, and for NULL ids, which pair and are self-excluded
+    null-safely (a NULL-id query never returns a NULL-id corpus row)."""
+    from tests.lloyd_reference import cosine_topk_expr
+
     corpus, queries = emb, emb.filter(F.col("vec_id") < 4)
-    a = similarity.cosine_topk(corpus, queries, k=3)
-    b = similarity.cosine_topk_blocked(corpus, queries, k=3)
-    key = lambda r: (r["q_id"], r["rank"])  # noqa: E731
-    ra = sorted(a.collect(), key=key)
-    rb = sorted(b.collect(), key=key)
-    assert [(r["q_id"], r["c_id"], r["cosine"], r["rank"]) for r in ra] == [
-        (r["q_id"], r["c_id"], r["cosine"], r["rank"]) for r in rb
-    ]
+    assert _topk_tuples(similarity.cosine_topk(corpus, queries, k=3)) == _topk_tuples(
+        cosine_topk_expr(corpus, queries, k=3)
+    )
+
+    s = emb.withColumn("vec_id", F.col("vec_id").cast("string"))
+    sq = s.filter(F.col("vec_id").isin("0", "1", "2"))
+    got = _topk_tuples(similarity.cosine_topk(s, sq, k=3))
+    assert got == _topk_tuples(cosine_topk_expr(s, sq, k=3))
+    assert {t[0] for t in got} == {"0", "1", "2"}
+
+    n = emb.withColumn(
+        "vec_id", F.when(F.col("vec_id") % 5 == 1, None).otherwise(F.col("vec_id"))
+    )
+    nq = n.filter(F.col("vec_id").isNull() | (F.col("vec_id") == 0))
+    got = _topk_tuples(similarity.cosine_topk(n, nq, k=3))
+    assert got == _topk_tuples(cosine_topk_expr(n, nq, k=3))
+    assert {t[0] for t in got} == {None, 0}
+    assert all(t[1] is not None for t in got if t[0] is None)
 
 
-def test_cosine_topk_blocked_empty_queries(emb):
-    out = similarity.cosine_topk_blocked(emb, emb.filter(F.col("vec_id") < 0), k=3)
+def test_cosine_topk_empty_queries(emb):
+    out = similarity.cosine_topk(emb, emb.filter(F.col("vec_id") < 0), k=3)
     assert out.count() == 0
 
 
-def test_cosine_topk_blocked_tie_group_larger_than_k(spark):
+def test_cosine_topk_tie_group_larger_than_k(spark):
     """Many exact-duplicate embeddings in ONE batch: the global
     tie-break is (cosine desc, c_id asc), so the top-k must be the
     LOWEST c_ids of the tie group — a fixed batch-local slack would
-    clip them. The blocked path must match the expression path."""
+    clip them."""
+    from tests.lloyd_reference import cosine_topk_expr
+
     dups = [(i, [1.0, 2.0, 3.0]) for i in range(30)]  # 30 > k + 8 slack
     rows = dups + [(100, [-3.0, 1.0, 0.5]), (101, [0.1, 0.2, 0.9])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(1)
     queries = df.filter(F.col("vec_id") == 100)
-    exact = similarity.cosine_topk(df, queries, k=5).collect()
-    blocked = similarity.cosine_topk_blocked(df, queries, k=5).collect()
-    key = lambda r: (r["q_id"], r["rank"])  # noqa: E731
-    tup = lambda rs: [(r["q_id"], r["c_id"], r["cosine"], r["rank"]) for r in sorted(rs, key=key)]  # noqa: E731
-    assert tup(blocked) == tup(exact)
+    got = _topk_tuples(similarity.cosine_topk(df, queries, k=5))
+    assert got == _topk_tuples(cosine_topk_expr(df, queries, k=5))
     # the tie group contributes its LOWEST c_ids (0..n), not arbitrary members
-    tie_ids = [r["c_id"] for r in sorted(blocked, key=key) if r["c_id"] < 100]
-    assert tie_ids == sorted(tie_ids) and tie_ids == list(range(len(tie_ids)))
+    tie_ids = [t[1] for t in got if t[1] < 100]
+    assert tie_ids == list(range(len(tie_ids)))
 
 
 def test_weighted_sample(spark):
@@ -1702,11 +1734,10 @@ def test_chunk_documents_model(spark):
 def test_kmeans_fast_trainer_matches_dataframe_trainer(spark, sf_dir):
     """kmeans_train_rows (driver-held centroids, numpy partial sums)
     must be bit-identical to the all-DataFrame Lloyd loop over two
-    iterations (the registry oracles cover one), and the Arrow-blocked
-    numpy assignment must be bit-identical to the broadcast-join
-    ivf_assign."""
+    iterations (the registry oracles cover one), and the numpy
+    ivf_assign must be bit-identical to the broadcast-join reference."""
     from fabrix_spark.operators import similarity
-    from tests.lloyd_reference import kmeans_train_df
+    from tests.lloyd_reference import ivf_assign_join, kmeans_train_df
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     want = sorted(
@@ -1719,9 +1750,82 @@ def test_kmeans_fast_trainer_matches_dataframe_trainer(spark, sf_dir):
         for r in similarity.kmeans_train(emb, k=8, iters=2).collect()
     )
     cdf = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a_join = {r[0]: r[1] for r in similarity.ivf_assign(emb, cdf).collect()}
-    a_np = {r[0]: r[1] for r in similarity.ivf_assign_blocked(emb, rows).collect()}
+    a_join = {r[0]: r[1] for r in ivf_assign_join(emb, cdf).collect()}
+    a_np = {r[0]: r[1] for r in similarity.ivf_assign(emb, rows).collect()}
     assert a_join == a_np
+
+
+def test_ivf_assign_matches_join_reference(spark, emb):
+    """The numpy ivf_assign equals the broadcast-join window reference
+    for n_probe 1-3 (centroids given as a frame or as driver rows), on
+    duplicate-centroid ties (equal cosines keep the LOWER centroid id
+    first), for string corpus ids, and for a NULL id, which keeps its
+    row and comes back NULL."""
+    from tests.lloyd_reference import ivf_assign_join
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=str)
+
+    cents = similarity.kmeans_train(emb, k=8, iters=1)
+    cent_rows = [(r[0], r[1]) for r in cents.collect()]
+    for p in (1, 2, 3):
+        want = rows(ivf_assign_join(emb, cents, n_probe=p))
+        assert rows(similarity.ivf_assign(emb, cents, n_probe=p)) == want
+        assert rows(similarity.ivf_assign(emb, cent_rows, n_probe=p)) == want
+        assert len(want) == p * emb.count()
+
+    # ties: centroids 3 and 9 are the same vector, as are 4 and 6
+    tied = [(9, cent_rows[0][1]), (3, cent_rows[0][1]), (6, cent_rows[1][1]),
+            (4, cent_rows[1][1]), (5, cent_rows[2][1])]
+    tdf = spark.createDataFrame(tied, "vec_id long, embedding array<double>")
+    for p in (1, 2, 3):
+        got = rows(similarity.ivf_assign(emb, tied, n_probe=p))
+        assert got == rows(ivf_assign_join(emb, tdf, n_probe=p))
+    nearest = dict(rows(similarity.ivf_assign(emb, tied)))
+    assert set(nearest.values()) <= {3, 4, 5}
+
+    s = emb.withColumn("vec_id", F.col("vec_id").cast("string"))
+    got = rows(similarity.ivf_assign(s, cents, n_probe=2))
+    assert got == rows(ivf_assign_join(s, cents, n_probe=2))
+    assert isinstance(got[0][0], str)
+
+    n = emb.withColumn("vec_id", F.when(F.col("vec_id") == 7, None).otherwise(F.col("vec_id")))
+    for p in (1, 2):
+        got = rows(similarity.ivf_assign(n, cents, n_probe=p))
+        assert got == rows(ivf_assign_join(n, cents, n_probe=p))
+        assert sum(1 for r in got if r[0] is None) == p
+
+
+def test_ivf_assign_and_semdedup_null_and_wide_ids(spark):
+    """A NULL corpus id stays NULL through ivf_assign (it used to come
+    back as the int64 minimum), an id above 2^53 comes back exactly,
+    and SemDeDup drops the NULL-id row up front instead of emitting
+    pairs with a made-up id."""
+    big = 2**53 + 1
+    corpus = spark.createDataFrame(
+        [
+            (1, [1.0, 2.0, 3.0, 1.0]),
+            (None, [1.0, 2.0, 3.0, 1.1]),
+            (big, [1.0, 2.0, 3.0, 0.9]),
+            (7, [2.0, 1.0, 1.0, 2.0]),
+            (9, [2.0, 1.0, 1.0, 2.1]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    cents = [(1, [1.0, 2.0, 3.0, 1.0]), (2, [2.0, 1.0, 1.0, 2.0])]
+    got = dict(map(tuple, similarity.ivf_assign(corpus, cents).collect()))
+    assert got == {1: 1, None: 1, big: 1, 7: 2, 9: 2}
+
+    cdf = spark.createDataFrame(cents, "vec_id long, embedding array<double>")
+    pairs = sorted(
+        (r["a_id"], r["b_id"])
+        for r in dedup.semantic_dup_pairs(corpus, threshold=0.9, centroids=cdf).collect()
+    )
+    assert pairs == [(1, big), (7, 9)]
+    kept = sorted(
+        r["vec_id"] for r in dedup.semantic_prune(corpus, threshold=0.9, centroids=cdf).collect()
+    )
+    assert kept == [1, 7]
 
 
 LLOYD_FAMILY_QUERIES = (
@@ -1736,18 +1840,30 @@ LLOYD_FAMILY_QUERIES = (
     "sim_pq_store_topk",
 )
 
+# queries reaching cosine_topk or ivf_assign outside the list above
+# (sim_ivfpq_recall is STAGED)
+ANN_FAMILY_QUERIES = (
+    "sim_cosine_topk",
+    "sim_mmr_rerank",
+    "sim_hybrid_rrf",
+    "ml_knn_label_disagreement",
+    "sim_ivf_topk",
+    "pipeline_embedding_prep",
+    "sim_ivfpq_recall",
+)
+
 
 def test_lloyd_family_queries_match_duckdb_oracles(spark, sf_dir, verify_local):
-    """Every registry query built on the Lloyd trainers, PQ encoding
-    or SemDeDup hash-matches its DuckDB oracle (verify_local's exact
-    compare), so an oracle drift in these families fails the default
-    run, not only the manual sweep."""
-    from fabrix_spark.queries import REGISTRY
+    """Every registry/STAGED query built on the Lloyd trainers, PQ
+    encoding, SemDeDup, cosine_topk or ivf_assign hash-matches its
+    DuckDB oracle (verify_local's exact compare), so an oracle drift in
+    these families fails the default run, not only the manual sweep."""
+    from fabrix_spark.queries import REGISTRY, STAGED
 
     con = verify_local.oracle_con(sf_dir)
     errors = {}
-    for name in LLOYD_FAMILY_QUERIES:
-        qd = REGISTRY[name]
+    for name in LLOYD_FAMILY_QUERIES + ANN_FAMILY_QUERIES:
+        qd = REGISTRY[name] if name in REGISTRY else STAGED[name]
         s_tbl = qd.fn(spark, sf_dir).toArrow()
         err = verify_local.compare(s_tbl, con.execute(qd.oracle).arrow())
         if err or s_tbl.num_rows == 0:
@@ -1760,9 +1876,18 @@ def test_lloyd_family_job_counts(spark, sf_dir, spark_jobs):
     plus one assignment-and-means job pair per iteration; kmeans_train
     adds the collect of its returned frame; pq_train is the same for
     all subspaces at once; SemDeDup is the trainer plus the one
-    shuffle on centroid_id."""
+    shuffle on centroid_id. cosine_topk is the query collect plus the
+    map-side scoring and its ranking window (the broadcast-join
+    expression form took 4); ivf_assign is the centroid collect plus
+    one map-only pass at any n_probe (the broadcast join took 4)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    seed = emb.orderBy("vec_id").limit(16)
     calls = {
+        "cosine_topk": lambda: similarity.cosine_topk(
+            emb, emb.filter(F.col("vec_id") < 8), k=5
+        ).collect(),
+        "ivf_assign_p1": lambda: similarity.ivf_assign(emb, seed, n_probe=1).collect(),
+        "ivf_assign_p2": lambda: similarity.ivf_assign(emb, seed, n_probe=2).collect(),
         "kmeans_train": lambda: similarity.kmeans_train(emb, k=8, iters=1).collect(),
         "kmeans_train_rows": lambda: similarity.kmeans_train_rows(emb, k=8, iters=1),
         "pq_train": lambda: similarity.pq_train(emb, 64, m=4, n_codes=8).collect(),
@@ -1777,6 +1902,9 @@ def test_lloyd_family_job_counts(spark, sf_dir, spark_jobs):
         fn()
     got = {name: spark_jobs(fn) for name, fn in calls.items()}
     assert got == {
+        "cosine_topk": 3,
+        "ivf_assign_p1": 2,
+        "ivf_assign_p2": 2,
         "kmeans_train": 4,
         "kmeans_train_rows": 3,
         "pq_train": 4,
@@ -1808,7 +1936,7 @@ def test_lloyd_stages_skip_zero_norm_vectors_and_centroids(spark):
     cdf = spark.createDataFrame(cents, "vec_id long, embedding array<double>")
     want = {1: 1, 5: 1, 7: 1, 9: 1, 11: 1}
     assert dict(map(tuple, similarity.ivf_assign(corpus, cdf).collect())) == want
-    assert dict(map(tuple, similarity.ivf_assign_blocked(corpus, cents).collect())) == want
+    assert dict(map(tuple, similarity.ivf_assign(corpus, cents).collect())) == want
 
     pairs = sorted(map(tuple, dedup.semantic_dup_pairs(corpus, k=2, threshold=0.9).collect()))
     assert pairs == [(1, 1, 7, 0.981156)]
@@ -1817,14 +1945,18 @@ def test_lloyd_stages_skip_zero_norm_vectors_and_centroids(spark):
 
 
 def test_lloyd_family_refuses_non_integral_ids(emb):
-    """The numpy stages carry ids as int64, so the trainers and
-    SemDeDup refuse a string id up front, naming the column."""
+    """The numpy stages carry seed and centroid ids as int64, so the
+    trainers, SemDeDup and a centroid frame passed to ivf_assign (or
+    the corpus seeding ivf_cosine_topk) refuse a string id up front,
+    naming the column."""
     emb_s = emb.withColumn("vec_id", F.col("vec_id").cast("string"))
     for call in (
         lambda: similarity.kmeans_train(emb_s, k=2),
         lambda: similarity.pq_train(emb_s, 64, m=4, n_codes=2),
         lambda: dedup.semantic_dup_pairs(emb_s, k=2),
         lambda: dedup.semantic_prune(emb_s, k=2),
+        lambda: similarity.ivf_assign(emb, emb_s.limit(2)),
+        lambda: similarity.ivf_cosine_topk(emb_s, emb_s.limit(1), n_centroids=2),
     ):
         with pytest.raises(ValueError, match="'vec_id' must be integral, got string"):
             call()
@@ -3150,13 +3282,13 @@ def test_knn_graph_mutual_and_scorer_parity(spark):
     )
     vec = emb.select(
         F.col("vec_id").alias("__id"), _quantized(F.col("embedding"), 1_000_000).alias("__v")
-    ).withColumn("__n2", _dot(F.col("__v"), F.col("__v"), True))
+    ).withColumn("__n2", _dot(F.col("__v"), F.col("__v")))
     s = vec.select(F.col("__id").alias("src"), F.col("__v").alias("s_v"), F.col("__n2").alias("s_n2"))
     d = vec.select(F.col("__id").alias("dst"), F.col("__v").alias("d_v"), F.col("__n2").alias("d_n2"))
     scored = cand.join(s, "src").join(d, "dst").select(
         "src", "dst",
         F.round(
-            _dot(F.col("s_v"), F.col("d_v"), True)
+            _dot(F.col("s_v"), F.col("d_v"))
             / F.sqrt(F.col("s_n2").cast("double") * F.col("d_n2").cast("double")),
             6,
         ).alias("cosine"),
@@ -5927,10 +6059,10 @@ def test_ann_family_excludes_poisoned_vectors(spark):
     assign = similarity.ivf_assign(corpus, corpus.filter("vec_id in (1, 5)")).collect()
     assert {r["vec_id"] for r in assign} == clean
 
-    blocked_assign = similarity.ivf_assign_blocked(
+    row_assign = similarity.ivf_assign(
         corpus, [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 1.0, 0.0])]
     ).collect()
-    assert {r["vec_id"] for r in blocked_assign} == clean
+    assert {r["vec_id"] for r in row_assign} == clean
 
     for out in (
         similarity.rp_topk(corpus, q, k=3, out_dim=4),
@@ -5947,13 +6079,14 @@ def test_ann_family_excludes_poisoned_vectors(spark):
     g = similarity.knn_graph(corpus, k=3, dim=4).collect()
     assert g and {r["src"] for r in g} <= clean and {r["dst"] for r in g} <= clean
 
-    # the numpy triage kernel: NaN components cast to garbage int64
-    # INSIDE the kernel (past the isfinite mask), so pre-fix the
-    # blocked path silently mis-ranked instead of crashing — it must
-    # match its exact twin row for row on the poisoned corpus
-    blocked = similarity.cosine_topk_blocked(corpus, q, k=3)
-    exact = similarity.cosine_topk(corpus, q, k=3)
-    assert sorted(map(tuple, blocked.collect())) == sorted(map(tuple, exact.collect()))
+    # the numpy top-k kernel must drop the poisoned rows itself (a NaN
+    # component would otherwise cast to a garbage int64 and mis-rank)
+    # and match the expression reference row for row
+    from tests.lloyd_reference import cosine_topk_expr
+
+    got = similarity.cosine_topk(corpus, q, k=3)
+    want = cosine_topk_expr(corpus, q, k=3)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
     rows_cb = similarity.pq_train_rows(corpus, dim=4, m=2, n_codes=2)
     assert all(math.isfinite(float(x)) for _, _, vec, _ in rows_cb for x in vec)

@@ -302,12 +302,12 @@ def test_join_strategy_hints(spark):
 
 
 def test_cosine_topk_no_nested_loop(spark):
-    """Brute-force top-k pairs corpus × broadcast queries through a
-    broadcast HASH join (single-valued key), not a nested-loop node."""
+    """Brute-force top-k scores corpus batches against the broadcast
+    query matrix map-side, never through a nested-loop node."""
     plan = _plan(spark, "sim_cosine_topk")
+    assert "MapInArrow" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan
 
 
 def test_q21_single_scan_no_smj(spark):
@@ -355,11 +355,12 @@ def test_common_segments_blocklist_broadcast(spark):
 
 
 def test_blocked_cosine_no_join_at_all(spark):
-    """The matmul ANN path scores map-side — the only Exchange is the
+    """The matmul top-k path scores map-side — the only Exchange is the
     final top-k window; no join operator appears."""
-    plan = _plan(spark, "sim_cosine_topk_blocked")
+    plan = _plan(spark, "sim_cosine_topk")
     for op in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct", "BroadcastNestedLoopJoin"):
         assert op not in plan
+    assert plan.count("Exchange") == 1
 
 
 def test_top_ngrams_take_ordered(spark):
@@ -404,7 +405,7 @@ def test_semantic_prune_plan_shape(spark):
     df = dedup.semantic_prune(emb, k=8, iters=1, threshold=0.375)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan          # per-cluster kept set
-    assert "MapInPandas" in plan                    # blocked assignment
+    assert "MapInArrow" in plan                     # numpy assignment
     assert len(re.findall(r"hashpartitioning\(centroid_id", plan)) == 1
     assert "Join" not in plan                       # fully fused: no join
     assert plan.count("Exchange") == 1              # the one required shuffle

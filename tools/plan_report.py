@@ -30,7 +30,6 @@ NOTABLE = [
     "d_common_segments",
     "smp_pack_sequences",
     "smp_rebalance",
-    "sim_cosine_topk_blocked",
     "prof_quantiles",
     "pipeline_pack_corpus",
     "smp_weighted",
