@@ -17,6 +17,7 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.files import resolve_parquet
 from .adt import (
     AND,
     Col,
@@ -48,14 +49,21 @@ TableProvider = Callable[[str], DataFrame]
 
 class ParquetDirProvider:
     """Resolve table names to ``{dir}/{name}.parquet`` — the layout of
-    the driver's testdata (TESTDATA.md)."""
+    the driver's testdata (TESTDATA.md) — through
+    :func:`~fabrix_spark.sources.files.resolve_parquet`: a table's
+    schema is inferred once per file identity (``st_mtime_ns``,
+    ``st_size``) and per value of the session confs that change parquet
+    inference (``nanosAsLong``, ``binaryAsString``, ``int96AsTimestamp``,
+    ``inferTimestampNTZ``), so compiling a Select over unchanged files
+    starts no Spark job; a rewritten file or a changed conf infers
+    again."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.sf_dir = sf_dir.rstrip("/")
 
     def __call__(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(f"{self.sf_dir}/{name}.parquet")
+        return resolve_parquet(self.spark, f"{self.sf_dir}/{name}.parquet")
 
 
 def _cond_to_column(c: Cond, resolve: Callable[[Cond], Column]) -> Column:

@@ -87,15 +87,16 @@ def register(name: str, oracle: str | None = None, headline: bool = False):
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return ParquetDirProvider(spark, sf_dir)(name)
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events table is written with nanosecond timestamps, which
+    """The events table may be written with nanosecond timestamps, which
     Spark's parquet reader rejects by default; read ns-as-long and
-    convert to NTZ micros (what DuckDB also does on read)."""
+    convert to NTZ micros (what DuckDB also does on read). The resolver
+    keys its cached schema on the conf, so the read follows it."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    e = _t(spark, sf_dir, "events")
     if dict(e.dtypes).get("ts") == "bigint":
         e = e.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")

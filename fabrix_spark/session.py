@@ -14,6 +14,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -51,7 +52,22 @@ def get_spark(
         builder = builder.master(f"local[{cpus}]")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _workers_import_package(spark)
     return spark
+
+
+def _workers_import_package(spark: SparkSession) -> None:
+    """Put the directory holding ``fabrix_spark`` first on the Python
+    workers' PYTHONPATH: Arrow/pandas operators (cosine_topk,
+    ivf_assign, the Lloyd/PQ trainers, SemDeDup, shingling) unpickle
+    functions of this package inside the workers, which otherwise find
+    it only when the driver runs from the checkout root. UDFs take the
+    context's environment when they are created, so this also serves a
+    reused context."""
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT] + paths)
 
 
 def tune_session(spark: SparkSession) -> SparkSession:

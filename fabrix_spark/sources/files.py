@@ -9,6 +9,9 @@ ParquetReadOptions (parquet/reader.rs:134-141), JsonReadOptions
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,6 +27,8 @@ __all__ = [
     "JsonReadOptions",
     "read_csv",
     "write_csv",
+    "parquet_schema",
+    "resolve_parquet",
     "read_parquet",
     "write_parquet",
     "read_json",
@@ -113,9 +118,93 @@ def write_csv(fx: FxFrame | DataFrame, path: str, options: CsvWriteOptions | Non
     df.write.mode(mode).option("header", o.has_header).option("sep", o.delimiter).csv(path)
 
 
+# Session confs that change the schema parquet inference derives from
+# the same footers; their values are part of a file's identity.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# path -> (identity, inferred schema); one entry per distinct path
+_schemas: dict[str, tuple[tuple, T.StructType]] = {}
+_schemas_lock = threading.Lock()
+
+
+def _listed(name: str) -> bool:
+    """Spark's file-listing rule: hidden (``.``) and ``_`` names are
+    skipped, except partition dirs (``_x=1``) and parquet summaries."""
+    if name.startswith(("_common_metadata", "_metadata")):
+        return True
+    return not (
+        name.startswith(".") or (name.startswith("_") and "=" not in name) or name.endswith("._COPYING_")
+    )
+
+
+def _identity(path: str) -> tuple | None:
+    """``(st_mtime_ns, st_size)`` of a file; the sorted ``(name, size,
+    mtime_ns)`` list of the files Spark would read under a directory;
+    None for a path ``os.stat`` cannot see (a remote URI, a glob)."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_mtime_ns, st.st_size)
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if _listed(d)]
+            for n in filter(_listed, names):
+                fst = os.stat(os.path.join(root, n))
+                files.append((os.path.relpath(os.path.join(root, n), path), fst.st_size, fst.st_mtime_ns))
+    except (OSError, ValueError):  # unseen, or a file vanished mid-walk
+        return None
+    return tuple(sorted(files))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark infers for the parquet file or tree ``path``,
+    inferred once per identity: the file identity of :func:`_identity`
+    plus the values of the session confs that change inference
+    (``nanosAsLong``, ``binaryAsString``, ``int96AsTimestamp``,
+    ``inferTimestampNTZ``). A changed identity re-infers and replaces
+    the entry. None when the schema must be inferred on every read: a
+    path ``os.stat`` cannot see, or a session reading with
+    ``spark.sql.parquet.mergeSchema``."""
+    if spark.conf.get("spark.sql.parquet.mergeSchema") == "true":
+        return None
+    files = _identity(path)
+    if files is None:
+        return None
+    ident = (files, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    with _schemas_lock:
+        hit = _schemas.get(path)
+    if hit is not None and hit[0] == ident:
+        return hit[1]
+    # the identity is taken before inference: a file replaced meanwhile
+    # leaves an entry whose identity no longer matches, never a stale hit
+    schema = spark.read.parquet(path).schema
+    with _schemas_lock:
+        _schemas[path] = (ident, schema)
+    return schema
+
+
+def resolve_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that hands Spark the schema of
+    :func:`parquet_schema`, so a path read before with the same
+    identity and inference confs starts no schema-inference job."""
+    schema = parquet_schema(spark, path)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+
+
 def read_parquet(spark: SparkSession, path: str, options: ParquetReadOptions | None = None) -> FxFrame:
+    """A parquet file or tree through :func:`resolve_parquet`: its
+    schema is inferred once per identity — ``(st_mtime_ns, st_size)``
+    for a file, the ``(name, size, mtime_ns)`` list of the visible
+    files for a directory — and per value of the session confs that
+    change parquet inference; a rewritten file or a changed conf infers
+    again. Paths ``os.stat`` cannot see infer on every read."""
     o = options or ParquetReadOptions()
-    df = spark.read.parquet(path)
+    df = resolve_parquet(spark, path)
     if o.columns:
         df = df.select(*o.columns)
     if o.n_rows is not None:

@@ -108,6 +108,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..frame import FxFrame
+from .files import parquet_schema
 from .sql import SaveStrategy
 
 __all__ = ["LakeTable", "LakeProvider", "save_lake", "compact", "init_aggregate", "maintain_aggregate"]
@@ -715,15 +716,18 @@ class LakeTable:
     def _reader(self, vdir: str):
         """A parquet reader for the version tree ``vdir``: with the
         data schema its writer recorded (Spark starts no inference
-        job), else footer inference — always for ``merge_schema``
-        tables, whose files may legitimately disagree."""
+        job), else with the schema the file resolver inferred once per
+        tree identity (``files.parquet_schema``) — footer inference on
+        every read only for ``merge_schema`` tables, whose files may
+        legitimately disagree."""
         r = self.spark.read
         if self.merge_schema:
             return r.option("mergeSchema", "true")
         recorded = self._schema_doc(vdir).get("data")
-        if recorded is None:
-            return r
-        return r.schema(StructType.fromJson(recorded))
+        if recorded is not None:
+            return r.schema(StructType.fromJson(recorded))
+        inferred = parquet_schema(self.spark, vdir)
+        return r if inferred is None else r.schema(inferred)
 
     def _read_raw_physical(self, vdir: str | None = None) -> DataFrame:
         vdir = vdir or self.current_dir()

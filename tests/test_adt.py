@@ -25,6 +25,7 @@ from fabrix_spark.plans import (
     render_select,
 )
 from fabrix_spark.plans.adt import validate_expressions
+from fabrix_spark.queries import REGISTRY
 
 
 def _oracle(sf_dir, sql):
@@ -606,3 +607,35 @@ def test_compound_validation():
         Compound(op="union", selects=[one, two])
     with pytest.raises(ValueError, match="unknown compound"):
         Compound(op="minus", selects=[one, one])
+
+
+# the 19 adt_* registry queries plus event queries reading through
+# queries._events (its nanosAsLong conf is part of the resolver's key)
+ADT_QUERIES = sorted(n for n in REGISTRY if n.startswith("adt_"))
+EVENT_QUERIES = ("e_tumbling_hourly", "e_funnel", "w_lag_delta_events", "e_gap_islands")
+
+
+def test_adt_and_event_queries_match_duckdb_oracles(spark, sf_dir, verify_local):
+    """Every adt_* registry query and a sample of the events queries
+    hash-match their DuckDB oracles (verify_local's exact compare), so
+    a table-resolution drift fails the default run, not only the
+    manual sweep."""
+    assert len(ADT_QUERIES) == 19
+    con = verify_local.oracle_con(sf_dir)
+    errors = {}
+    for name in ADT_QUERIES + list(EVENT_QUERIES):
+        qd = REGISTRY[name]
+        s_tbl = qd.fn(spark, sf_dir).toArrow()
+        err = verify_local.compare(s_tbl, con.execute(qd.oracle).arrow())
+        if err or s_tbl.num_rows == 0:
+            errors[name] = err or "empty result"
+    assert not errors, errors
+
+
+def test_adt_queries_compile_without_spark_jobs(spark, sf_dir, spark_jobs):
+    """Once its tables are resolved, compiling an adt_* query builds a
+    plan and starts no Spark job (no per-compile schema inference)."""
+    for name in ADT_QUERIES:
+        REGISTRY[name].fn(spark, sf_dir)
+    jobs = {name: spark_jobs(lambda: REGISTRY[name].fn(spark, sf_dir)) for name in ADT_QUERIES}
+    assert jobs == {name: 0 for name in ADT_QUERIES}

@@ -1805,6 +1805,28 @@ def test_recorded_schema_read_matches_inferred_read(spark, tmp_path, case):
     assert t.scan([("id", ">=", 0)]).df.schema == inferred.schema
 
 
+@pytest.mark.parametrize("case", ["unrecorded_tree", "merge_schema"])
+def test_unrecorded_tree_reads_through_resolver(spark, tmp_path, spark_jobs, case):
+    """A version tree without a recorded schema reads through the file
+    resolver: the first read is its one inference job, later reads
+    start none (version trees are immutable). A ``merge_schema`` table
+    infers on every read and never enters the resolver's cache."""
+    from fabrix_spark.sources import files
+
+    t = _schema_case(spark, tmp_path, case)
+    cur = t.current_dir()
+    first = spark_jobs(lambda: t.read())
+    again = spark_jobs(lambda: t.scan([("id", ">=", 0)]))
+    if case == "unrecorded_tree":
+        assert (first, again) == (1, 0)
+        assert files._schemas[cur][1] == spark.read.parquet(cur).schema
+        assert _rows(t.read().df) == [(i, i + 1) for i in range(12)]
+    else:
+        assert first == again >= 1
+        assert cur not in files._schemas
+        assert _rows(t.read().df) == [(1, "a", None), (2, "b", 5)]
+
+
 def test_save_upsert_scan_apply_changes_run_only_their_own_jobs(spark, spark_jobs, tmp_path):
     """Job counts of the lake's hot paths (parent code: 2 / 6 / 2 / 6).
     No commit starts a readability probe and no read of a version tree

@@ -870,6 +870,37 @@ def test_cosine_topk_empty_queries(emb):
     assert out.count() == 0
 
 
+def test_cosine_topk_runs_from_outside_the_checkout(tmp_path):
+    """The session puts the package root on the Python workers' path:
+    cosine_topk's mapInArrow kernel runs in a driver whose cwd is a tmp
+    dir and whose PYTHONPATH does not name the checkout."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    script = tmp_path / "run_topk.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {str(root)!r})\n"
+        "from fabrix_spark.operators import similarity\n"
+        "from fabrix_spark.session import get_spark\n"
+        "spark = get_spark('outside_checkout', master='local[1]')\n"
+        "emb = spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0])],"
+        " 'vec_id long, embedding array<double>')\n"
+        "out = similarity.cosine_topk(emb, emb.filter('vec_id = 1'), k=2).collect()\n"
+        "print(sorted((r.q_id, r.c_id, r.rank) for r in out))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["FABRIX_DRIVER_MEM"] = "1g"
+    done = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert done.stdout.strip().splitlines()[-1] == "[(1, 2, 1), (1, 3, 2)]"
+
+
 def test_cosine_topk_tie_group_larger_than_k(spark):
     """Many exact-duplicate embeddings in ONE batch: the global
     tie-break is (cosine desc, c_id asc), so the top-k must be the

@@ -2,9 +2,16 @@
 SQLite save-strategy matrix (the reference's sql_executor_test.rs:29-345
 and read_xl_to_db_test.rs re-expressed)."""
 
+import contextlib
+import glob
+import shutil
 import sqlite3
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import types as T
 
 from fabrix_spark.frame import FxFrame
 from fabrix_spark.plans.adt import Cond, Delete, Select, Col
@@ -14,6 +21,7 @@ from fabrix_spark.sources.excel import (
     iter_batches,
     read_excel_batches,
 )
+from fabrix_spark.sources import files
 from fabrix_spark.sources.files import (
     CsvReadOptions,
     JsonReadOptions,
@@ -21,6 +29,7 @@ from fabrix_spark.sources.files import (
     read_csv,
     read_json,
     read_parquet,
+    resolve_parquet,
     write_csv,
     write_json,
     write_parquet,
@@ -70,6 +79,116 @@ def test_parquet_roundtrip(spark, fx, tmp_path):
     back = read_parquet(spark, p, ParquetReadOptions(columns=["id", "name"], index="id"))
     assert back.columns == ["id", "name"]
     assert back.height == 4
+
+
+# ---------------------------------------------------------------------------
+# the parquet table resolver: one schema inference per file identity
+# ---------------------------------------------------------------------------
+
+
+@contextlib.contextmanager
+def _conf(spark, key, value):
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_resolver_rewritten_file_reinfers_schema(spark, tmp_path):
+    """A parquet file rewritten in place with other columns is read
+    with its new schema: the identity (mtime_ns, size) changed, so the
+    resolver infers again and the result never shows a stale column."""
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), p)
+    assert sorted(tuple(r) for r in resolve_parquet(spark, p).collect()) == [(1, "x"), (2, "y")]
+    pq.write_table(pa.table({"a": [3, 4, 5], "c": [0.5, 1.5, 2.5]}), p)
+    df = resolve_parquet(spark, p)
+    assert df.columns == ["a", "c"]
+    assert sorted(tuple(r) for r in df.collect()) == [(3, 0.5), (4, 1.5), (5, 2.5)]
+    assert read_parquet(spark, p).columns == ["a", "c"]
+    # a directory: adding a file with a wider schema changes its identity
+    d = tmp_path / "dir"
+    d.mkdir()
+    pq.write_table(pa.table({"a": [1]}), str(d / "part-0.parquet"))
+    assert resolve_parquet(spark, str(d)).columns == ["a"]
+    (d / "part-0.parquet").unlink()
+    pq.write_table(pa.table({"z": ["q"]}), str(d / "part-1.parquet"))
+    assert [tuple(r) for r in resolve_parquet(spark, str(d)).collect()] == [("q",)]
+
+
+def test_resolver_schema_follows_inference_confs(spark, sf_dir, tmp_path):
+    """The session confs that change parquet inference are part of the
+    identity: toggling ``nanosAsLong`` over a nanosecond ``events.parquet``
+    gives bigint, then Spark's own refusal, then bigint again — never
+    the schema inferred under the other value; ``_events`` still turns
+    the nanos into NTZ micros; ``inferTimestampNTZ`` switches the real
+    table between timestamp_ntz and timestamp."""
+    from pyspark.errors import AnalysisException
+
+    from fabrix_spark.queries import _events
+
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    t = t.set_column(t.schema.get_field_index("ts"), "ts", t.column("ts").cast(pa.timestamp("ns")))
+    p = str(tmp_path / "events.parquet")
+    pq.write_table(t, p, version="2.6", coerce_timestamps=None)
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    with _conf(spark, nanos, "true"):
+        assert resolve_parquet(spark, p).schema["ts"].dataType == T.LongType()
+        with _conf(spark, nanos, "false"):
+            with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+                resolve_parquet(spark, p)
+        assert resolve_parquet(spark, p).schema["ts"].dataType == T.LongType()
+        assert _events(spark, str(tmp_path)).schema["ts"].dataType == T.TimestampNTZType()
+    real = f"{sf_dir}/events.parquet"
+    ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    with _conf(spark, ntz, "true"):
+        assert resolve_parquet(spark, real).schema["ts"].dataType == T.TimestampNTZType()
+        with _conf(spark, ntz, "false"):
+            assert resolve_parquet(spark, real).schema["ts"].dataType == T.TimestampType()
+        assert resolve_parquet(spark, real).schema["ts"].dataType == T.TimestampNTZType()
+
+
+def test_resolver_cold_and_warm_schemas_match_inference(spark, sf_dir):
+    """For every fixture table the cold resolve, the warm resolve and a
+    plain inferring read give the same schema, nullability included."""
+    with _conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
+        for p in sorted(glob.glob(f"{sf_dir}/*.parquet")):
+            files._schemas.pop(p, None)
+            cold = resolve_parquet(spark, p).schema
+            warm = resolve_parquet(spark, p).schema
+            assert cold == warm == spark.read.parquet(p).schema, p
+
+
+def test_resolver_job_counts(spark, sf_dir, spark_jobs, tmp_path):
+    """The first resolve of a file is its one schema-inference job; a
+    warm resolve and a warm ``read_parquet`` start none. A session that
+    reads with ``mergeSchema`` infers on every read."""
+    p = str(tmp_path / "lineitem.parquet")
+    shutil.copy(f"{sf_dir}/lineitem.parquet", p)
+    assert spark_jobs(lambda: resolve_parquet(spark, p)) == 1
+    assert spark_jobs(lambda: resolve_parquet(spark, p)) == 0
+    opts = ParquetReadOptions(columns=["l_orderkey"], n_rows=3, row_count="rid")
+    assert spark_jobs(lambda: read_parquet(spark, p, opts)) == 0
+    with _conf(spark, "spark.sql.parquet.mergeSchema", "true"):
+        assert files.parquet_schema(spark, p) is None
+        assert spark_jobs(lambda: resolve_parquet(spark, p)) == 1
+    assert files.parquet_schema(spark, "file:///no/such/dir/x.parquet") is None
+
+
+def test_resolver_concurrent_cold_resolves_agree(spark, sf_dir, tmp_path):
+    """Four threads resolving the same cold paths all get the inferred
+    schema, and the cache holds one entry per path."""
+    paths = []
+    for name in ("orders", "customer"):
+        paths.append(str(tmp_path / f"{name}.parquet"))
+        shutil.copy(f"{sf_dir}/{name}.parquet", paths[-1])
+    with ThreadPoolExecutor(4) as pool:
+        got = list(pool.map(lambda i: resolve_parquet(spark, paths[i % 2]).schema, range(8)))
+    for i, schema in enumerate(got):
+        assert schema == spark.read.parquet(paths[i % 2]).schema
+    assert all(files._schemas[p][1] == spark.read.parquet(p).schema for p in paths)
 
 
 def test_json_ndjson_roundtrip(spark, fx, tmp_path):
