@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .similarity import (
+    _arrow_quantized,
     _finite_vectors,
-    _np_quant,
     _np_round6,
     _require_integral_id,
     ivf_assign,
@@ -1544,16 +1544,19 @@ def _semdedup_assigned(
     )
 
 
-def _cluster_cosines(pdf, id_col: str, vec_col: str, quantize: int):
-    """One cluster's pairwise scores: (ids ascending, exact int64 dot
-    matrix, int64 norms, raw double cosines, and the upper-triangle
-    index pairs (i < j, so ids[i] < ids[j]))."""
+def _cluster_cosines(table, quantize: int):
+    """One cluster's pairwise scores from its Arrow group (id,
+    centroid_id, vector): (ids ascending, exact int64 dot matrix, int64
+    norms, raw double cosines, and the upper-triangle index pairs
+    (i < j, so ids[i] < ids[j])). Vectors are read through
+    :func:`similarity._arrow_quantized`, so a row with no cosine scores
+    nothing."""
     import numpy as np
 
-    ids = pdf[id_col].to_numpy(dtype=np.int64)
+    rows, Q, n2 = _arrow_quantized(table.column(2), quantize)
+    ids = np.asarray(table.column(0).to_numpy(), dtype=np.int64)[rows]
     order = np.argsort(ids)
-    Q = _np_quant(np.stack(pdf[vec_col].to_numpy()[order]), quantize)
-    n2 = (Q * Q).sum(axis=1)
+    Q, n2 = Q[order], n2[order]
     dots = Q @ Q.T
     raw = dots / np.sqrt(n2[:, None].astype(np.float64) * n2[None, :].astype(np.float64))
     ii, jj = np.triu_indices(len(ids), k=1)
@@ -1593,22 +1596,22 @@ def semantic_dup_pairs(
 
     Returns (centroid_id, a_id, b_id, cosine) with a_id < b_id. The id
     column must be integral; NULL-id rows are dropped. NULL vectors,
-    NULL/NaN components and zero-norm vectors are excluded (they have
-    no cosine).
+    NULL/NaN/infinite components and zero-norm vectors are excluded
+    (they have no cosine).
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     assigned = _semdedup_assigned(corpus, k, iters, id_col, vec_col, quantize, centroids)
     margin = float(threshold) - 1e-6
 
-    def cluster_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids, dots, n2, raw, ii, jj = _cluster_cosines(pdf, id_col, vec_col, quantize)
+    def cluster_pairs(key, table):
+        ids, dots, n2, raw, ii, jj = _cluster_cosines(table, quantize)
         keep = raw[ii, jj] >= margin
         ii, jj = ii[keep], jj[keep]
-        return pd.DataFrame(
+        return pa.table(
             {
-                "centroid_id": np.full(len(ii), pdf["centroid_id"].iloc[0], dtype=np.int64),
+                "centroid_id": np.full(len(ii), key[0].as_py(), dtype=np.int64),
                 "a_id": ids[ii],
                 "b_id": ids[jj],
                 "dot": dots[ii, jj],
@@ -1617,7 +1620,7 @@ def semantic_dup_pairs(
             }
         )
 
-    cand = assigned.groupBy("centroid_id").applyInPandas(
+    cand = assigned.groupBy("centroid_id").applyInArrow(
         cluster_pairs,
         "centroid_id long, a_id long, b_id long, dot long, an2 long, bn2 long",
     )
@@ -1659,17 +1662,17 @@ def semantic_prune(
     the exact F.round(x, 6) decimal twin (``_np_round6``) — the same
     decision as the SQL oracle's ``round(cos, 6) >= threshold``.
     The id column must be integral; NULL-id rows are dropped. NULL
-    vectors, NULL/NaN components and zero-norm vectors are excluded
-    (they have no cosine).
+    vectors, NULL/NaN/infinite components and zero-norm vectors are
+    excluded (they have no cosine).
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     assigned = _semdedup_assigned(corpus, k, iters, id_col, vec_col, quantize, centroids)
     thr = float(threshold)
 
-    def cluster_kept(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids, _, _, raw, ii, jj = _cluster_cosines(pdf, id_col, vec_col, quantize)
+    def cluster_kept(key, table):
+        ids, _, _, raw, ii, jj = _cluster_cosines(table, quantize)
         vals = raw[ii, jj]
         dup = vals >= thr + 1e-6
         band = np.abs(vals - thr) < 1e-6
@@ -1677,16 +1680,14 @@ def semantic_prune(
             dup[band] = _np_round6(vals[band]) >= thr
         pruned = np.zeros(len(ids), dtype=bool)
         pruned[jj[dup]] = True
-        return pd.DataFrame(
+        return pa.table(
             {
                 id_col: ids[~pruned],
-                "centroid_id": np.full(
-                    int((~pruned).sum()), pdf["centroid_id"].iloc[0], dtype=np.int64
-                ),
+                "centroid_id": np.full(int((~pruned).sum()), key[0].as_py(), dtype=np.int64),
             }
         )
 
-    return assigned.groupBy("centroid_id").applyInPandas(
+    return assigned.groupBy("centroid_id").applyInArrow(
         cluster_kept, f"{id_col} long, centroid_id long"
     )
 

@@ -49,10 +49,6 @@ __all__ = [
 ]
 
 
-def _as_double(vec: Column) -> Column:
-    return F.transform(vec, lambda x: x.cast("double"))
-
-
 def _quantized(vec: Column, scale: int) -> Column:
     return F.transform(vec, lambda x: F.round(x.cast("double") * scale).cast("long"))
 
@@ -118,16 +114,19 @@ def _pair_key(col: str) -> Column:
     return F.pmod(F.xxhash64(F.col(col)), F.lit(1))
 
 
-def _arrow_quantized(vecs, quantize: int, dim: int | None = None):
+def _arrow_quantized(vecs, quantize: int, dim: int | None = None, keep_zero: bool = False):
     """(kept row indices, quantized int64 matrix, squared norms) of an
-    Arrow list column of embeddings — the row filter and quantizer of
-    the :func:`cosine_topk` and :func:`ivf_assign` kernels. A row with
-    no cosine is dropped: a NULL or empty vector, a NULL, NaN or
-    infinite component, or a zero norm (the expression scorers drop the
-    same rows through ``_finite_vectors`` / ``_quantized_guarded`` and
-    ``n2 > 0``). ``dim`` fixes the width (default: the first non-empty
-    vector's); a vector of another length raises ValueError, since a
-    ragged matrix has no matmul."""
+    Arrow list column of embeddings — the one row filter and quantizer
+    of every numpy stage (:func:`cosine_topk`, :func:`ivf_assign`, the
+    Lloyd and PQ trainers, :func:`pq_encode`, SemDeDup's per-cluster
+    stage). A row with no int64 quantization is dropped: a NULL or
+    empty vector, or a NULL, NaN or infinite component. A zero-norm row
+    is dropped too (it has no cosine), unless ``keep_zero`` — PQ's L2
+    is defined for the zero vector, so the PQ stages keep it. The
+    expression scorers drop the same rows through ``_finite_vectors`` /
+    ``_quantized_guarded`` and ``n2 > 0``. ``dim`` fixes the width
+    (default: the first non-empty vector's); a vector of another length
+    raises ValueError, since a ragged matrix has no matmul."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -149,7 +148,7 @@ def _arrow_quantized(vecs, quantize: int, dim: int | None = None):
     ok = np.isfinite(m).all(axis=1)
     Q = _np_quant(m[ok], quantize)
     n2 = (Q * Q).sum(axis=1)
-    nz = n2 > 0
+    nz = slice(None) if keep_zero else n2 > 0
     return rows[ok][nz], Q[nz], n2[nz]
 
 
@@ -615,6 +614,26 @@ def _seed(corpus: DataFrame, n: int, id_col: str) -> DataFrame:
     return corpus.where(F.col(id_col).isNotNull()).orderBy(F.col(id_col).asc()).limit(n)
 
 
+def _member_sums(a, Q):
+    """The partial sums one Lloyd iteration folds, from a quantized
+    batch ``Q`` and each row's assignment ``a``: one row per
+    (assignment, component) — (assignment, component index, int64
+    component sum over its members, member count). Integer partials
+    are associative, so the folded means do not depend on batching."""
+    import numpy as np
+
+    order = np.argsort(a, kind="stable")
+    cl, starts, cnt = np.unique(a[order], return_index=True, return_counts=True)
+    sums = np.add.reduceat(Q[order], starts, axis=0)
+    d = Q.shape[1]
+    return (
+        np.repeat(cl, d),
+        np.tile(np.arange(d, dtype=np.int64), len(cl)),
+        sums.ravel(),
+        np.repeat(cnt.astype(np.int64), d),
+    )
+
+
 def kmeans_train_rows(
     corpus: DataFrame,
     k: int = 8,
@@ -640,51 +659,48 @@ def kmeans_train_rows(
     to anything; zero-norm vectors join no cluster.
 
     Returns [(centroid id, components in the input's float domain)]
-    sorted by id. The id column must be integral."""
-    import numpy as np
-    import pandas as pd
+    sorted by id. The id column must be integral. Rows with a NULL id
+    are skipped, and the stage reads vectors through
+    :func:`_arrow_quantized`: a NULL vector or a NULL, NaN, infinite or
+    zero-norm one joins no cluster."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
 
     _require_integral_id(corpus, id_col)
     # NULL ids sort FIRST under asc() and would crash int(r[0]) on the
-    # driver; NULL embeddings would crash np.stack inside the executor;
-    # a NaN component would silently train a garbage centroid via
-    # NaN.astype(int64) — exclude all three (r16/r17 self-review)
-    corpus = _finite_vectors(corpus, vec_col).where(F.col(id_col).isNotNull())
-    seed = _seed(corpus, k, id_col).select(id_col, vec_col).collect()
+    # driver; a NULL or NaN seed has no centroid to train (an infinite
+    # or zero-norm one keeps its slot and _prep_centroids drops it)
+    corpus = corpus.where(F.col(id_col).isNotNull())
+    seed = _seed(_finite_vectors(corpus, vec_col), k, id_col).select(id_col, vec_col).collect()
     cents = [(int(r[0]), [float(x) for x in r[1]]) for r in seed]
-    dim = len(cents[0][1]) if cents else 0
     spark = corpus.sparkSession
     # No spread(): per-row work here is one vectorized numpy matmul per
     # Arrow batch, so scattering a small input to every core buys
     # nothing while its repartition shuffle costs a fixed ~0.2 s per
     # job; at real scale parquet arrives in thousands of splits and
     # parallelism comes from the scan itself.
-    base = corpus.select(_as_double(F.col(vec_col)).alias("__dv"))
+    base = corpus.select(vec_col)
+    schema = T.StructType(
+        [T.StructField(c, T.LongType()) for c in ("centroid_id", "dim", "val", "cnt")]
+    )
     for _ in range(iters):
         bc = spark.sparkContext.broadcast(_prep_centroids(cents, quantize))
 
         def partials(batches, _bc=bc):
             b_cids, b_C, b_cn2 = _bc.value
-            for pdf in batches:
-                if pdf.empty or not len(b_cids):
+            for batch in batches:
+                if not len(b_cids):
                     continue
-                Q = _np_quant(np.stack(pdf["__dv"].to_numpy()), quantize)
-                n2 = (Q * Q).sum(axis=1)
-                Q, n2 = Q[n2 > 0], n2[n2 > 0]
+                _, Q, n2 = _arrow_quantized(batch.column(0), quantize, b_C.shape[1])
+                if not len(Q):
+                    continue
                 a = _np_assign(Q, n2, b_C, b_cn2, b_cids)[:, 0]
-                for cid in np.unique(a):
-                    members = Q[a == cid]
-                    yield pd.DataFrame(
-                        {
-                            "centroid_id": np.full(dim, cid, dtype=np.int64),
-                            "dim": np.arange(dim, dtype=np.int64),
-                            "val": members.sum(axis=0),
-                            "cnt": np.full(dim, len(members), dtype=np.int64),
-                        }
-                    )
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c) for c in _member_sums(a, Q)], schema.fieldNames()
+                )
 
         rows = (
-            base.mapInPandas(partials, "centroid_id long, dim long, val long, cnt long")
+            base.mapInArrow(partials, schema)
             .groupBy("centroid_id", "dim")
             .agg(F.sum("val").alias("__s"), F.sum("cnt").alias("__c"))
             .select(
@@ -1187,12 +1203,12 @@ def knn_graph(
     the hub-dominated kNN digraph into meaningful neighborhoods before
     graph clustering. One extra self-semi-join on the edge key.
 
-    Candidate scoring runs as an Arrow-batched numpy kernel when numpy
-    is available (one ``einsum`` row-wise dot per batch instead of an
-    interpreted per-element ``aggregate`` chain — the t_lm_score HOF
-    lesson); the kernel emits ONLY the exact int64 dot, and the
-    rounding/division stays a JVM expression, so both paths are
-    bit-identical (pinned in tests and by the shared oracle)."""
+    Candidate scoring runs as an Arrow-batched numpy kernel (one
+    ``einsum`` row-wise dot per batch instead of an interpreted
+    per-element ``aggregate`` chain — the t_lm_score HOF lesson); the
+    kernel emits ONLY the exact int64 dot, and the rounding/division
+    stays a JVM expression, so it is bit-identical to the expression
+    scorer (pinned in tests and by the shared oracle)."""
     b = hyperplane_lsh_buckets(
         corpus, n_planes, id_col, vec_col, quantize=quantize, n_tables=n_tables, dim=dim
     )
@@ -1217,38 +1233,22 @@ def knn_graph(
         F.col("__id").alias("dst"), F.col("__v").alias("d_v"), F.col("__n2").alias("d_n2")
     )
     paired = cand.join(s, "src").join(d, "dst")
-    try:
-        import numpy as np  # noqa: F401
+    out_schema = paired.select("src", "dst", "s_n2", "d_n2").schema.add("dot", "long")
 
-        have_np = True
-    except ImportError:  # pragma: no cover - numpy is baked in here
-        have_np = False
-    if have_np:
-        fields = paired.select("src", "dst", "s_n2", "d_n2").schema.fieldNames()
-        out_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in paired.schema.fields
-            if f.name in fields
-        ) + ", dot long"
+    def _score(batches):
+        import numpy as np
+        import pandas as pd
 
-        def _score(batches):
-            import numpy as np
-            import pandas as pd
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            sv = np.stack(pdf["s_v"].to_numpy()).astype(np.int64)
+            dv = np.stack(pdf["d_v"].to_numpy()).astype(np.int64)
+            out = pdf[["src", "dst", "s_n2", "d_n2"]].copy()
+            out["dot"] = np.einsum("ij,ij->i", sv, dv)
+            yield pd.DataFrame(out)
 
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                sv = np.stack(pdf["s_v"].to_numpy()).astype(np.int64)
-                dv = np.stack(pdf["d_v"].to_numpy()).astype(np.int64)
-                out = pdf[["src", "dst", "s_n2", "d_n2"]].copy()
-                out["dot"] = np.einsum("ij,ij->i", sv, dv)
-                yield pd.DataFrame(out)
-
-        with_dot = paired.mapInPandas(_score, schema=out_schema)
-    else:
-        with_dot = paired.select(
-            "src", "dst", "s_n2", "d_n2", _dot(F.col("s_v"), F.col("d_v")).alias("dot")
-        )
+    with_dot = paired.mapInPandas(_score, schema=out_schema)
     scored = with_dot.select(
         "src",
         "dst",
@@ -1274,6 +1274,35 @@ def _sub(vec: Column, s: int, sub_dim: int) -> Column:
     return F.slice(vec, s * sub_dim + 1, sub_dim)
 
 
+def _pq_pack(books: list[dict[int, list[int]]]):
+    """[(ascending codes, codeword matrix, codeword squared norms)] per
+    subspace — the driver-held codebooks the PQ numpy stages
+    broadcast."""
+    import numpy as np
+
+    packed = []
+    for cb in books:
+        codes = sorted(cb)
+        C = np.asarray([cb[c] for c in codes], dtype=np.int64)
+        packed.append((np.asarray(codes, dtype=np.int64), C, (C * C).sum(axis=1)))
+    return packed
+
+
+def _pq_nearest(Q, packed):
+    """Per subspace, ``(s, Q's subspace slice, each row's nearest
+    code)``: exact int64 squared L2 and argmin-first over ascending
+    codes == the (d² asc, code asc) tie-break — no rounding anywhere in
+    the metric."""
+    import numpy as np
+
+    sub_dim = Q.shape[1] // len(packed)
+    for s, (codes, C, cn2) in enumerate(packed):
+        Qs = Q[:, s * sub_dim : (s + 1) * sub_dim]
+        n2 = (Qs * Qs).sum(axis=1)
+        d2 = n2[:, None] - 2 * (Qs @ C.T) + cn2[None, :]
+        yield s, Qs, codes[np.argmin(d2, axis=1)]
+
+
 def pq_train_rows(
     corpus: DataFrame,
     dim: int,
@@ -1292,28 +1321,30 @@ def pq_train_rows(
     :func:`kmeans_train_rows` recipe — seed = the n_codes lowest-id
     subvectors, ONE Spark job per Lloyd iteration for ALL subspaces at
     once. An Arrow-batched numpy stage slices each batch into
-    subspaces, assigns by exact int64 squared-L2 (argmin-first over
-    ascending codes == the (d² asc, code asc) tie-break — no rounding
-    anywhere in the metric), and emits per-partition (subspace, code,
-    dim) integer partial sums; one tiny aggregate + one in-Spark
-    rounded division produce the means. Associative int64 partials ⇒
-    partitioning-independent, and a DuckDB oracle re-derives identical
-    codebooks.
+    subspaces, assigns by exact int64 squared-L2 (:func:`_pq_nearest`),
+    and emits per-partition (subspace, code, dim) integer partial sums;
+    one tiny aggregate + one in-Spark rounded division produce the
+    means. Associative int64 partials ⇒ partitioning-independent, and a
+    DuckDB oracle re-derives identical codebooks.
 
     Returns [(subspace, code, components list[int], cn2)] sorted. The
-    id column must be integral."""
+    id column must be integral. Rows with a NULL id are skipped, and
+    the stage reads vectors through :func:`_arrow_quantized`: a NULL
+    vector or a NULL, NaN or infinite component trains nothing, while a
+    zero vector counts (L2 is defined for it)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql import types as T
 
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     _require_integral_id(corpus, id_col)
     sub_dim = dim // m
-    # same NULL/NaN gate as kmeans_train_rows: NULL ids seed first and
-    # crash int(r[0]); NULL embeddings crash the executor stack; NaN
-    # components silently train garbage codewords via NaN.astype(int64)
-    corpus = _finite_vectors(corpus, vec_col).where(F.col(id_col).isNotNull())
-    seed = _seed(corpus, n_codes, id_col).select(id_col, vec_col).collect()
+    # the seed rule of kmeans_train_rows: NULL ids seed first and crash
+    # int(r[0]); a NULL or NaN seed has no codeword
+    corpus = corpus.where(F.col(id_col).isNotNull())
+    seed = _seed(_finite_vectors(corpus, vec_col), n_codes, id_col).select(id_col, vec_col)
+    seed = seed.collect()
     # quantize seeds driver-side with the exact F.round twin
     books: list[dict[int, list[int]]] = []
     for s in range(m):
@@ -1326,50 +1357,27 @@ def pq_train_rows(
         books.append(cb)
     spark = corpus.sparkSession
     # no spread(): vectorized-matmul stage — see kmeans_train_rows
-    base = corpus.select(_as_double(F.col(vec_col)).alias("__dv"))
+    base = corpus.select(vec_col)
+    schema = T.StructType(
+        [T.StructField("subspace", T.IntegerType())]
+        + [T.StructField(c, T.LongType()) for c in ("code", "dim", "val", "cnt")]
+    )
     for _ in range(iters):
-        packed = [
-            (
-                np.asarray(sorted(cb), dtype=np.int64),
-                np.asarray([cb[c] for c in sorted(cb)], dtype=np.int64),
-            )
-            for cb in books
-        ]
-        bc = spark.sparkContext.broadcast(packed)
+        bc = spark.sparkContext.broadcast(_pq_pack(books))
 
         def partials(batches, _bc=bc):
-            pk = _bc.value
-            for pdf in batches:
-                if pdf.empty:
+            for batch in batches:
+                _, Q, _ = _arrow_quantized(batch.column(0), quantize, dim, keep_zero=True)
+                if not len(Q):
                     continue
-                Q = _np_quant(np.stack(pdf["__dv"].to_numpy()), quantize)
-                frames = []
-                for s, (codes, C) in enumerate(pk):
-                    Qs = Q[:, s * sub_dim : (s + 1) * sub_dim]
-                    n2 = (Qs * Qs).sum(axis=1)
-                    cn2 = (C * C).sum(axis=1)
-                    d2 = n2[:, None] - 2 * (Qs @ C.T) + cn2[None, :]
-                    a = codes[np.argmin(d2, axis=1)]
-                    for code in np.unique(a):
-                        members = Qs[a == code]
-                        frames.append(
-                            pd.DataFrame(
-                                {
-                                    "subspace": np.full(sub_dim, s, dtype=np.int32),
-                                    "code": np.full(sub_dim, code, dtype=np.int64),
-                                    "dim": np.arange(sub_dim, dtype=np.int64),
-                                    "val": members.sum(axis=0),
-                                    "cnt": np.full(sub_dim, len(members), dtype=np.int64),
-                                }
-                            )
-                        )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
+                for s, Qs, a in _pq_nearest(Q, _bc.value):
+                    code, d, val, cnt = _member_sums(a, Qs)
+                    subspace = np.full(len(code), s, dtype=np.int32)
+                    cols = [pa.array(c) for c in (subspace, code, d, val, cnt)]
+                    yield pa.RecordBatch.from_arrays(cols, schema.fieldNames())
 
         rows = (
-            base.mapInPandas(
-                partials, "subspace int, code long, dim long, val long, cnt long"
-            )
+            base.mapInArrow(partials, schema)
             .groupBy("subspace", "code", "dim")
             .agg(F.sum("val").alias("__s"), F.sum("cnt").alias("__c"))
             .select(
@@ -1431,60 +1439,38 @@ def pq_encode(
     compresses to the point where the ADC scan is CPU-bound, not
     IO-bound). Encoding is map-only; the corpus never shuffles: the
     (RAM-sized) codebooks are collected once and all m subspaces are
-    encoded in ONE Arrow-batched numpy pass (exact int64 L2,
-    argmin-first == the (d² asc, code asc) tie-break). The id column
-    keeps its own Spark type."""
+    encoded in ONE Arrow-batched numpy pass (:func:`_pq_nearest`). The
+    id column keeps its own Spark type, a NULL id included. Vectors are
+    read through :func:`_arrow_quantized`: a NULL vector or a NULL, NaN
+    or infinite component gets no code, while a zero vector is encoded
+    (L2 is defined for it)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    sub_dim = dim // m
-    packed_d: dict[int, dict[int, list[int]]] = {}
+    books: dict[int, dict[int, list[int]]] = {}
     for r in codebooks.select("subspace", "code", "__c").collect():
-        packed_d.setdefault(int(r["subspace"]), {})[int(r["code"])] = [
-            int(x) for x in r["__c"]
-        ]
-    packed = [
-        (
-            np.asarray(sorted(packed_d[s]), dtype=np.int64),
-            np.asarray([packed_d[s][c] for c in sorted(packed_d[s])], dtype=np.int64),
-        )
-        for s in range(m)
-    ]
-    bc = corpus.sparkSession.sparkContext.broadcast(packed)
+        books.setdefault(int(r["subspace"]), {})[int(r["code"])] = [int(x) for x in r["__c"]]
+    bc = corpus.sparkSession.sparkContext.broadcast(_pq_pack([books[s] for s in range(m)]))
+    src = corpus.select(F.col(id_col), F.col(vec_col))
+    schema = src.schema[:1].add("subspace", "integer").add("code", "long")
 
     def encode(batches):
-        pk = bc.value
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            rows, Q, _ = _arrow_quantized(batch.column(1), quantize, dim, keep_zero=True)
+            if not len(rows):
                 continue
-            ids = pdf["__id"].to_numpy()
-            Q = _np_quant(np.stack(pdf["__dv"].to_numpy()), quantize)
-            frames = []
-            for s, (codes, C) in enumerate(pk):
-                Qs = Q[:, s * sub_dim : (s + 1) * sub_dim]
-                n2 = (Qs * Qs).sum(axis=1)
-                cn2 = (C * C).sum(axis=1)
-                d2 = n2[:, None] - 2 * (Qs @ C.T) + cn2[None, :]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            id_col: ids,
-                            "subspace": np.full(len(ids), s, dtype=np.int32),
-                            "code": codes[np.argmin(d2, axis=1)],
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+            codes = [a for _, _, a in _pq_nearest(Q, bc.value)]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).take(np.tile(rows, m)),
+                    pa.array(np.repeat(np.arange(m, dtype=np.int32), len(rows))),
+                    pa.array(np.concatenate(codes)),
+                ],
+                schema.fieldNames(),
+            )
 
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    # NULL/NaN exclusion (r17 self-review): NULL vectors crash
-    # np.stack, and a NaN component would encode to a garbage int64 code.
     # No spread(): vectorized-matmul stage — see kmeans_train_rows
-    return (
-        _finite_vectors(corpus, vec_col)
-        .select(F.col(id_col).alias("__id"), _as_double(F.col(vec_col)).alias("__dv"))
-        .mapInPandas(encode, f"{id_col} {id_type}, subspace int, code long")
-    )
+    return src.mapInArrow(encode, schema)
 
 
 def pq_cosine_topk(

@@ -92,10 +92,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table may be written with nanosecond timestamps, which
-    Spark's parquet reader rejects by default; read ns-as-long and
-    convert to NTZ micros (what DuckDB also does on read). The resolver
-    keys its cached schema on the conf, so the read follows it."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Spark's parquet reader rejects by default; the session reads them
+    as longs (``nanosAsLong``, set once by ``get_spark`` /
+    ``tune_session``) and this converts them to NTZ micros (what DuckDB
+    also does on read)."""
     e = _t(spark, sf_dir, "events")
     if dict(e.dtypes).get("ts") == "bigint":
         e = e.withColumn(

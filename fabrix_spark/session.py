@@ -15,6 +15,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# read parquet TIMESTAMP(NANOS) columns as longs (queries._events turns
+# them into micros). Set once per session: the value is part of the
+# table resolver's cache key, so flipping it mid-session re-infers
+# every table resolved before.
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def get_spark(
@@ -40,6 +45,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config(_NANOS_AS_LONG, "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "true" if ui else "false")
         .config("spark.driver.memory", os.environ.get("FABRIX_DRIVER_MEM", "8g"))
@@ -75,6 +81,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     session (the driver owns the session in ``__spark_entry__`` calls).
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set(_NANOS_AS_LONG, "true")
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")

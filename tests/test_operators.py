@@ -1881,6 +1881,7 @@ ANN_FAMILY_QUERIES = (
     "sim_ivf_topk",
     "pipeline_embedding_prep",
     "sim_ivfpq_recall",
+    "sim_knn_graph",
 )
 
 
@@ -1910,9 +1911,11 @@ def test_lloyd_family_job_counts(spark, sf_dir, spark_jobs):
     shuffle on centroid_id. cosine_topk is the query collect plus the
     map-side scoring and its ranking window (the broadcast-join
     expression form took 4); ivf_assign is the centroid collect plus
-    one map-only pass at any n_probe (the broadcast join took 4)."""
+    one map-only pass at any n_probe (the broadcast join took 4);
+    pq_encode is the codebook collect plus one map-only pass."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     seed = emb.orderBy("vec_id").limit(16)
+    books = similarity.pq_train(emb, 64, m=4, n_codes=8)
     calls = {
         "cosine_topk": lambda: similarity.cosine_topk(
             emb, emb.filter(F.col("vec_id") < 8), k=5
@@ -1922,6 +1925,7 @@ def test_lloyd_family_job_counts(spark, sf_dir, spark_jobs):
         "kmeans_train": lambda: similarity.kmeans_train(emb, k=8, iters=1).collect(),
         "kmeans_train_rows": lambda: similarity.kmeans_train_rows(emb, k=8, iters=1),
         "pq_train": lambda: similarity.pq_train(emb, 64, m=4, n_codes=8).collect(),
+        "pq_encode": lambda: similarity.pq_encode(emb, books, 64, m=4).collect(),
         "semantic_dup_pairs": lambda: dedup.semantic_dup_pairs(
             emb, k=8, iters=1, threshold=0.375
         ).collect(),
@@ -1939,6 +1943,7 @@ def test_lloyd_family_job_counts(spark, sf_dir, spark_jobs):
         "kmeans_train": 4,
         "kmeans_train_rows": 3,
         "pq_train": 4,
+        "pq_encode": 2,
         "semantic_dup_pairs": 5,
         "semantic_prune": 5,
     }
@@ -1973,6 +1978,42 @@ def test_lloyd_stages_skip_zero_norm_vectors_and_centroids(spark):
     assert pairs == [(1, 1, 7, 0.981156)]
     kept = sorted(map(tuple, dedup.semantic_prune(corpus, k=2, threshold=0.9).collect()))
     assert kept == [(1, 1), (5, 1), (9, 1), (11, 1)]
+
+
+def test_lloyd_stages_drop_infinite_components(spark):
+    """A vector with an infinite component has no int64 quantization,
+    so the trainers and pq_encode drop it as ivf_assign does: it joins
+    no cluster, gets no code, and no centroid or codeword leaves the
+    range of the finite inputs (it used to quantize to INT64_MIN and
+    drag a centroid to about -3e12). The zero vector has no cosine but
+    an L2 distance, so k-means skips it and PQ trains on and encodes
+    it."""
+    rows = [
+        (1, [1.0, 0.2]),
+        (2, [0.1, 1.0]),
+        (3, [0.9, 0.3]),
+        (4, [float("inf"), 0.5]),
+        (5, [0.2, 0.8]),
+        (6, [0.0, 0.0]),
+    ]
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame(rows, schema)
+    finite = spark.createDataFrame([r for r in rows if r[0] != 4], schema)
+
+    cents = similarity.kmeans_train_rows(corpus, k=2)
+    assert cents == similarity.kmeans_train_rows(finite, k=2)
+    assert all(0.1 <= x <= 1.0 for _, vec in cents for x in vec)
+
+    books = similarity.pq_train_rows(corpus, dim=2, m=2, n_codes=2)
+    assert books == similarity.pq_train_rows(finite, dim=2, m=2, n_codes=2)
+    assert all(0 <= x <= 1_000_000 for _, _, vec, _ in books for x in vec)
+
+    cb = similarity.pq_train(finite, dim=2, m=2, n_codes=2)
+    codes = similarity.pq_encode(corpus, cb, dim=2, m=2).collect()
+    assert sorted({r["vec_id"] for r in codes}) == [1, 2, 3, 5, 6]
+    assert sorted(map(tuple, codes)) == sorted(
+        map(tuple, similarity.pq_encode(finite, cb, dim=2, m=2).collect())
+    )
 
 
 def test_lloyd_family_refuses_non_integral_ids(emb):

@@ -404,7 +404,7 @@ def test_semantic_prune_plan_shape(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     df = dedup.semantic_prune(emb, k=8, iters=1, threshold=0.375)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan          # per-cluster kept set
+    assert "FlatMapGroupsInArrow" in plan           # per-cluster kept set
     assert "MapInArrow" in plan                     # numpy assignment
     assert len(re.findall(r"hashpartitioning\(centroid_id", plan)) == 1
     assert "Join" not in plan                       # fully fused: no join

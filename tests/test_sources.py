@@ -177,6 +177,30 @@ def test_resolver_job_counts(spark, sf_dir, spark_jobs, tmp_path):
     assert files.parquet_schema(spark, "file:///no/such/dir/x.parquet") is None
 
 
+def test_events_read_keeps_resolved_tables_warm(spark, sf_dir, spark_jobs, tmp_path):
+    """``nanosAsLong`` is part of the resolver's identity, so it is set
+    once when the session starts (``tune_session`` here, as every
+    registry query runs it): reading the events table flips no conf,
+    and a table resolved before it stays warm after it."""
+    from fabrix_spark.queries import _events, _t
+    from fabrix_spark.session import tune_session
+
+    shutil.copy(f"{sf_dir}/orders.parquet", tmp_path / "orders.parquet")
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(nanos, None)
+    spark.conf.unset(nanos)
+    try:
+        tune_session(spark)
+        assert spark_jobs(lambda: _t(spark, str(tmp_path), "orders")) == 1
+        _events(spark, sf_dir)
+        assert spark_jobs(lambda: _t(spark, str(tmp_path), "orders")) == 0
+    finally:
+        if old is None:
+            spark.conf.unset(nanos)
+        else:
+            spark.conf.set(nanos, old)
+
+
 def test_resolver_concurrent_cold_resolves_agree(spark, sf_dir, tmp_path):
     """Four threads resolving the same cold paths all get the inferred
     schema, and the cache holds one entry per path."""
