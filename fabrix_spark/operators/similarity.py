@@ -1332,6 +1332,8 @@ def pq_train_rows(
     the stage reads vectors through :func:`_arrow_quantized`: a NULL
     vector or a NULL, NaN or infinite component trains nothing, while a
     zero vector counts (L2 is defined for it)."""
+    import math
+
     import numpy as np
     import pyarrow as pa
     from pyspark.sql import types as T
@@ -1341,10 +1343,11 @@ def pq_train_rows(
     _require_integral_id(corpus, id_col)
     sub_dim = dim // m
     # the seed rule of kmeans_train_rows: NULL ids seed first and crash
-    # int(r[0]); a NULL or NaN seed has no codeword
+    # int(r[0]); a NULL, NaN or infinite seed has no codeword (an
+    # infinite one is dropped here, as _prep_centroids drops it)
     corpus = corpus.where(F.col(id_col).isNotNull())
     seed = _seed(_finite_vectors(corpus, vec_col), n_codes, id_col).select(id_col, vec_col)
-    seed = seed.collect()
+    seed = [r for r in seed.collect() if all(math.isfinite(x) for x in r[1])]
     # quantize seeds driver-side with the exact F.round twin
     books: list[dict[int, list[int]]] = []
     for s in range(m):

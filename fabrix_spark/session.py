@@ -5,6 +5,17 @@ configs below are chosen so the same code scales to a multi-executor
 cluster: AQE for runtime re-planning (skew joins, partition
 coalescing), Arrow for any Python exchange, UTC session timezone so
 timestamp semantics match an external oracle (DuckDB is UTC-naive).
+
+``get_spark`` also starts the Python workers from
+``fabrix_spark.worker_daemon``: before each task a PySpark worker calls
+``importlib.invalidate_caches()``, which on CPython before 3.13 re-reads
+the directory of every zip archive on its path (``pyspark.zip``, py4j,
+Spark's jar) — about 120 ms of CPU per task. The daemon re-reads an
+archive only when its file identity changes. On CPython 3.13 and later
+it is a no-op. ``spark.python.daemon.module`` is a static conf, so
+sessions built outside ``get_spark`` (a plain
+``SparkSession.builder``, ``tune_session``'s callers) keep PySpark's
+stock worker start.
 """
 
 from __future__ import annotations
@@ -36,6 +47,12 @@ def get_spark(
     (and its REST API) up for diagnostics that need per-task metrics —
     tools/scaling_curve.py's straggler measurement; off by default
     (tests/bench don't want the port + history overhead).
+
+    Python workers fork from ``fabrix_spark.worker_daemon``, which stops
+    each task from re-reading Spark's zip archives (see the module
+    docstring); a no-op on CPython 3.13 and later. The conf is static:
+    a session that already exists when this is called, or one built
+    without it, keeps PySpark's stock daemon.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -47,6 +64,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config(_NANOS_AS_LONG, "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "fabrix_spark.worker_daemon")
         .config("spark.ui.enabled", "true" if ui else "false")
         .config("spark.driver.memory", os.environ.get("FABRIX_DRIVER_MEM", "8g"))
     )

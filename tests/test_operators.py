@@ -1099,6 +1099,24 @@ def test_pq_topk_contract_and_determinism(emb):
     assert len(cb) == 32 and all(len(r["__c"]) == 16 for r in cb)
 
 
+def test_pq_trainer_drops_infinite_seed(spark):
+    """An infinite component passes the seed's NULL/NaN filter; the
+    trainer drops that seed row as k-means drops a non-finite centroid
+    (``_prep_centroids``) instead of failing to round it, and the
+    encoder gives the infinite row no code."""
+    import math
+
+    rows = [(1, [math.inf, 0.5]), (2, [0.2, 0.4]), (3, [0.9, 0.1])]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    books = similarity.pq_train_rows(corpus, dim=2, m=2, n_codes=2)
+    assert books
+    for s, _code, comps, _cn2 in books:
+        finite = [v[s] * 1_000_000 for _, v in rows if math.isfinite(v[s])]
+        assert all(math.isfinite(c) and min(finite) <= c <= max(finite) for c in comps)
+    codes = similarity.pq_encode(corpus, similarity.pq_train(corpus, dim=2, m=2, n_codes=2), dim=2, m=2)
+    assert sorted({r["vec_id"] for r in codes.collect()}) == [2, 3]
+
+
 def test_pq_matches_numpy_model_on_random_inputs(spark):
     """Differential model check of the WHOLE PQ pipeline on random
     vectors: an independent numpy re-implementation of quantization,

@@ -657,7 +657,6 @@ def test_dsir_and_gram_plan_shapes(spark):
     assert p.count("Exchange") == 1 and "Join" not in p and "Window" not in p
 
 
-@pytest.mark.slow
 def test_staged_queries_no_cartesian(spark):
     """Blanket plan gate over every STAGED query: no CartesianProduct
     on data tables anywhere (the 1-row totals crossJoins compile to
