@@ -1885,7 +1885,6 @@ def fuzzy_pairs(
     key_len: int = 16,
     block_cap: int = 64,
     pct_threshold: int = 30,
-    barrier: bool = True,
     generators: tuple[str, ...] = ("prefix", "suffix"),
 ) -> DataFrame:
     """Edit-distance near-duplicate pairs via blocking + verification —
@@ -1965,19 +1964,20 @@ def fuzzy_pairs(
     # twice and runs 78 s where this one runs ~10 s at the 4.5M-doc
     # synthetic). Materializing here is safe by the same contract that
     # makes the set joinable at all: candidates, never the corpus.
-    # ``barrier=False`` keeps the plan fully lazy (no checkpoint) —
-    # for plan auditing (tools/plan_report.py reads the whole lineage
-    # the barrier would hide) and for callers composing fuzzy_pairs
-    # into a larger plan who manage their own materialization.
-    # Executing it directly re-exposes both defects above.
+    # "Lazy" is not deferred under AQE: AdaptiveSparkPlanExec.execute()
+    # builds the final plan, so the checkpoint call itself runs every
+    # shuffle stage behind the barrier (the blocking windows, the
+    # candidate distinct, the repartition) and only the last stage
+    # waits for the first action. The barrier is a SQL execution of its
+    # own; its plan is in the session's SQL status store
+    # (session.recorded_plans), not in the returned frame's plan.
     verify_in = (
         cand.join(slim.withColumnRenamed("__id", "doc_a"), "doc_a")
         .withColumnsRenamed({"__norm": "__na", "__len": "__la"})
         .join(slim.withColumnRenamed("__id", "doc_b"), "doc_b")
         .repartition(df.sparkSession.sparkContext.defaultParallelism)
+        .localCheckpoint(eager=False)
     )
-    if barrier:
-        verify_in = verify_in.localCheckpoint(eager=False)
     # Banded Levenshtein: the per-pair threshold floor(pct·max_len/100)
     # caps the DP at O(k·min_len) instead of O(len²) (Spark returns -1
     # when the distance exceeds it, and the returned distance is EXACT
@@ -2012,7 +2012,6 @@ def fuzzy_join(
     key_len: int = 16,
     block_cap: int = 64,
     pct_threshold: int = 30,
-    barrier: bool = True,
     generators: tuple[str, ...] = ("prefix", "suffix"),
     count_ref: DataFrame | None = None,
 ) -> DataFrame:
@@ -2111,9 +2110,8 @@ def fuzzy_join(
         cand.join(slim_p, "probe_id")
         .join(slim_r, "ref_id")
         .repartition(probe.sparkSession.sparkContext.defaultParallelism)
+        .localCheckpoint(eager=False)
     )
-    if barrier:
-        verify_in = verify_in.localCheckpoint(eager=False)
     band = (
         f"levenshtein(__np, __nr, "
         f"cast(({int(pct_threshold)} * greatest(__lp, __lr)) div 100 as int))"

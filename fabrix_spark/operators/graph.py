@@ -90,7 +90,6 @@ def pagerank(
     unit: int = 10**12,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = False,
     redistribute: bool = False,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
@@ -118,12 +117,10 @@ def pagerank(
     cross-joins into the update — no extra driver round-trip, and the
     recurrence stays SQL-unrollable.
 
-    ``checkpoint=True`` localCheckpoints the prepared edge set, node
-    set, and each iteration's ranks, truncating lineage so iteration
-    k's plan is ONE join + ONE aggregate instead of a replay of every
-    previous iteration's derivation — the right shape beyond 2-3
-    iterations or when the edge list is itself a derived plan. Results
-    are bit-identical either way (integer arithmetic)."""
+    The prepared edge set, the node and seed sets, the degree-joined
+    edges and each iteration's ranks are localCheckpointed, truncating
+    lineage so iteration k's plan is ONE join + ONE aggregate instead
+    of a replay of every previous iteration's derivation."""
     # NULL-endpoint edges are EXCLUDED (the sampling operators' null
     # contract): a NULL src never equi-joins the out-degree table so
     # the edge propagates nothing, yet NULL would still enter the node
@@ -140,8 +137,7 @@ def pagerank(
     # barrier the caller's edge-derivation subtree (typically a fact
     # join + distinct) re-executes once for the nodes checkpoint and
     # twice more through e_deg's two join sides
-    if checkpoint:
-        e = e.localCheckpoint()
+    e = e.localCheckpoint()
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -150,8 +146,7 @@ def pagerank(
     outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
     # one tiny driver scalar (like dup_clusters' per-iteration count):
     # N parameterizes the integer base rank
-    if checkpoint:
-        nodes = nodes.localCheckpoint()
+    nodes = nodes.localCheckpoint()
     n = nodes.count()
     if n == 0:
         raise ValueError("pagerank requires a non-empty edge list")
@@ -162,9 +157,9 @@ def pagerank(
                 "dangling mass teleports to the seed set, not uniformly"
             )
         seed_col = seeds.columns[0]
-        seed_nodes = seeds.select(F.col(seed_col).alias("node")).distinct()
-        if checkpoint:
-            seed_nodes = seed_nodes.localCheckpoint()
+        seed_nodes = (
+            seeds.select(F.col(seed_col).alias("node")).distinct().localCheckpoint()
+        )
         n_seeds = seed_nodes.count()
         if n_seeds == 0:
             raise ValueError("personalized pagerank requires a non-empty seed set")
@@ -177,9 +172,7 @@ def pagerank(
     else:
         r0_col = F.lit(unit // n)
         base_col = F.lit((unit // n) * (100 - damping_pct) // 100)
-    e_deg = e.join(outdeg, "src")
-    if checkpoint:
-        e_deg = e_deg.localCheckpoint()
+    e_deg = e.join(outdeg, "src").localCheckpoint()
     ranks = nodes.select("node", r0_col.cast("long").alias("rank"))
     for _ in range(iters):
         contrib = e_deg.join(
@@ -217,8 +210,7 @@ def pagerank(
                     + F.expr(f"coalesce(s, 0L) * {damping_pct} div 100")
                 ).cast("long").alias("rank"),
             )
-        if checkpoint:
-            ranks = ranks.localCheckpoint()
+        ranks = ranks.localCheckpoint()
     return ranks
 
 
@@ -227,7 +219,6 @@ def triangle_counts(
     src: str = "src",
     dst: str = "dst",
     prepared: bool = False,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Per-node triangle counts (the clustering-coefficient /
     community-density primitive) via DEGREE-ORIENTED wedge closing —
@@ -250,12 +241,7 @@ def triangle_counts(
     by the caller — and skips the least/greatest + distinct pass and
     its checkpoint (a redundant full |E| shuffle + second
     materialization when the caller just built exactly that edge
-    list, as gr_clustering_coefficient does). ``checkpoint=False``
-    (mirroring :func:`pagerank`) opts out of the eager
-    ``localCheckpoint`` barriers for small/ad-hoc inputs where
-    plan-build-time Spark jobs or executor-local unreplicated storage
-    are unwanted; the default stays True — without the barriers the
-    caller's edge subtree re-executes per branch."""
+    list, as gr_clustering_coefficient does)."""
     if prepared:
         e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     else:
@@ -273,9 +259,8 @@ def triangle_counts(
             )
             .filter(F.col("a") != F.col("b"))
             .distinct()
+            .localCheckpoint()
         )
-        if checkpoint:
-            e = e.localCheckpoint()
     deg = (
         e.select(F.col("a").alias("n"))
         .unionAll(e.select(F.col("b").alias("n")))
@@ -311,9 +296,7 @@ def triangle_counts(
         F.when(ka < kb, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(ka < kb, F.col("b")).otherwise(F.col("a")).alias("v"),
         F.when(ka < kb, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    )
-    if checkpoint:
-        oriented = oriented.localCheckpoint()
+    ).localCheckpoint()
     o1 = oriented.select(
         F.col("u"), F.col("v").alias("x"), F.col("dv").alias("dx")
     )
@@ -347,7 +330,6 @@ def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
     max_hops: int = 3,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Multi-source BFS: the minimum hop distance (0..max_hops) from
     any seed node, following ``edges`` (src → dst) as given —
@@ -367,12 +349,13 @@ def bfs_distances(
     the graph still report dist 0 (reachability is defined on the seed
     set, not the edge list).
     """
-    e = edges.select("src", "dst")
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
-    dist = seeds.select("node").distinct().withColumn("dist", F.lit(0))
-    if checkpoint:
-        dist = dist.localCheckpoint(eager=True)
+    e = edges.select("src", "dst").localCheckpoint(eager=True)
+    dist = (
+        seeds.select("node")
+        .distinct()
+        .withColumn("dist", F.lit(0))
+        .localCheckpoint(eager=True)
+    )
     frontier = dist.select("node")
     for h in range(1, max_hops + 1):
         nxt = (
@@ -381,17 +364,14 @@ def bfs_distances(
             .distinct()
             .join(dist.select("node"), "node", "left_anti")
             .withColumn("dist", F.lit(h))
+            .localCheckpoint(eager=True)
         )
-        if checkpoint:
-            nxt = nxt.localCheckpoint(eager=True)
         frontier = nxt.select("node")
         dist = dist.unionByName(nxt)
     return dist.select("node", F.col("dist").cast("int").alias("dist"))
 
 
-def min_label_propagation(
-    edges: DataFrame, iters: int = 3, checkpoint: bool = True
-) -> DataFrame:
+def min_label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     """Synchronous min-label propagation over an undirected graph:
     every node starts labeled with its own id, and each round sets
     label(v) = min(label(v), min over neighbors of their previous
@@ -403,19 +383,16 @@ def min_label_propagation(
 
     Per round: ONE shuffle (the message aggregate on the receiving
     node); the edge list is reused unchanged so its partitioning is
-    stable, and ``checkpoint`` truncates the growing lineage each
+    stable, and a localCheckpoint truncates the growing lineage each
     round (the iterative-algorithm hygiene every Pregel-style loop on
     Spark needs). Returns (node, label)."""
-    sym = to_undirected(edges)
-    if checkpoint:
-        sym = sym.localCheckpoint(eager=True)
+    sym = to_undirected(edges).localCheckpoint(eager=True)
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        labels = labels.localCheckpoint(eager=True)
     for _ in range(iters):
         msgs = sym.join(
             labels.withColumnRenamed("node", "dst"), "dst"
@@ -424,9 +401,8 @@ def min_label_propagation(
             labels.unionByName(msgs)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
+            .localCheckpoint(eager=True)
         )
-        if checkpoint:
-            labels = labels.localCheckpoint(eager=True)
     return labels
 
 
@@ -434,7 +410,6 @@ def k_core(
     edges: DataFrame,
     k: int,
     iters: int = 5,
-    checkpoint: bool = True,
     until_stable: bool = False,
     max_rounds: int = 100,
 ) -> DataFrame:
@@ -462,17 +437,12 @@ def k_core(
 
     Per round: one degree aggregate (map-side combined) + two
     semi-joins restricting the edge list — the edge table only ever
-    SHRINKS, and ``checkpoint`` truncates the growing lineage (the
-    Pregel-loop hygiene; with it off, nothing materializes eagerly —
-    fixed-iteration lineage stays lazy). Keep ``checkpoint=True`` for
-    ``until_stable`` runs of more than a few rounds: each
-    uncheckpointed round nests the previous plan ~4×, so optimization
-    of the lazy lineage itself goes exponential in round count. No
-    node ever broadcasts; survivors of a 100 TB graph peel in
-    parallel."""
-    cur = to_undirected(edges)
-    if checkpoint:
-        cur = cur.localCheckpoint(eager=True)
+    SHRINKS, and a localCheckpoint per round truncates the growing
+    lineage (the Pregel-loop hygiene: each uncheckpointed round would
+    nest the previous plan ~4×, so optimization of the lazy lineage
+    itself would go exponential in round count). No node ever
+    broadcasts; survivors of a 100 TB graph peel in parallel."""
+    cur = to_undirected(edges).localCheckpoint(eager=True)
     prev_edges = cur.count() if until_stable else None
     rounds = max_rounds if until_stable else iters
     for _ in range(rounds):
@@ -482,11 +452,11 @@ def k_core(
             .where(F.col("__deg") >= k)
             .select("src")
         )
-        cur = cur.join(keep, "src", "left_semi").join(
-            keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
+        cur = (
+            cur.join(keep, "src", "left_semi")
+            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
+            .localCheckpoint(eager=True)
         )
-        if checkpoint:
-            cur = cur.localCheckpoint(eager=True)
         if until_stable:
             n_edges = cur.count()
             if n_edges == prev_edges:

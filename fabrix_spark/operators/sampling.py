@@ -374,7 +374,11 @@ def interleave_sources(
     # below would otherwise re-sample and could place rows in different
     # partitions once data outgrows the boundary sample — exactly the
     # 100 TB case. localCheckpoint materializes ONE assignment both
-    # passes read.
+    # passes read. Lazy is not deferred under AQE:
+    # AdaptiveSparkPlanExec.execute() builds the final plan, so this
+    # call samples the range bounds and runs the range shuffle; the
+    # count pass below runs only the final stage and stores the
+    # checkpoint.
     arranged = arranged.localCheckpoint(eager=False)
     counts = {
         r["__pid"]: r["c"]

@@ -226,7 +226,10 @@ def bm25_scores_fused(
     # 32-task explode stages per query at sf0.1, ~9s of duplicated
     # task time). The checkpoint is |docs| narrow rows — exactly the
     # "persist per-doc lengths next to the index" shape the 100 TB
-    # steady state wants (see bm25_scores' docstring).
+    # steady state wants (see bm25_scores' docstring). Lazy is not
+    # deferred under AQE: AdaptiveSparkPlanExec.execute() builds the
+    # final plan, so this call runs the corpus tokenize + aggregate
+    # shuffle stage itself; only the final stage waits for an action.
     per_doc = ex.groupBy(id_col).agg(
         F.count("*").alias("__len"),
         *[

@@ -877,7 +877,6 @@ def mmr_rerank(
     vec_col: str = "embedding",
     query_id_col: str | None = None,
     quantize: int = 1_000_000,
-    barrier: bool = True,
 ) -> DataFrame:
     """Maximal Marginal Relevance rerank (Carbonell & Goldstein 1998):
     per query, take the ``pool`` most-relevant candidates by cosine,
@@ -905,14 +904,15 @@ def mmr_rerank(
     # pool-vector join below. Without it every greedy step re-executed
     # the whole corpus top-k scan (~5-6 full passes, measured 11 s vs
     # 5 s at sf0.1); after it the top-k pass runs ONCE and every
-    # consumer reads the (queries x pool)-row checkpoint.
-    # ``barrier=False`` is the plan-audit twin (result-identical, fully
-    # lazy) — the repo-wide convention tools/plan_report.py probes for.
-    bar = (lambda df: df.localCheckpoint(eager=False)) if barrier else (lambda df: df)
-    rel = bar(cosine_topk(
+    # consumer reads the (queries x pool)-row checkpoint. Under AQE a
+    # lazy checkpoint still runs every shuffle stage behind it inside
+    # this call (AdaptiveSparkPlanExec.execute() builds the final plan;
+    # only the last stage waits for an action), so each greedy step's
+    # joins and aggregates run while the plan is built.
+    rel = cosine_topk(
         corpus, queries, k=pool, id_col=id_col, vec_col=vec_col,
         query_id_col=query_id_col, quantize=quantize,
-    ).select("q_id", "c_id", "cosine", "rank"))
+    ).select("q_id", "c_id", "cosine", "rank").localCheckpoint(eager=False)
     # pool-member vectors once; pairwise sims within each query's pool.
     # The pool-id semi join runs BEFORE the quantizer (r17): only the
     # <= queries x pool distinct pool members pay the per-component
@@ -940,7 +940,7 @@ def mmr_rerank(
             _cosine(F.col("__av"), F.col("__bv"), F.col("__an2"), F.col("__bn2")).alias("sim"),
         )
     )
-    sims = bar(sims)
+    sims = sims.localCheckpoint(eager=False)
     lam_c, div_c = F.lit(float(lam)), F.lit(1.0 - float(lam))
     selected = rel.filter(F.col("rank") == 1).select(
         "q_id", "c_id", "cosine", F.lit(1).cast("long").alias("step")
@@ -969,7 +969,7 @@ def mmr_rerank(
             "q_id", F.col("__p.c_id").alias("c_id"), F.col("__p.cosine").alias("cosine"),
             F.lit(s).cast("long").alias("step"),
         )
-        selected = bar(selected.unionByName(pick))
+        selected = selected.unionByName(pick).localCheckpoint(eager=False)
         remaining = remaining.join(
             pick.select("q_id", "c_id"), ["q_id", "c_id"], "left_anti"
         )

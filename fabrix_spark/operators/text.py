@@ -983,7 +983,6 @@ def bpe_encode(
     merges: list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint_every: int = 8,
     broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Encode a corpus with a trained BPE merge table
@@ -996,7 +995,7 @@ def bpe_encode(
     Scale shape (how production encoders run): the merge loop never
     touches the corpus — merges apply to the DISTINCT-WORD VOCAB
     (``k`` vocab-sized passes of :func:`bpe_apply_merge`, plan kept
-    flat by a ``localCheckpoint`` every ``checkpoint_every`` merges),
+    flat by a ``localCheckpoint`` every 8 merges and after the last),
     and the corpus meets the result once, via a word equi-join.
     ``broadcast_vocab=True`` broadcasts the encoded vocab (a
     word→symbols map is typically ≪ executor memory even for
@@ -1020,23 +1019,21 @@ def bpe_encode(
         "word",
         F.array_remove(F.split(F.col("word"), "(?!^)"), "").alias("symbols"),
     )
-    for i, (left, right) in enumerate(merges):
+    for i, (left, right) in enumerate(merges, 1):
         syms = syms.withColumn(
             "symbols", bpe_apply_merge(F.col("symbols"), left, right)
         )
-        if (i + 1) % checkpoint_every == 0:
+        # ALWAYS end the loop on a checkpoint, not only every 8
+        # merges: the final posexplode(symbols) makes Catalyst infer
+        # `size(symbols) > 0 AND isnotnull(symbols)`, and because
+        # `word` is the vocab aggregate's grouping key the inferred
+        # filter is pushed BELOW the distinct — the whole k-merge fold
+        # was re-evaluated twice per CORPUS OCCURRENCE instead of once
+        # per distinct word (measured 24 s of the encode stage's 28 s
+        # task time at sf0.1; the checkpoint is a vocab-sized barrier
+        # the predicate cannot cross).
+        if i % 8 == 0 or i == len(merges):
             syms = syms.localCheckpoint()
-    if len(merges) % checkpoint_every != 0:
-        # ALWAYS end the loop on a checkpoint, not only every
-        # checkpoint_every merges: the final posexplode(symbols) makes
-        # Catalyst infer `size(symbols) > 0 AND isnotnull(symbols)`,
-        # and because `word` is the vocab aggregate's grouping key the
-        # inferred filter is pushed BELOW the distinct — the whole
-        # k-merge fold was re-evaluated twice per CORPUS OCCURRENCE
-        # instead of once per distinct word (measured 24 s of the
-        # encode stage's 28 s task time at sf0.1; the checkpoint is a
-        # vocab-sized barrier the predicate cannot cross).
-        syms = syms.localCheckpoint()
     if broadcast_vocab:
         syms = F.broadcast(syms)
     return corpus.join(syms, "word").select(

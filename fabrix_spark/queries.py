@@ -59,31 +59,37 @@ class QueryDef:
 
 
 REGISTRY: dict[str, QueryDef] = {}
+# promotion candidates: oracled like REGISTRY entries but outside the
+# driver contract (see the "staged queries" section)
+STAGED: dict[str, QueryDef] = {}
 
 
-def register(name: str, oracle: str | None = None, headline: bool = False):
-    def deco(fn: QueryFn) -> QueryFn:
-        # functools.wraps + **kwargs pass-through: a query fn may
-        # declare extra keyword-only knobs beyond the (spark, sf_dir)
-        # driver contract — e.g. ``barrier=False`` on queries whose
-        # executing plan hides a subtree behind a lazy localCheckpoint
-        # lineage barrier. tools/plan_report.py probes the (wraps-
-        # preserved) signature for ``barrier`` and audits the
-        # un-barriered twin automatically, so no per-query override
-        # table exists to forget.
-        @functools.wraps(fn)
-        def wrapped(spark: SparkSession, sf_dir: str, **kwargs) -> DataFrame:
-            tune_session(spark)
-            return fn(spark, sf_dir, **kwargs)
+def _registrar(target: dict[str, QueryDef]):
+    """The ``@register``/``@stage`` decorator writing into ``target``.
+    Every entry is called as ``fn(spark, sf_dir)``; names are unique
+    across BOTH dicts so a promotion can never shadow (a silent
+    overwrite would hide an existing query and its driver CORRECTNESS
+    history)."""
 
-        # silent overwrite would shadow an existing query (and its
-        # driver CORRECTNESS history) — refuse loudly
-        if name in REGISTRY:
-            raise ValueError(f"duplicate query registration: {name!r}")
-        REGISTRY[name] = QueryDef(wrapped, oracle, headline)
-        return fn
+    def decorator(name: str, oracle: str | None = None, headline: bool = False):
+        def deco(fn: QueryFn) -> QueryFn:
+            @functools.wraps(fn)
+            def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+                tune_session(spark)
+                return fn(spark, sf_dir)
 
-    return deco
+            if name in REGISTRY or name in STAGED:
+                raise ValueError(f"duplicate query registration: {name!r}")
+            target[name] = QueryDef(wrapped, oracle, headline)
+            return fn
+
+        return deco
+
+    return decorator
+
+
+register = _registrar(REGISTRY)
+stage = _registrar(STAGED)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -6534,7 +6540,7 @@ def gr_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    pr = graph.pagerank(graph.to_undirected(pairs), iters=3, checkpoint=True)
+    pr = graph.pagerank(graph.to_undirected(pairs), iters=3)
     # top-100 via orderBy+limit (TakeOrdered: per-partition heads, no
     # global single-partition sort); the position window then runs
     # over just those 100 rows
@@ -6657,7 +6663,7 @@ def gr_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     seeds = pairs.select("src").filter(F.col("src") % 20 == 0).distinct()
-    pr = graph.pagerank(pairs, iters=3, checkpoint=True, seeds=seeds)
+    pr = graph.pagerank(pairs, iters=3, seeds=seeds)
     top = pr.orderBy(F.col("rank").desc(), F.col("node").asc()).limit(100)
     w = Window.orderBy(F.col("rank").desc(), F.col("node").asc())
     return top.withColumn("pos", F.row_number().over(w).cast("long"))
@@ -6684,7 +6690,7 @@ def gr_pagerank_redistributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    pr = graph.pagerank(pairs, iters=3, checkpoint=True, redistribute=True)
+    pr = graph.pagerank(pairs, iters=3, redistribute=True)
     top = pr.orderBy(F.col("rank").desc(), F.col("node").asc()).limit(100)
     w = Window.orderBy(F.col("rank").desc(), F.col("node").asc())
     return top.withColumn("pos", F.row_number().over(w).cast("long"))
@@ -7017,7 +7023,7 @@ def pipeline_multimodal_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("sim_mmr_rerank", oracle=_mmr_oracle())
-def sim_mmr_rerank(spark: SparkSession, sf_dir: str, barrier: bool = True) -> DataFrame:
+def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance diversified retrieval: top-20 cosine
     pool per query, greedy 5-pick balancing relevance (0.7) against
     max similarity to already-picked passages (0.3) — the standard
@@ -7027,7 +7033,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str, barrier: bool = True) -> Da
     just the final set."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 4)
-    return similarity.mmr_rerank(emb, queries, k=5, pool=20, lam=0.7, barrier=barrier)
+    return similarity.mmr_rerank(emb, queries, k=5, pool=20, lam=0.7)
 
 
 @register(
@@ -8913,27 +8919,6 @@ def e_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests) using tools/verify_local.py's exact compare. Round 12
 # promoted t_bpe_encode + m_audio_fingerprint out of the r11 batch of
 # twelve; the remaining ten stagger across r13+ per the window math.
-STAGED: dict[str, QueryDef] = {}
-
-
-def stage(name: str, oracle: str | None = None, headline: bool = False):
-    """:func:`register`'s twin writing into :data:`STAGED`. Names are
-    unique across BOTH dicts so a promotion can never shadow."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        # same **kwargs pass-through as :func:`register` (plan_report's
-        # barrier-twin probe works on staged entries too)
-        @functools.wraps(fn)
-        def wrapped(spark: SparkSession, sf_dir: str, **kwargs) -> DataFrame:
-            tune_session(spark)
-            return fn(spark, sf_dir, **kwargs)
-
-        if name in REGISTRY or name in STAGED:
-            raise ValueError(f"duplicate query registration: {name!r}")
-        STAGED[name] = QueryDef(wrapped, oracle, headline)
-        return fn
-
-    return deco
 
 
 @register(
@@ -10843,9 +10828,7 @@ WHERE 100 * levenshtein(da.norm, db.norm)
       <= 30 * greatest(length(da.norm), length(db.norm))
 """,
 )
-def d_fuzzy_pairs(
-    spark: SparkSession, sf_dir: str, barrier: bool = True
-) -> DataFrame:
+def d_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance near-duplicate pairs over DOCUMENTS
     (dedup.fuzzy_pairs): the content-blocked sibling of
     d_fuzzy_name_pairs — that query blocks short identifiers on an
@@ -10872,7 +10855,6 @@ def d_fuzzy_pairs(
         key_len=16,
         block_cap=64,
         pct_threshold=30,
-        barrier=barrier,
     )
 
 
@@ -10915,9 +10897,7 @@ WHERE 100 * levenshtein(dp.norm, dr.norm)
       <= 30 * greatest(length(dp.norm), length(dr.norm))
 """,
 )
-def d_fuzzy_join(
-    spark: SparkSession, sf_dir: str, barrier: bool = True
-) -> DataFrame:
+def d_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe-vs-master fuzzy match over DOCUMENTS (dedup.fuzzy_join) —
     d_fuzzy_pairs' two-table JOIN form and the deployable admission
     primitive: every third document (doc_id % 3 == 0) plays the
@@ -10943,7 +10923,6 @@ def d_fuzzy_join(
         key_len=16,
         block_cap=64,
         pct_threshold=30,
-        barrier=barrier,
     )
 
 
@@ -11032,34 +11011,6 @@ def stream_fuzzy_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     for b in range(3):
         admit_batch_fuzzy(docs.filter(F.col("doc_id") % 3 == b), admitted)
     return admitted.read().df.select("doc_id")
-
-
-def _fuzzy_replay_audit_body(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan-audit body for stream_fuzzy_replay (r15 verdict's "driver-
-    loop queries read as 0 shuffles"): the query's returned DataFrame
-    is just the final admitted scan — the real distributed work runs
-    inside per-batch actions. This rebuilds a representative batch's
-    probe (batch 1 against the batch-0 master) through the EXACT
-    per-batch plan constructor the operator uses
-    (``ingest.fuzzy_probe_plan``, shared code so audit and operator
-    cannot drift), fully lazy and un-barriered so PLANS.md sees the
-    whole lineage: outgoing-update detection join, count_ref purge
-    basis, blocking joins, banded-Levenshtein verify, survivor
-    anti-join. Not counted here: the CDC merge's one key anti-join
-    per batch (a write, not a returnable plan)."""
-    from .streaming.ingest import fuzzy_probe_plan
-
-    docs = _t(spark, sf_dir, "documents")
-    keep, _ = fuzzy_probe_plan(
-        docs.filter(F.col("doc_id") % 3 == 1),
-        docs.filter(F.col("doc_id") % 3 == 0),
-        barrier=False,
-        materialize=False,
-    )
-    return keep
-
-
-stream_fuzzy_replay.plan_audit_body = _fuzzy_replay_audit_body
 
 
 def _fuzzy_update_oracle(
@@ -11209,21 +11160,8 @@ def stream_fuzzy_update_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="fabrix_fuzzy_upd_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     admitted = LakeTable(spark, root + "/admitted", index="doc_id", buckets=8)
-    b0, b1 = _fuzzy_update_batches(_t(spark, sf_dir, "documents"))
-    admit_batch_fuzzy(b0, admitted)
-    admit_batch_fuzzy(b1, admitted)
-    return admitted.read().df.select(
-        "doc_id", F.length("text").cast("long").alias("text_len")
-    )
-
-
-def _fuzzy_update_batches(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """The replay's two batches: b0 = the even documents; b1 = the odd
-    documents plus every ``doc_id % 8 = 0`` id re-sent with edited
-    text (``trim(text of id+2) || ' v2'`` and id+2's lang — the feed
-    replaced its content with a near-copy of a different admitted
-    doc). Shared by the query and its plan-audit body."""
-    docs = docs.select("doc_id", "text", "lang")
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+    # id re-sent with the text of id + 2 plus ' v2', and id + 2's lang
     upd = (
         docs.alias("a")
         .filter(F.col("a.doc_id") % 8 == 0)
@@ -11237,22 +11175,11 @@ def _fuzzy_update_batches(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     b0 = docs.filter(F.col("doc_id") % 2 == 0)
     b1 = docs.filter(F.col("doc_id") % 2 == 1).unionByName(upd)
-    return b0, b1
-
-
-def _fuzzy_update_replay_audit_body(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan-audit body for stream_fuzzy_update_replay — same device as
-    :func:`_fuzzy_replay_audit_body`, with the update batch probing
-    the even-document master so the audited plan includes the
-    outgoing-exclusion join actually doing work."""
-    from .streaming.ingest import fuzzy_probe_plan
-
-    b0, b1 = _fuzzy_update_batches(_t(spark, sf_dir, "documents"))
-    keep, _ = fuzzy_probe_plan(b1, b0, barrier=False, materialize=False)
-    return keep
-
-
-stream_fuzzy_update_replay.plan_audit_body = _fuzzy_update_replay_audit_body
+    admit_batch_fuzzy(b0, admitted)
+    admit_batch_fuzzy(b1, admitted)
+    return admitted.read().df.select(
+        "doc_id", F.length("text").cast("long").alias("text_len")
+    )
 
 
 @stage(

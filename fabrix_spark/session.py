@@ -21,8 +21,11 @@ stock worker start.
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -107,3 +110,45 @@ def tune_session(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # some confs may be static on certain deployments
     return spark
+
+
+def recorded_plans(spark: SparkSession, fn: Callable[[], T]) -> tuple[T, list[str]]:
+    """Run ``fn()`` and return its result with the physical plan of
+    every SQL execution that started while it ran, oldest first.
+
+    Each ``localCheckpoint`` barrier, eager or lazy, and each action is
+    a SQL execution of its own, and the plan it ran is kept in the
+    session's SQL status store, not in the plan of the frame a call
+    returns (which reads the barrier as ``Scan ExistingRDD``). The
+    store keeps one plan graph per execution, replaced at each AQE
+    re-plan, so a plan here is the FINAL plan with every node once,
+    one ``simpleString`` line per node (the node form of
+    ``executedPlan().toString()``). The execution's text description
+    would also carry AQE's Initial Plan and, in the default formatted
+    explain mode, a second copy of every node.
+
+    Executions that other threads of the session start meanwhile are
+    included; executions the store has already evicted
+    (``spark.sql.ui.retainedExecutions``) are not."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def items(seq):
+        it = seq.iterator()
+        while it.hasNext():
+            yield it.next()
+
+    def newest() -> int:
+        # execution ids are sequential; the store lists them in id order
+        bus.waitUntilEmpty()
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+    last = newest()
+    out = fn()
+    plans = [
+        "\n".join(node.desc() for node in items(store.planGraph(eid).allNodes()))
+        for eid in range(last + 1, newest() + 1)
+        if store.execution(eid).isDefined()
+    ]
+    return out, plans

@@ -514,91 +514,6 @@ def compact_admitted(
         return removed
 
 
-def fuzzy_probe_plan(
-    batch: DataFrame,
-    ref_df: DataFrame,
-    pct_threshold: int = 30,
-    key_len: int = 16,
-    block_cap: int = 64,
-    block_col: str | None = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    barrier: bool = True,
-    materialize: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """The distributed per-batch probe of :func:`admit_batch_fuzzy`
-    as a ``(keep, stale)`` plan pair — factored out so the operator
-    and the plan audit can never drift (the r15 verdict's "driver-loop
-    queries read as 0 shuffles": the replay queries' returned
-    DataFrame is just the final admitted scan, so PLANS.md audits THIS
-    plan with ``materialize=False, barrier=False`` instead).
-
-    ``materialize=True`` (production) eagerly localCheckpoints the two
-    multi-consumer subtrees: ``outgoing`` (read by the ref-side
-    exclusion, the stale semi-join, and transitively the CDC batch)
-    and the rejected-id set (read by the survivor anti-join and the
-    tombstone scan) — both batch-bounded by contract.
-    ``materialize=False`` keeps the whole lineage lazy for auditing;
-    executing that form re-runs those subtrees per consumer.
-    ``barrier`` forwards to :func:`~fabrix_spark.operators.dedup.fuzzy_join`.
-
-    Semantics (the operator's steps 3/3b):
-
-    - OUTGOING rows — batch ids whose admitted text DIFFERS from the
-      incoming text, i.e. genuine edited updates (verbatim
-      redeliveries compare equal and are NOT outgoing). The feed
-      replaced their content, so their admitted rows are excluded
-      from the probe's ref side: old content must neither reject its
-      own id (the self-exclusion covers that) nor reject OTHER batch
-      docs. Without the exclusion the batch would compute rejections
-      against the pre-batch master while the tombstone removes the
-      rejector — a state that is NOT a fixpoint under at-least-once
-      redelivery (found by the replay-identity property fuzz).
-    - Purge counts run over the master MINUS ALL batch ids
-      (``count_ref``): every admitted-table delta this batch makes is
-      keyed by a batch id, so the basis is IDENTICAL between first
-      delivery and redelivery. Counting over the probe ref itself
-      would drift (a survivor joining a block at exactly block_cap
-      purges it on replay; pinned by
-      test_admit_batch_fuzzy_replay_purge_boundary).
-    - ``stale`` — outgoing ids whose NEW version was rejected: the
-      upsert will not replace their stale row, so the caller deletes
-      it. Stays a DataFrame end to end (the delete ships as a
-      distributed CDC merge, never a driver-collected id list)."""
-    from ..operators import dedup as _dedup
-
-    outgoing = (
-        batch.select(F.col(id_col), F.col(text_col).alias("__new_text"))
-        .join(
-            ref_df.select(F.col(id_col), F.col(text_col).alias("__ref_text")),
-            id_col,
-        )
-        .filter(~F.col("__ref_text").eqNullSafe(F.col("__new_text")))
-        .select(id_col)
-    )
-    if materialize:
-        outgoing = outgoing.localCheckpoint(eager=True)
-    hits = _dedup.fuzzy_join(
-        batch,
-        ref_df.join(outgoing, id_col, "left_anti"),
-        text_col=text_col,
-        probe_id_col=id_col,
-        ref_id_col=id_col,
-        block_col=block_col,
-        key_len=key_len,
-        block_cap=block_cap,
-        pct_threshold=pct_threshold,
-        barrier=barrier,
-        count_ref=ref_df.join(batch.select(id_col), id_col, "left_anti"),
-    ).filter(F.col("probe_id") != F.col("ref_id"))
-    dup_ids = hits.select(F.col("probe_id").alias(id_col)).distinct()
-    if materialize:
-        dup_ids = dup_ids.localCheckpoint(eager=True)
-    keep = batch.join(dup_ids, id_col, "left_anti")
-    stale = outgoing.join(dup_ids, id_col, "left_semi")
-    return keep, stale
-
-
 def admit_batch_fuzzy(
     batch: DataFrame,
     admitted,
@@ -699,16 +614,43 @@ def admit_batch_fuzzy(
         clusters = _dedup.dup_clusters(batch, pairs, id_col=id_col)
         batch = _dedup.keep_canonical(batch, clusters, id_col=id_col)
     if admitted.exists():
-        keep, stale = fuzzy_probe_plan(
+        ref_df = admitted.read().df
+        # OUTGOING rows (step 3): batch ids whose admitted text differs
+        # from the incoming text. Checkpointed: read by the ref-side
+        # exclusion, the stale semi-join and the CDC batch.
+        outgoing = (
+            batch.select(F.col(id_col), F.col(text_col).alias("__new_text"))
+            .join(
+                ref_df.select(F.col(id_col), F.col(text_col).alias("__ref_text")),
+                id_col,
+            )
+            .filter(~F.col("__ref_text").eqNullSafe(F.col("__new_text")))
+            .select(id_col)
+            .localCheckpoint(eager=True)
+        )
+        hits = _dedup.fuzzy_join(
             batch,
-            admitted.read().df,
-            pct_threshold=pct_threshold,
+            ref_df.join(outgoing, id_col, "left_anti"),
+            text_col=text_col,
+            probe_id_col=id_col,
+            ref_id_col=id_col,
+            block_col=block_col,
             key_len=key_len,
             block_cap=block_cap,
-            block_col=block_col,
-            text_col=text_col,
-            id_col=id_col,
+            pct_threshold=pct_threshold,
+            count_ref=ref_df.join(batch.select(id_col), id_col, "left_anti"),
+        ).filter(F.col("probe_id") != F.col("ref_id"))
+        # the rejected ids, checkpointed: read by the survivor anti-join
+        # and the tombstone scan
+        dup_ids = (
+            hits.select(F.col("probe_id").alias(id_col))
+            .distinct()
+            .localCheckpoint(eager=True)
         )
+        keep = batch.join(dup_ids, id_col, "left_anti")
+        # (3b) outgoing ids whose new version was rejected: their stale
+        # rows are deleted in the same CDC batch as the upserts
+        stale = outgoing.join(dup_ids, id_col, "left_semi")
     else:
         keep = batch
         stale = None

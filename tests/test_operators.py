@@ -310,9 +310,9 @@ def test_checkpoint_wins_source_scanned_once(spark):
 
         return spark.createDataFrame(sc.parallelize(data, 2).map(bump), cols), acc
 
-    # pagerank(checkpoint=True): prepared edge set checkpointed FIRST
+    # pagerank: prepared edge set checkpointed FIRST
     edges, acc = counted_edges()
-    graph.pagerank(edges, iters=2, checkpoint=True).count()
+    graph.pagerank(edges, iters=2).count()
     assert acc.value == len(data), f"pagerank scanned source {acc.value / len(data):.1f}x"
 
     # triangle_counts: canonical edge list checkpointed once
@@ -4687,7 +4687,9 @@ def test_bpe_encode_matches_python_and_roundtrips(spark):
     positions are deterministic, and concatenating each word's symbols
     reconstructs the word (no token lost or duplicated by the
     vocab-join shape). Uses merges from bpe_train so the train→encode
-    pair is exercised end to end, plus a self-pair merge run."""
+    pair is exercised end to end, plus a self-pair merge run. The
+    corpus yields 9 merges, so the encoder checkpoints mid-loop (every
+    8 merges) as well as after the last."""
     from fabrix_spark.operators.text import bpe_encode, bpe_train
 
     docs = [
@@ -4698,10 +4700,10 @@ def test_bpe_encode_matches_python_and_roundtrips(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     merges = [
         (r["left"], r["right"])
-        for r in bpe_train(df, n_merges=5, min_freq=2).orderBy("iteration").collect()
+        for r in bpe_train(df, n_merges=12, min_freq=2).orderBy("iteration").collect()
     ]
-    assert merges, "trainer found no merges"
-    got = bpe_encode(df, merges, checkpoint_every=2).collect()
+    assert len(merges) >= 9, merges
+    got = bpe_encode(df, merges).collect()
 
     want = []
     for doc_id, txt in docs:
@@ -4734,7 +4736,7 @@ def test_bpe_encode_plan_shape(spark):
         [(0, "low lower newest")], "doc_id long, text string"
     )
     plan = (
-        bpe_encode(df, [("l", "o"), ("lo", "w")], checkpoint_every=100)
+        bpe_encode(df, [("l", "o"), ("lo", "w")])
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan and "CartesianProduct" not in plan
@@ -5347,18 +5349,6 @@ def test_k_core_until_stable_runs_to_fixpoint(spark):
     )
     assert got == sorted(_py_k_core(edges, 2).items())
     assert got == [(100, 2), (101, 2), (102, 2)]
-    # checkpoint=False takes the same fixpoint on a SHORT chain (the
-    # per-round count still drives convergence) — short because each
-    # uncheckpointed round nests the previous plan ~4×, so a long
-    # chain's lazy lineage makes Catalyst optimization itself blow up:
-    # exactly why checkpoint=True is the default for the loop
-    short = [(100, 101), (101, 102), (100, 102), (102, 1), (1, 2)]
-    sdf = spark.createDataFrame(short, "src long, dst long")
-    got_nc = sorted(
-        r["node"]
-        for r in k_core(sdf, k=2, until_stable=True, checkpoint=False).collect()
-    )
-    assert got_nc == [100, 101, 102]
 
 
 def test_k_core_until_stable_max_rounds_guard(spark):

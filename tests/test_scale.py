@@ -661,12 +661,18 @@ def test_staged_queries_no_cartesian(spark):
     """Blanket plan gate over every STAGED query: no CartesianProduct
     on data tables anywhere (the 1-row totals crossJoins compile to
     BroadcastNestedLoopJoin with a single-row build side, which is the
-    accepted shape)."""
+    accepted shape) — in the returned frame's plan AND in the recorded
+    plan of every SQL execution the query ran while building it, so
+    the work behind each localCheckpoint barrier (eager or lazy) is
+    gated too."""
     from fabrix_spark.queries import STAGED
+    from fabrix_spark.session import recorded_plans
 
     for name, qd in STAGED.items():
-        plan = qd.fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan, name
+        df, recorded = recorded_plans(spark, lambda: qd.fn(spark, SF))
+        plans = [df._jdf.queryExecution().executedPlan().toString(), *recorded]
+        for plan in plans:
+            assert "CartesianProduct" not in plan, name
 
 
 def test_fuzzy_pairs_plan_parallel_verify(spark):

@@ -1,12 +1,15 @@
 """Emit PLANS.md — a compact physical-plan audit of every headline
 query at sf0.1: join strategies, exchange (shuffle) count, pushed
 filters, and read schemas. The quick answer to "is this the plan
-you'd want at 100 TB".
+you'd want at 100 TB". Each row audits the returned frame's plan plus
+the plan Spark recorded for every SQL execution the query ran while
+building it — each localCheckpoint barrier and driver action.
+
+    python tools/plan_report.py [sf_dir]    # default: the sf0.1 tables
 """
 
 from __future__ import annotations
 
-import inspect
 import re
 import sys
 from pathlib import Path
@@ -14,7 +17,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from fabrix_spark.queries import REGISTRY  # noqa: E402
-from fabrix_spark.session import get_spark  # noqa: E402
+from fabrix_spark.session import get_spark, recorded_plans  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
@@ -89,8 +92,13 @@ def audit(plan: str) -> dict:
         "partial_agg": "partial_" in plan,
         "pushed_filters": len(pushed),
         "scan_widths": [s.count(":") for s in schemas],
-        "codegen_stages": len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))),
     }
+
+
+HEADER = [
+    "| query | shuffles | bcast | joins | partial agg | pushed filters | scan widths | recorded |",
+    "|---|---|---|---|---|---|---|---|",
+]
 
 
 def main() -> None:
@@ -98,46 +106,20 @@ def main() -> None:
     lines = [
         "# PLANS — physical-plan audit of headline queries",
         "",
-        f"Generated by `tools/plan_report.py` at `{SF_DIR}`. Shuffle exchanges",
-        "exclude broadcasts; scan widths are columns actually read per scan",
-        "(column pruning evidence).",
+        f"Generated by `tools/plan_report.py` at `{SF_DIR}`. Rows include each",
+        "barrier's recorded plan: a row audits the returned frame's plan plus",
+        "the final plan of every SQL execution the query ran while building",
+        "it (`recorded` counts them). Shuffle exchanges exclude broadcasts;",
+        "scan widths are columns actually read per scan (column pruning",
+        "evidence).",
         "",
-        "| query | shuffles | bcast | joins | partial agg | pushed filters | scan widths |",
-        "|---|---|---|---|---|---|---|",
+        *HEADER,
     ]
+
     def row(name, qd):
-        # Queries whose executing plan hides its distributed subtree
-        # behind a lazy localCheckpoint lineage barrier declare a
-        # ``barrier`` keyword (preserved through the registry wrapper
-        # by functools.wraps): audit the UN-BARRIERED twin instead —
-        # same blocking/join/exchange work, the barrier only pins
-        # where the verify projection evaluates — otherwise the row
-        # reads "0 shuffles" for a multi-join pipeline. Probing the
-        # signature (instead of a name list) means every future
-        # barrier-using query gets its audit twin for free.
-        try:
-            has_barrier = "barrier" in inspect.signature(qd.fn).parameters
-        except (TypeError, ValueError):
-            has_barrier = False
-        # Driver-loop replay queries (per-batch foreachBatch bodies
-        # executed in a loop) return only the final table scan — their
-        # distributed work is invisible in the returned DataFrame's
-        # plan, and the row would read "0 shuffles" for a multi-join
-        # pipeline (the r15 verdict's finding). Such queries attach a
-        # ``plan_audit_body`` callable (built on the SAME plan
-        # constructor the operator runs per batch, lazy + un-barriered)
-        # — audit that instead. inspect.unwrap follows the registry
-        # wrapper's __wrapped__ to the decorated function.
-        body = getattr(inspect.unwrap(qd.fn), "plan_audit_body", None)
-        if body is not None:
-            df = body(spark, SF_DIR)
-            name = f"{name} (driver-loop: per-batch body, un-barriered)"
-        elif has_barrier:
-            df = qd.fn(spark, SF_DIR, barrier=False)
-            name = f"{name} (un-barriered audit twin)"
-        else:
-            df = qd.fn(spark, SF_DIR)
-        a = audit(df._jdf.queryExecution().executedPlan().toString())
+        df, recorded = recorded_plans(spark, lambda: qd.fn(spark, SF_DIR))
+        plans = [df._jdf.queryExecution().executedPlan().toString(), *recorded]
+        a = audit("\n".join(plans))
         join_s = ", ".join(
             f"{n}×{c}" for n, c in
             sorted({j: a["joins"].count(j) for j in set(a["joins"])}.items())
@@ -145,7 +127,7 @@ def main() -> None:
         return (
             f"| {name} | {a['exchanges']} | {a['broadcast_exchanges']} | {join_s} "
             f"| {'yes' if a['partial_agg'] else '—'} | {a['pushed_filters']} "
-            f"| {a['scan_widths']} |"
+            f"| {a['scan_widths']} | {len(recorded)} |"
         )
 
     for name, qd in REGISTRY.items():
@@ -157,8 +139,7 @@ def main() -> None:
         "",
         "## Round-2 additions (non-headline, scale-notable)",
         "",
-        "| query | shuffles | bcast | joins | partial agg | pushed filters | scan widths |",
-        "|---|---|---|---|---|---|---|",
+        *HEADER,
     ]
     for name in NOTABLE:
         lines.append(row(name, REGISTRY[name]))
@@ -170,35 +151,29 @@ def main() -> None:
         "## Staged queries (fabrix_spark.queries.STAGED — oracled,",
         "not yet driver-visible)",
         "",
-        "| query | shuffles | bcast | joins | partial agg | pushed filters | scan widths |",
-        "|---|---|---|---|---|---|---|",
+        *HEADER,
     ]
     for name, qd in STAGED.items():
         lines.append(row(name, qd))
     lines += [
         "",
-        "Note: queries built on eagerly-checkpointed iterations",
-        "(gr_pagerank_purchases, and any dedup path using localCheckpoint)",
-        "show only their FINAL stage here — the per-iteration join+aggregate",
-        "plans already materialized during construction; see the operator",
-        "docstrings for their per-iteration shuffle ledger.",
+        "Recorded plans are read from the session's SQL status store",
+        "(`fabrix_spark.session.recorded_plans`): every localCheckpoint,",
+        "eager or lazy, is a SQL execution, and under AQE a lazy one runs",
+        "every shuffle stage behind it when it is called, so its recorded",
+        "final plan holds the work the returned frame reads as",
+        "`Scan ExistingRDD`. Driver-loop replays record every per-batch",
+        "probe, checkpoint and lake write. Recorded plans are AQE final",
+        "plans: a reused exchange prints as `ReusedExchange` and is not",
+        "counted again.",
         "",
-        "Exchange counts are PRE-AQE and therefore overcount two benign",
-        "classes: (a) byte-identical exchanges printed once per consuming",
-        "branch (e.g. t_bm25_search's doc-keyed aggregate feeds both the",
-        "score and the stats branches) — AQE's ReuseExchange collapses",
-        "them at runtime; (b) `spread()` round-robins, which only exist",
-        "when the input has fewer splits than cores (small-SF parquet) and",
-        "are a guarded no-op at real scale. SinglePartition exchanges over",
-        "already-aggregated metadata rows (corpus stats, codebooks) move",
-        "O(1) rows.",
-        "",
-        "Driver-loop rows (\"per-batch body\") audit the operator's",
-        "per-batch plan constructor fully LAZY (production eagerly",
-        "checkpoints the batch-bounded multi-consumer subtrees — the",
-        "outgoing set and the rejected-id set), so subtrees print once",
-        "per consumer here; the executed per-batch shuffle count is the",
-        "checkpointed form's, lower than this column.",
+        "The returned frame's exchanges are PRE-AQE and therefore overcount",
+        "two benign classes: (a) byte-identical exchanges printed once per",
+        "consuming branch — AQE's ReuseExchange collapses them at runtime;",
+        "(b) `spread()` round-robins, which only exist when the input has",
+        "fewer splits than cores (small-SF parquet) and are a guarded no-op",
+        "at real scale. SinglePartition exchanges over already-aggregated",
+        "metadata rows (corpus stats, codebooks) move O(1) rows.",
     ]
     out = Path(__file__).resolve().parent.parent / "PLANS.md"
     out.write_text("\n".join(lines) + "\n")

@@ -285,9 +285,7 @@ def main() -> None:
         # the iterative join+aggregate path measured at growing |E|
         from fabrix_spark.operators.graph import pagerank
 
-        return pagerank(
-            _synth_edges(sf_dir), iters=3, redistribute=True, checkpoint=True
-        ).count()
+        return pagerank(_synth_edges(sf_dir), iters=3, redistribute=True).count()
 
     def op_label_prop(sf_dir, m):
         # measures the per-round join+min-aggregate of the
