@@ -28,8 +28,11 @@ from pyspark.sql import types as T
 
 from .similarity import (
     _arrow_quantized,
+    _cosine,
+    _dot,
     _finite_vectors,
     _np_round6,
+    _quantized,
     _require_integral_id,
     ivf_assign,
     kmeans_train_rows,
@@ -271,61 +274,27 @@ def jaccard_pairs(
     shingle_size: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    candidates: DataFrame | None = None,
-    method: str = "inverted",
-    n_hashes: int = 32,
-    bands: int = 16,
 ) -> DataFrame:
-    """Pairs (id_a < id_b) with shingle-set Jaccard ≥ threshold.
+    """Pairs (id_a < id_b) with shingle-set Jaccard ≥ threshold —
+    EXACT: every pair at or above the threshold is emitted.
 
     SIDE EFFECT: plan construction eagerly materializes the per-doc
     shingle sets via ``localCheckpoint`` (triggers one Spark job) —
     they feed several downstream branches and the checkpoint's
     computed stats keep the size-joins broadcast.
 
-    Candidate generation (when ``candidates`` is not supplied):
+    Candidates come from an inverted-index self-join on the shingle
+    hash; a Jaccard upper bound on the common-hash count (obtained
+    free from the pair aggregate) prunes them to near-final pairs
+    before the string-set verify. Hash collisions only inflate the
+    common count, so recall is complete. Its weakness is a quadratic
+    pair term on pathologically hot shingles (a shingle in d documents
+    yields d² candidate rows). For approximate, hot-shingle-robust
+    candidates use :func:`minhash_dedup_pairs`.
 
-    * ``method='inverted'`` (default — EXACT, honouring the documented
-      "every pair with Jaccard ≥ threshold" contract): inverted-index
-      self-join on the shingle hash, then a Jaccard upper-bound filter
-      on the common-hash count (obtained free from the pair aggregate)
-      prunes candidates to near-final pairs before the string-set
-      verify. Fastest exact path on ordinary corpora (measured 4-5×
-      faster than 'prefix' at sf0.1, and still ~3.4× faster at 30×
-      with tail exponent 0.88 — BENCH_NOTES r9); its weakness is a
-      quadratic blowup on pathologically hot shingles. Default-switch
-      rule (measured, not scale-dependent: the crossover is governed
-      by shingle document-frequency, never corpus size): stay
-      'inverted' unless max_df² > 10 · Σ|set| — i.e. the single
-      hottest shingle's pair term exceeds 10× the linear scan term
-      (one cheap aggregate over the exploded shingles to check) —
-      then switch to 'prefix'. ``method='auto'`` applies exactly this
-      rule (costs the one aggregate job up front).
-    * ``method='prefix'`` (EXACT, hot-shingle-robust): AllPairs-style
-      prefix filtering (public algorithm: Bayardo et al., WWW'07).
-      Each doc's shingle hashes are sorted by global rarity
-      (document-frequency ascending); a pair with Jaccard ≥ t must
-      share an element within the first ``n − ⌈t·n⌉ + 1`` elements of
-      each side, so only that prefix is indexed/joined. Hot shingles
-      sort LAST and fall out of prefixes — the hot-key quadratic
-      blowup disappears while candidate recall stays provably
-      complete. Costs a df aggregate + per-doc window, and its
-      candidates carry no common-count to prune on, so on benign
-      corpora it is slower than 'inverted'.
-    * ``method='lsh'`` (opt-in, approximate — probabilistically
-      incomplete near the threshold): MinHash signatures → banded LSH
-      buckets → equi-join on (band, key). With the default 32 hashes
-      in 16 bands of 2 rows, a pair at Jaccard J collides with
-      P = 1-(1-J²)¹⁶ — miss probability ≈8e-8 at J = 0.8 but ≈52% at
-      J = 0.2, so choose (n_hashes, bands) against the target
-      threshold. :func:`minhash_dedup_pairs` is this same path under
-      its honest name.
-
-    Every path re-verifies candidates with exact string-set
-    intersection, so an emitted pair's Jaccard is exact integer
-    arithmetic (|∩| / (|A|+|B|-|∩|)) — method choice affects candidate
-    recall only (and for 'prefix'/'inverted' recall is complete),
-    never a reported score.
+    Candidates are re-verified with exact string-set intersection, so
+    an emitted pair's Jaccard is exact integer arithmetic
+    (|∩| / (|A|+|B|-|∩|)).
     """
     # shingling feeds several branches (candidate generation + both
     # verify joins) — materialize it once instead of re-scanning the
@@ -337,49 +306,40 @@ def jaccard_pairs(
     # (measured at sf0.1)
     sh_sets = _shingle_sets(df, text_col, id_col, shingle_size).localCheckpoint(eager=True)
 
-    if candidates is None and method == "auto":
-        method = _choose_exact_method(sh_sets)
-    if candidates is None and method == "lsh":
-        sigs = minhash_signatures(df, n_hashes, shingle_size, text_col, id_col, sets=sh_sets)
-        candidates = lsh_candidate_pairs(sigs, n_hashes, bands, id_col)
-    elif candidates is None and method == "prefix":
-        candidates = _prefix_candidates(sh_sets, threshold)
-    elif candidates is None:
-        # Each exploded shingle row carries its doc's set size, so the
-        # Jaccard upper bound falls out of the pair aggregate itself —
-        # sizes are functionally dependent on the ids, so widening the
-        # grouping key by two ints is free, and no per-document side
-        # table needs joining back in. (r9: this replaces two forced
-        # broadcasts of an O(N-docs) frame — the one shape that would
-        # OOM the driver at 100 TB; now the plan has ONE shuffle and
-        # zero driver-sized structures regardless of corpus size.)
-        # explode FIRST, hash the exploded column (r18): xxhash64 over
-        # a plain column is whole-stage codegen; the old
-        # transform(set, xxhash64) ran the hash inside an interpreted
-        # higher-order function. Same multiset of (id, sz, h) rows.
-        ds_h = sh_sets.select(
-            "__id",
-            F.size("__set").alias("__sz"),
-            F.explode("__set").alias("__s"),
-        ).select("__id", "__sz", F.xxhash64("__s").alias("__h"))
-        a = ds_h.alias("a")
-        b = ds_h.alias("b")
-        bound = (
-            a.join(b, (F.col("a.__h") == F.col("b.__h")) & (F.col("a.__id") < F.col("b.__id")))
-            .groupBy(
-                F.col("a.__id").alias("id_a"),
-                F.col("b.__id").alias("id_b"),
-                F.col("a.__sz").alias("__sza"),
-                F.col("b.__sz").alias("__szb"),
-            )
-            .agg(F.count("*").alias("__ch"))
-            .filter(
-                F.round(F.col("__ch") / (F.col("__sza") + F.col("__szb") - F.col("__ch")), 6)
-                >= threshold
-            )
+    # Each exploded shingle row carries its doc's set size, so the
+    # Jaccard upper bound falls out of the pair aggregate itself —
+    # sizes are functionally dependent on the ids, so widening the
+    # grouping key by two ints is free, and no per-document side
+    # table needs joining back in. (r9: this replaces two forced
+    # broadcasts of an O(N-docs) frame — the one shape that would
+    # OOM the driver at 100 TB; now the plan has ONE shuffle and
+    # zero driver-sized structures regardless of corpus size.)
+    # explode FIRST, hash the exploded column (r18): xxhash64 over
+    # a plain column is whole-stage codegen; the old
+    # transform(set, xxhash64) ran the hash inside an interpreted
+    # higher-order function. Same multiset of (id, sz, h) rows.
+    ds_h = sh_sets.select(
+        "__id",
+        F.size("__set").alias("__sz"),
+        F.explode("__set").alias("__s"),
+    ).select("__id", "__sz", F.xxhash64("__s").alias("__h"))
+    a = ds_h.alias("a")
+    b = ds_h.alias("b")
+    candidates = (
+        a.join(b, (F.col("a.__h") == F.col("b.__h")) & (F.col("a.__id") < F.col("b.__id")))
+        .groupBy(
+            F.col("a.__id").alias("id_a"),
+            F.col("b.__id").alias("id_b"),
+            F.col("a.__sz").alias("__sza"),
+            F.col("b.__sz").alias("__szb"),
         )
-        candidates = bound.select("id_a", "id_b")
-
+        .agg(F.count("*").alias("__ch"))
+        .filter(
+            F.round(F.col("__ch") / (F.col("__sza") + F.col("__szb") - F.col("__ch")), 6)
+            >= threshold
+        )
+        .select("id_a", "id_b")
+    )
     return _verify_jaccard(sh_sets, candidates, threshold)
 
 
@@ -464,71 +424,6 @@ def containment_pairs(
     )
 
 
-def _prefix_candidates(sh_sets: DataFrame, threshold: float) -> DataFrame:
-    """Exact candidate pairs by prefix filtering.
-
-    Principle (prefix-filtering, public AllPairs/PPJoin literature):
-    order all shingles by one global total order; if |x∩y| ≥ α then
-    the first |x|−α+1 elements of x must intersect the first |y|−α+1
-    of y. For Jaccard ≥ t the size filter gives |y| ≥ t·|x|, hence
-    α ≥ ⌈t·|x|⌉, so indexing the first ``|x| − ⌈t·|x|⌉ + 1`` elements
-    of each side in document-frequency-ascending order is sufficient
-    for complete recall. The join is an equi-join on prefix hashes
-    with a size-ratio guard; hot shingles (high df) sort to the tail
-    and stay out of prefixes, so the inverted-index hot-key quadratic
-    never materializes. One df aggregate + one per-doc window + one
-    equi-join — every shuffle keyed, no all-pairs."""
-    ds_h = sh_sets.select(
-        "__id",
-        F.size("__set").alias("__sz"),
-        F.explode("__set").alias("__s"),
-    ).select("__id", "__sz", F.xxhash64("__s").alias("__h"))
-    freq = ds_h.groupBy("__h").agg(F.count("*").alias("__df"))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("__id").orderBy(F.col("__df").asc(), F.col("__h").asc())
-    prefix = (
-        ds_h.join(freq, "__h")
-        .withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= F.col("__sz") - F.ceil(F.lit(threshold) * F.col("__sz")) + 1)
-        .select("__id", "__sz", "__h")
-    )
-    a = prefix.alias("a")
-    b = prefix.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.__h") == F.col("b.__h"))
-            & (F.col("a.__id") < F.col("b.__id"))
-            # size-ratio guard: Jaccard ≥ t forces t·|x| ≤ |y| ≤ |x|/t
-            & (F.col("b.__sz") >= F.lit(threshold) * F.col("a.__sz"))
-            & (F.col("a.__sz") >= F.lit(threshold) * F.col("b.__sz")),
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .distinct()
-    )
-
-
-def _choose_exact_method(sh_sets: DataFrame) -> str:
-    """The documented inverted-vs-prefix switch rule, operationalized
-    (BENCH_NOTES r9: the crossover is governed by shingle document
-    frequency, never corpus size): one cheap aggregate over the
-    already-materialized shingle sets computes the hot-shingle mass;
-    'prefix' wins when the single hottest shingle's quadratic
-    candidate term max_df² exceeds 10× the linear scan term Σ|set|.
-    Costs one metadata-result Spark job."""
-    stats = (
-        sh_sets.select(F.explode("__set").alias("__s"))
-        .groupBy("__s")
-        .agg(F.count("*").alias("__df"))
-        .agg(F.max("__df").alias("max_df"), F.sum("__df").alias("total"))
-        .collect()[0]
-    )
-    hot = stats["max_df"] or 0
-    total = stats["total"] or 0
-    return "prefix" if hot * hot > 10 * total else "inverted"
-
-
 def _verify_jaccard(sh_sets: DataFrame, candidates: DataFrame, threshold: float) -> DataFrame:
     """Exact verification of candidate pairs: the narrow per-doc string
     sets give the true intersection and sizes (no shuffle to build)."""
@@ -565,7 +460,6 @@ def minhash_signatures(
     shingle_size: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    sets: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash signature per document: min over shingles of
     ``(a_i * h32(shingle) + b_i) % P`` for each of ``n_hashes``
@@ -573,28 +467,13 @@ def minhash_signatures(
 
     NARROW — one map-only pass, no shuffle at all until someone
     aggregates downstream; at 100 TB the signature stage is therefore
-    a map-only scan. Fresh inputs run the fused Arrow kernel
+    a map-only scan. It runs the fused Arrow kernel
     (:func:`_shingle_frame` — tokenize/shingle/md5/min in one numpy
     batch pass, r18: replaces the interpreted per-permutation
-    ``transform``+``array_min`` chain, bit-identical by pin test).
-    Pass a precomputed (materialized) ``sets`` frame to derive
-    signatures from already-built shingle sets via the expression
-    path instead."""
-    if sets is None:
-        return _shingle_frame(
-            df, text_col, id_col, shingle_size, n_hashes=n_hashes, with_set=False
-        ).withColumnRenamed("__id", id_col)
-    hashed = sets.select(
-        F.col("__id").alias(id_col),
-        F.transform("__set", lambda s: shingle_hash32(s)).alias("__hs"),
-    )
-    mins = [
-        F.array_min(
-            F.transform("__hs", lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(_P))
-        ).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(_hash_params(n_hashes))
-    ]
-    return hashed.select(F.col(id_col), *mins)
+    ``transform``+``array_min`` chain, bit-identical by pin test)."""
+    return _shingle_frame(
+        df, text_col, id_col, shingle_size, n_hashes=n_hashes, with_set=False
+    ).withColumnRenamed("__id", id_col)
 
 
 def _banded(signatures: DataFrame, n_hashes: int, bands: int, id_col: str) -> DataFrame:
@@ -1201,6 +1080,7 @@ def _cc_star(edges: DataFrame, max_iterations: int) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
+    converged = False
     for _ in range(max_iterations):
         # -- large-star: group by the SMALLER endpoint's neighborhoods.
         # bidirectional view so Γ(u) is complete
@@ -1237,6 +1117,13 @@ def _cc_star(edges: DataFrame, max_iterations: int) -> DataFrame:
         e = small
         if converged:
             break
+    if not converged:
+        # the edge set short of the fixpoint is not a forest of stars:
+        # its labels split components (see _cc_min_label)
+        raise RuntimeError(
+            f"star contraction did not converge in {max_iterations} "
+            "iterations; raise max_iterations"
+        )
     # fixpoint stars: u is the component min for every (u, v) edge
     return e.select(F.col("v").alias("node"), F.col("u").alias("label")).union(
         e.select(F.col("u").alias("node"), F.col("u").alias("label"))
@@ -1329,23 +1216,15 @@ def embedding_dedup_pairs(
     NULL/NaN-component vectors are excluded (see ``_finite_vectors``).
     """
     df = _finite_vectors(df, vec_col)
-    q = F.transform(F.col(vec_col), lambda x: F.round(x.cast("double") * quantize).cast("long"))
-    vecs = spread(df).select(F.col(id_col).alias("__id"), q.alias("__q"))
+    vecs = spread(df).select(
+        F.col(id_col).alias("__id"), _quantized(F.col(vec_col), quantize).alias("__q")
+    )
     # zero-norm vectors excluded: cosine is undefined for them and the
     # 0/0 double division in the verify is an ANSI DIVIDE_BY_ZERO
-    norms = vecs.select(
-        "__id",
-        "__q",
-        F.aggregate(F.zip_with("__q", "__q", lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, x: acc + x).alias("__n2"),
-    ).filter(F.col("__n2") > 0)
-    dot = F.aggregate(
-        F.zip_with(F.col("a.__q"), F.col("b.__q"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+    norms = vecs.select("__id", "__q", _dot(F.col("__q"), F.col("__q")).alias("__n2")).filter(
+        F.col("__n2") > 0
     )
-    cosine = F.round(
-        dot / F.sqrt(F.col("a.__n2").cast("double") * F.col("b.__n2").cast("double")), 6
-    )
+    cosine = _cosine(F.col("a.__q"), F.col("b.__q"), F.col("a.__n2"), F.col("b.__n2"))
 
     if method == "exact":
         a = norms.alias("a")

@@ -129,7 +129,6 @@ def auc_by_group(
     score_col: str,
     positive: Column,
     group_cols: list[str],
-    via: str = "window",
 ) -> DataFrame:
     """Exact ROC AUC per segment — the sliced-evaluation pass that
     catches a model scoring well globally while failing a cohort. Same
@@ -140,83 +139,32 @@ def auc_by_group(
     module docstring). Returns one row per group: (group_cols..., n,
     n_pos, n_neg, auc; auc NULL for single-class segments).
 
-    SCALE CONTRACT — pick ``via`` by segment cardinality:
-
-    - ``'window'`` (default): the cumulative pass is a window
-      PARTITIONED BY the group, so each segment's DISTINCT SCORES
-      evaluate in ONE reducer. Right when segments are many and small
-      (per-language, per-domain), or when scores are quantized —
-      model probabilities rounded to ~1e-6 bound every segment at
-      ~1e6 distinct-score rows of metadata, regardless of row count.
-    - ``'global_cumsum'``: LOW-cardinality segmentation over
-      high-cardinality raw scores (2–4 A/B arms × billions of distinct
-      floats) makes each segment one giant reducer; this path instead
-      runs :func:`rank.global_cumsum` range-partitioned on
-      (group, score) — no per-segment reducer — and subtracts each
-      group's prefix (one segment-count-sized aggregate, broadcast
-      back, NULL-safe on group keys). Same exact values, pinned by
-      ``test_auc_by_group_global_cumsum_path``.
+    SCALE CONTRACT: the cumulative pass is a window PARTITIONED BY the
+    group, so each segment's DISTINCT SCORES evaluate in ONE reducer.
+    Right when segments are many and small (per-language, per-domain),
+    or when scores are quantized — model probabilities rounded to
+    ~1e-6 bound every segment at ~1e6 distinct-score rows of metadata,
+    regardless of row count.
     """
-    if via not in ("window", "global_cumsum"):
-        raise ValueError(
-            f"auc_by_group: via={via!r} — expected 'window' or "
-            "'global_cumsum' (a typo here would silently hand a "
-            "wide-segment workload the single-reducer window plan)"
-        )
+    from pyspark.sql.window import Window
+
     s = F.col(score_col)
     g = df.where(s.isNotNull() & ~F.isnan(s.cast("double"))).groupBy(*group_cols, s.alias("__score")).agg(
         F.count("*").alias("__tot"),
         F.sum(positive.cast("long")).alias("__pos"),
     )
-    if via == "global_cumsum":
-        cum0 = global_cumsum(
-            g,
-            [F.col(c).asc() for c in group_cols] + [F.col("__score").asc()],
-            ["__tot", "__pos"],
-        )
-        # per-group prefix base: the global running total just BEFORE
-        # the group's first row (cum − own value is minimal there,
-        # since both running sums are nondecreasing in the range order)
-        base = (
-            cum0.groupBy(*group_cols)
-            .agg(
-                F.min(F.col("cum___tot") - F.col("__tot")).alias("__base_tot"),
-                F.min(F.col("cum___pos") - F.col("__pos")).alias("__base_pos"),
-            )
-            # renamed keys: base derives from cum0, so joining on the
-            # original names would be an ambiguous self-join
-            .select(
-                *[F.col(c).alias(f"__bg{i}__") for i, c in enumerate(group_cols)],
-                "__base_tot",
-                "__base_pos",
-            )
-        )
-        cond = None
-        for i, c in enumerate(group_cols):
-            eq = F.col(c).eqNullSafe(F.col(f"__bg{i}__"))
-            cond = eq if cond is None else (cond & eq)
-        cum = cum0.join(F.broadcast(base), cond).select(
-            *group_cols,
-            "__tot",
-            "__pos",
-            (F.col("cum___tot") - F.col("__base_tot")).alias("__cum_tot"),
-            (F.col("cum___pos") - F.col("__base_pos")).alias("__cum_pos"),
-        )
-    else:
-        from pyspark.sql.window import Window
-
-        w = (
-            Window.partitionBy(*group_cols)
-            .orderBy(F.col("__score").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cum = g.select(
-            *group_cols,
-            "__tot",
-            "__pos",
-            F.sum("__tot").over(w).alias("__cum_tot"),
-            F.sum("__pos").over(w).alias("__cum_pos"),
-        )
+    w = (
+        Window.partitionBy(*group_cols)
+        .orderBy(F.col("__score").asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = g.select(
+        *group_cols,
+        "__tot",
+        "__pos",
+        F.sum("__tot").over(w).alias("__cum_tot"),
+        F.sum("__pos").over(w).alias("__cum_pos"),
+    )
     neg_below = (F.col("__cum_tot") - F.col("__tot")) - (
         F.col("__cum_pos") - F.col("__pos")
     )

@@ -54,29 +54,20 @@ def _offset_expr_or_join(
     pid_col: Column,
     offsets: list[tuple[int, tuple[int, ...]]],
     n_cols: int,
-    mode: str,
 ) -> tuple[DataFrame, list[Column]]:
     """Attach cumulative per-partition offsets — rows of
     ``(pid, (off_col0, off_col1, …))`` — to ``s`` either as inlined
-    literal map lookups (``mode='map'``) or ONE broadcast join on the
-    partition id carrying all columns (``mode='join'``; ``'auto'``
-    switches on :data:`OFFSET_JOIN_THRESHOLD`). Returns the (possibly
-    joined) frame and one offset Column per value column. Both paths
-    are value-identical; the join path keeps the consumer plan O(1)
-    in the partition count. This is the SINGLE policy site —
-    :func:`global_rank` (one column) and :func:`global_cumsum` (many)
-    both route through it, so the threshold cannot drift."""
-    if mode not in ("auto", "map", "join"):
-        # a typo ('Map', 'inline', …) would otherwise silently take
-        # the join path — values identical, but the caller's requested
-        # plan shape ignored (same guard metrics.auc_by_group has for
-        # its `via`)
-        raise ValueError(f"offsets_via must be 'auto'|'map'|'join', got {mode!r}")
-    if mode == "auto":
-        mode = "join" if len(offsets) > OFFSET_JOIN_THRESHOLD else "map"
+    literal map lookups (at most :data:`OFFSET_JOIN_THRESHOLD`
+    partitions) or ONE broadcast join on the partition id carrying all
+    columns (above it). Returns the (possibly joined) frame and one
+    offset Column per value column. Both paths are value-identical;
+    the join path keeps the consumer plan O(1) in the partition count.
+    This is the SINGLE policy site — :func:`global_rank` (one column)
+    and :func:`global_cumsum` (many) both route through it, so the
+    threshold cannot drift."""
     if not offsets:
         return s, [F.lit(0)] * n_cols
-    if mode == "map":
+    if len(offsets) <= OFFSET_JOIN_THRESHOLD:
         exprs: list[Column] = []
         for ci in range(n_cols):
             entries: list[Column] = []
@@ -100,7 +91,6 @@ def global_rank(
     order: list[Column],
     rank_col: str = "rank",
     num_partitions: int | None = None,
-    offsets_via: str = "auto",
 ) -> tuple[DataFrame, int]:
     """Exact 1-based global rank under ``order`` (which must be a
     TOTAL order — include a unique tie-break column, or equal rows get
@@ -112,13 +102,13 @@ def global_rank(
     inputs (per-user, per-key tables); raw-corpus global ranks are an
     anti-pattern at any engine.
 
-    ``offsets_via``: ``'map'`` inlines the cumulative offsets as a
-    literal map (2 expressions per range partition — cheapest through
-    thousands of partitions), ``'join'`` broadcast-joins them on the
-    partition id (plan stays O(1) in partition count — the 100k+
-    partition shape), ``'auto'`` (default) switches at
-    :data:`OFFSET_JOIN_THRESHOLD`. Both paths are value-identical
-    (pinned by ``test_global_rank_offset_join_path``).
+    The cumulative offsets inline as a literal map (2 expressions per
+    range partition — cheapest through thousands of partitions) and
+    ride a broadcast join on the partition id above
+    :data:`OFFSET_JOIN_THRESHOLD` partitions (plan stays O(1) in
+    partition count — the 100k+ partition shape). Both paths are
+    value-identical (pinned by
+    ``test_global_rank_auto_threshold_switches``).
     """
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     s = (
@@ -138,7 +128,7 @@ def global_rank(
         offsets.append((int(p), (total,)))
         total += c
     s, (offset,) = _offset_expr_or_join(
-        s, F.shiftright(F.col(_MONO), 33), offsets, 1, offsets_via
+        s, F.shiftright(F.col(_MONO), 33), offsets, 1
     )
     local = F.col(_MONO).bitwiseAND(F.lit(_LOW33))
     return (
@@ -155,7 +145,6 @@ def global_cumsum(
     value_cols: list[str],
     num_partitions: int | None = None,
     prefix: str = "cum_",
-    offsets_via: str = "auto",
 ) -> DataFrame:
     """Exact running ``SUM(v) OVER (ORDER BY order ROWS UNBOUNDED
     PRECEDING)`` for each of ``value_cols`` — without the
@@ -176,10 +165,10 @@ def global_cumsum(
     computed in int64 — callers with 100 TB-scale magnitudes should
     pre-quantize so per-partition totals stay in range.
 
-    ``offsets_via`` as in :func:`global_rank` — ``'join'`` carries ALL
-    per-column offsets in ONE broadcast row set (#partitions rows ×
-    #cols), so the consumer plan stays O(#cols), not
-    O(#partitions × #cols) literal-map entries."""
+    Offsets attach as in :func:`global_rank`; above the threshold the
+    join carries ALL per-column offsets in ONE broadcast row set
+    (#partitions rows × #cols), so the consumer plan stays O(#cols),
+    not O(#partitions × #cols) literal-map entries."""
     from pyspark.sql import Window
 
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
@@ -202,7 +191,7 @@ def global_cumsum(
         for ci in range(len(value_cols)):
             runs[ci] += int(tot[ci] or 0)
     s, offset_exprs = _offset_expr_or_join(
-        s, F.col("__fx_pid__"), offsets, len(value_cols), offsets_via
+        s, F.col("__fx_pid__"), offsets, len(value_cols)
     )
     w = (
         Window.partitionBy("__fx_pid__")

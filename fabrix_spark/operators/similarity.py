@@ -900,7 +900,7 @@ def mmr_rerank(
     step = 1-based selection order."""
     query_id_col = query_id_col or id_col
     # lazy barrier (r17): rel feeds THREE consumer chains — the step-1
-    # seed, the per-iteration `remaining` anti-join chain, and the
+    # seed, the per-iteration `remaining` anti-join, and the
     # pool-vector join below. Without it every greedy step re-executed
     # the whole corpus top-k scan (~5-6 full passes, measured 11 s vs
     # 5 s at sf0.1); after it the top-k pass runs ONCE and every
@@ -945,11 +945,16 @@ def mmr_rerank(
     selected = rel.filter(F.col("rank") == 1).select(
         "q_id", "c_id", "cosine", F.lit(1).cast("long").alias("step")
     )
-    remaining = rel.filter(F.col("rank") > 1).select("q_id", "c_id", "cosine")
+    rest = rel.filter(F.col("rank") > 1).select("q_id", "c_id", "cosine")
     sims2 = sims.select(
         "q_id", F.col("a_id").alias("c_id"), F.col("b_id").alias("s_id"), "sim"
     )
     for s in range(2, k + 1):
+        # anti-join against the checkpointed picks so far, so each
+        # step's plan stays one join deep over rel, whatever the step
+        remaining = rest.join(
+            selected.select("q_id", "c_id"), ["q_id", "c_id"], "left_anti"
+        )
         msim = (
             remaining.select("q_id", "c_id")
             .join(selected.select("q_id", F.col("c_id").alias("s_id")), "q_id")
@@ -970,9 +975,6 @@ def mmr_rerank(
             F.lit(s).cast("long").alias("step"),
         )
         selected = selected.unionByName(pick).localCheckpoint(eager=False)
-        remaining = remaining.join(
-            pick.select("q_id", "c_id"), ["q_id", "c_id"], "left_anti"
-        )
     return selected
 
 

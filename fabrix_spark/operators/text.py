@@ -983,7 +983,6 @@ def bpe_encode(
     merges: list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Encode a corpus with a trained BPE merge table
     (:func:`bpe_train`'s artifact) — the inference half of the
@@ -996,14 +995,15 @@ def bpe_encode(
     touches the corpus — merges apply to the DISTINCT-WORD VOCAB
     (``k`` vocab-sized passes of :func:`bpe_apply_merge`, plan kept
     flat by a ``localCheckpoint`` every 8 merges and after the last),
-    and the corpus meets the result once, via a word equi-join.
-    ``broadcast_vocab=True`` broadcasts the encoded vocab (a
-    word→symbols map is typically ≪ executor memory even for
-    billion-word corpora — it is bounded by the vocabulary, not the
-    corpus); set False to let the optimizer pick a shuffle join when
-    the vocabulary itself is huge. Words are restricted to
-    ``^[a-z]{2,}$`` exactly as :func:`bpe_train` — the trainer and
-    encoder must agree on the pre-tokenizer.
+    and the corpus meets the result once, via a word equi-join that
+    broadcasts the encoded vocab (a word→symbols map is bounded by the
+    vocabulary, not the corpus). The hint is what keeps the corpus
+    unshuffled: a ``localCheckpoint`` carries its source plan's size
+    ESTIMATE, not its true size (exabytes for this distinct-over-
+    explode vocab), so unhinted, a corpus past the broadcast threshold
+    gets a sort-merge join that shuffles every corpus row. Words are
+    restricted to ``^[a-z]{2,}$`` exactly as :func:`bpe_train` — the
+    trainer and encoder must agree on the pre-tokenizer.
 
     The corpus is ``spread()`` before tokenizing: the explode + regex
     filter is CPU-bound per-row work, and a small parquet input is one
@@ -1034,9 +1034,7 @@ def bpe_encode(
         # the predicate cannot cross).
         if i % 8 == 0 or i == len(merges):
             syms = syms.localCheckpoint()
-    if broadcast_vocab:
-        syms = F.broadcast(syms)
-    return corpus.join(syms, "word").select(
+    return corpus.join(F.broadcast(syms), "word").select(
         id_col,
         "word_pos",
         F.posexplode("symbols").alias("sym_pos", "token"),

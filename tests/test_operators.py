@@ -1,5 +1,7 @@
 """North-star operators: dedup / similarity / text / multimodal."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -230,10 +232,27 @@ def _shingle_sets_expr(df, text_col, id_col, n):
     )
 
 
+def _minhash_signatures_expr(sets, n_hashes, id_col):
+    """Expression-pipeline twin of the kernel's signature columns:
+    per permutation, ``array_min`` over ``transform``ed shingle
+    hashes of already-built ``(__id, __set)`` rows."""
+    hashed = sets.select(
+        F.col("__id").alias(id_col),
+        F.transform("__set", lambda s: dedup.shingle_hash32(s)).alias("__hs"),
+    )
+    mins = [
+        F.array_min(
+            F.transform("__hs", lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(dedup._P))
+        ).alias(f"mh_{i}")
+        for i, (a, b) in enumerate(dedup._hash_params(n_hashes))
+    ]
+    return hashed.select(F.col(id_col), *mins)
+
+
 def test_shingle_kernel_matches_expression_pipeline(spark):
     """The r18 Arrow shingle/signature kernel must be BIT-identical to
-    the expression pipeline it replaced (_shingle_sets_expr above +
-    transform/array_min minhash): same distinct-shingle arrays in the
+    the expression pipeline it replaced (_shingle_sets_expr and
+    _minhash_signatures_expr above): same distinct-shingle arrays in the
     same first-occurrence order, same md5-derived h32 mins — over a
     synthetic corpus AND adversarial whitespace. Java-regex semantics
     pinned explicitly: \\s is ASCII-only (U+00A0 NBSP and U+2028 LS are
@@ -272,7 +291,7 @@ def test_shingle_kernel_matches_expression_pipeline(spark):
     sets = _shingle_sets_expr(df, "text", "doc_id", 3).localCheckpoint()
     exp_sigs = {
         r["doc_id"]: tuple(r[f"mh_{i}"] for i in range(16))
-        for r in dedup.minhash_signatures(df, 16, 3, "text", "doc_id", sets=sets).collect()
+        for r in _minhash_signatures_expr(sets, 16, "doc_id").collect()
     }
     got_sigs = {
         r["doc_id"]: tuple(r[f"mh_{i}"] for i in range(16))
@@ -417,14 +436,6 @@ def test_dup_clusters_star_long_chain(spark):
         for r in dedup.dup_clusters(nodes, pdf, max_iterations=10, strategy="star").collect()
     }
     assert got == {i: 0 for i in range(n)}
-
-
-def test_jaccard_prefix_matches_inverted(docs):
-    """Both exact candidate strategies must produce the identical pair
-    set — prefix filtering's recall guarantee is provably complete."""
-    inv = sorted(map(tuple, dedup.jaccard_pairs(docs, threshold=0.2).collect()))
-    pre = sorted(map(tuple, dedup.jaccard_pairs(docs, threshold=0.2, method="prefix").collect()))
-    assert inv == pre and len(inv) > 0
 
 
 def test_minhash_lsh_finds_near_dups(spark):
@@ -1450,13 +1461,16 @@ def test_edit_distance_pairs_blocked(spark):
 
 def test_cc_label_raises_past_iteration_budget(spark):
     # a path graph of diameter 6 cannot converge in 2 rounds — the
-    # label strategy must REFUSE rather than silently split the chain
+    # label strategy must REFUSE rather than silently split the chain,
+    # and so must star contraction at a budget of one round
     nodes = spark.createDataFrame([(i,) for i in range(7)], "doc_id long")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup.dup_clusters(nodes, pairs, max_iterations=2).collect()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.dup_clusters(nodes, pairs, max_iterations=1, strategy="star").collect()
     # star handles the same graph within the budget
     got = dedup.dup_clusters(nodes, pairs, max_iterations=6, strategy="star").collect()
     assert {r["cluster_id"] for r in got} == {0}
@@ -1903,21 +1917,64 @@ ANN_FAMILY_QUERIES = (
 )
 
 
-def test_lloyd_family_queries_match_duckdb_oracles(spark, sf_dir, verify_local):
-    """Every registry/STAGED query built on the Lloyd trainers, PQ
-    encoding, SemDeDup, cosine_topk or ivf_assign hash-matches its
-    DuckDB oracle (verify_local's exact compare), so an oracle drift in
-    these families fails the default run, not only the manual sweep."""
+def _oracle_mismatches(spark, sf_dir, verify_local, names):
+    """{name: error} for each registry/STAGED query in ``names`` whose
+    result differs from its DuckDB oracle (verify_local's exact
+    compare) or is empty."""
     from fabrix_spark.queries import REGISTRY, STAGED
 
     con = verify_local.oracle_con(sf_dir)
     errors = {}
-    for name in LLOYD_FAMILY_QUERIES + ANN_FAMILY_QUERIES:
+    for name in names:
         qd = REGISTRY[name] if name in REGISTRY else STAGED[name]
         s_tbl = qd.fn(spark, sf_dir).toArrow()
         err = verify_local.compare(s_tbl, con.execute(qd.oracle).arrow())
         if err or s_tbl.num_rows == 0:
             errors[name] = err or "empty result"
+    return errors
+
+
+def test_lloyd_family_queries_match_duckdb_oracles(spark, sf_dir, verify_local):
+    """Every registry/STAGED query built on the Lloyd trainers, PQ
+    encoding, SemDeDup, cosine_topk or ivf_assign hash-matches its
+    DuckDB oracle (verify_local's exact compare), so an oracle drift in
+    these families fails the default run, not only the manual sweep."""
+    errors = _oracle_mismatches(
+        spark, sf_dir, verify_local, LLOYD_FAMILY_QUERIES + ANN_FAMILY_QUERIES
+    )
+    assert not errors, errors
+
+
+# queries over jaccard_pairs, minhash, bpe_encode, global_rank /
+# global_cumsum, the AUC/ROC/PR/KS metrics, mmr_rerank and dup_clusters
+# (both connected-components strategies)
+OPERATOR_FAMILY_QUERIES = (
+    "d_jaccard_pairs",
+    "d_minhash_lsh",
+    "t_bpe_encode",
+    "w_global_rank",
+    "fe_quantile_bins",
+    "pipeline_dsir_curation",
+    "pipeline_quality_filter",
+    "ml_auc",
+    "ml_auc_by_segment",
+    "ml_roc_points",
+    "ml_pr_points",
+    "ml_ks_test",
+    "sim_mmr_rerank",
+    "d_dup_clusters",
+    "pipeline_entity_resolution",
+)
+
+
+def test_operator_family_queries_match_duckdb_oracles(spark, sf_dir, verify_local):
+    """The dedup, ranking, metrics, BPE and MMR queries above
+    hash-match their DuckDB oracles in the default run.
+    d_embedding_neardup finds no pair at sf0.001, and an empty result
+    would check nothing, so it runs at sf0.01, where it finds one."""
+    errors = _oracle_mismatches(spark, sf_dir, verify_local, OPERATOR_FAMILY_QUERIES)
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    errors.update(_oracle_mismatches(spark, sf001, verify_local, ("d_embedding_neardup",)))
     assert not errors, errors
 
 
@@ -3118,40 +3175,6 @@ def test_psi_drift_disjoint_support_fuzz(spark):
         assert all(t >= 0 for _, _, t in got.values())
         # disjoint mass on both sides -> at least one strictly positive
         assert any(t > 0 for _, _, t in got.values())
-
-
-def test_jaccard_auto_method_selection(spark):
-    """method='auto' applies the measured df-based switch rule: a
-    benign corpus picks the inverted index; a corpus dominated by one
-    hot shingle (every doc shares a boilerplate preamble) picks prefix
-    filtering. Both produce the exact pair set either way."""
-    from fabrix_spark.operators import dedup
-
-    benign = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(100)
-    got_auto = sorted(map(tuple, dedup.jaccard_pairs(benign, threshold=0.2, method="auto").collect()))
-    got_inv = sorted(map(tuple, dedup.jaccard_pairs(benign, threshold=0.2).collect()))
-    assert got_auto == got_inv
-
-    # hot corpus: identical 6-token preamble in every doc -> the
-    # preamble shingles have df == n_docs, so max_df^2 >> 10 * sum(|set|)
-    hot = spark.range(300).select(
-        F.col("id").alias("doc_id"),
-        F.concat(
-            F.lit("terms of service apply to everything here "),
-            F.col("id").cast("string"), F.lit(" unique tail "),
-            (F.col("id") * 7 % 13).cast("string"),
-        ).alias("text"),
-    )
-    a = sorted(map(tuple, dedup.jaccard_pairs(hot, threshold=0.5, method="auto").collect()))
-    b = sorted(map(tuple, dedup.jaccard_pairs(hot, threshold=0.5, method="prefix").collect()))
-    c = sorted(map(tuple, dedup.jaccard_pairs(hot, threshold=0.5).collect()))
-    assert a == b == c  # exact recall regardless of chosen path
-
-    # the decision itself, on each corpus's shingle sets
-    from fabrix_spark.operators.dedup import _choose_exact_method, _shingle_sets
-
-    assert _choose_exact_method(_shingle_sets(benign, "text", "doc_id", 3)) == "inverted"
-    assert _choose_exact_method(_shingle_sets(hot, "text", "doc_id", 3)) == "prefix"
 
 
 def test_decontaminate_semantic_overlapping_id_spaces(spark):
@@ -5003,21 +5026,6 @@ def test_collect_gram_derives_dim(spark):
     assert len(v) == 5
 
 
-def test_auc_by_group_via_validated(spark):
-    """A typo'd ``via`` raises instead of silently handing a
-    wide-segment workload the single-reducer window plan (r12
-    ADVICE)."""
-    import pytest
-
-    from fabrix_spark.operators.metrics import auc_by_group
-
-    df = spark.createDataFrame(
-        [("a", 0.5, True)], "seg string, score double, pos boolean"
-    )
-    with pytest.raises(ValueError, match="global_cumsum"):
-        auc_by_group(df, "score", F.col("pos"), ["seg"], via="global-cumsum")
-
-
 def test_ks_statistic_matches_bruteforce(spark):
     """ks_statistic == the O(n·m) brute-force empirical-CDF supremum
     on random integer-valued cohorts — ties within and across cohorts,
@@ -5669,44 +5677,6 @@ def test_auc_by_group_matches_pairwise(spark):
     assert got["c"]["auc"] is None and got["c"]["n_neg"] == 0
 
 
-def test_auc_by_group_global_cumsum_path(spark):
-    """via='global_cumsum' — the wide-segment path for low-cardinality
-    segmentation (2 skewed A/B arms here, one with many distinct raw
-    scores) — returns exactly the window path's rows, including a NULL
-    group key (the prefix-base join is NULL-safe) and a single-class
-    segment. This pins the scale contract in the docstring: same
-    values, no per-segment reducer."""
-    import random
-
-    from fabrix_spark.operators.metrics import auc_by_group
-
-    rnd = random.Random(12)
-    rows = [("A", rnd.random(), rnd.random() < 0.3) for _ in range(400)]
-    rows += [("B", rnd.choice([0.2, 0.5, 0.9]), rnd.random() < 0.7) for _ in range(23)]
-    rows += [(None, rnd.random(), rnd.random() < 0.5) for _ in range(31)]
-    rows += [("C", 0.4, True), ("C", 0.6, True)]     # single-class
-    rows += [("A", None, True)]                      # unscored: excluded
-    df = spark.createDataFrame(rows, "seg string, score double, pos boolean")
-
-    def _key(recs):
-        return sorted(
-            (
-                (r["seg"] or "", r["n"], r["n_pos"], r["n_neg"],
-                 -1.0 if r["auc"] is None else round(r["auc"], 12))
-                for r in recs
-            )
-        )
-
-    via_window = _key(auc_by_group(df, "score", F.col("pos"), ["seg"]).collect())
-    via_gcs = _key(
-        auc_by_group(
-            df, "score", F.col("pos"), ["seg"], via="global_cumsum"
-        ).collect()
-    )
-    assert via_gcs == via_window
-    assert len(via_gcs) == 4  # A, B, C, NULL segment all present
-
-
 def test_standardize_by_group_matches_global_per_slice(spark):
     """standardize(by=[g]) on the union == standardize() run on each
     group's rows alone — the group mode must not leak moments across
@@ -5764,20 +5734,6 @@ def test_quantile_bins_by_group_matches_global_per_slice(spark):
             assert got[k] == v, (lang, k)
     # fr ties on 5 share one bin; 9 lands in the top bin
     assert got[100] == got[101] == got[102] and got[103] == 4
-
-
-def test_bpe_encode_shuffle_join_path_matches_broadcast(spark):
-    """broadcast_vocab=False (the huge-vocab escape hatch) produces the
-    identical token stream through an optimizer-chosen join."""
-    from fabrix_spark.operators.text import bpe_encode
-
-    df = spark.createDataFrame(
-        [(0, "low lower newest"), (1, "aaaa low")], "doc_id long, text string"
-    )
-    merges = [("l", "o"), ("lo", "w"), ("a", "a")]
-    a = sorted(map(tuple, bpe_encode(df, merges).collect()))
-    b = sorted(map(tuple, bpe_encode(df, merges, broadcast_vocab=False).collect()))
-    assert a == b and len(a) > 0
 
 
 def test_bpe_train_early_stop_matches_twin(spark):

@@ -332,14 +332,15 @@ def test_global_cumsum_fuzz_matches_window(spark, vals, parts):
     assert got == want
 
 
-def test_global_rank_offset_join_path(spark):
+def test_global_rank_offset_join_path(spark, monkeypatch):
     """The broadcast-join offsets path (the 100k+ partition shape) is
     value-identical to the inlined-map path, for both global_rank and
-    global_cumsum, including the multi-column cumsum and a forced
-    low threshold via offsets_via='join'."""
+    global_cumsum, including the multi-column cumsum; the join path is
+    forced by lowering OFFSET_JOIN_THRESHOLD below the partition count,
+    and it leaks no helper columns."""
     from pyspark.sql import functions as F
 
-    from fabrix_spark.operators.rank import global_cumsum, global_rank
+    from fabrix_spark.operators import rank as rank_mod
 
     df = spark.createDataFrame(
         [(i, (i * 37) % 11, (i * 13) % 7 - 3) for i in range(200)],
@@ -347,29 +348,34 @@ def test_global_rank_offset_join_path(spark):
     ).repartition(5)
     order = [F.col("v").asc(), F.col("idx").asc()]
 
-    via_map, n_map = global_rank(df, order, "r", num_partitions=4, offsets_via="map")
-    via_join, n_join = global_rank(df, order, "r", num_partitions=4, offsets_via="join")
-    assert n_map == n_join == 200
-    rm = {r["idx"]: r["r"] for r in via_map.collect()}
-    rj = {r["idx"]: r["r"] for r in via_join.collect()}
-    assert rm == rj
-    assert sorted(rm.values()) == list(range(1, 201))
-    # the join path must not leak helper columns
-    assert set(via_join.columns) == {"idx", "v", "x", "r"}
+    def both_paths(fn):
+        monkeypatch.setattr(rank_mod, "OFFSET_JOIN_THRESHOLD", 1)
+        joined = fn()
+        monkeypatch.setattr(rank_mod, "OFFSET_JOIN_THRESHOLD", 4096)
+        return joined, fn()
 
-    cm = global_cumsum(df, order, ["x", "v"], num_partitions=4, offsets_via="map")
-    cj = global_cumsum(df, order, ["x", "v"], num_partitions=4, offsets_via="join")
-    m = {r["idx"]: (r["cum_x"], r["cum_v"]) for r in cm.collect()}
+    (joined, n_join), (mapped, n_map) = both_paths(
+        lambda: rank_mod.global_rank(df, order, "r", num_partitions=4)
+    )
+    assert n_map == n_join == 200
+    rj = {r["idx"]: r["r"] for r in joined.collect()}
+    assert rj == {r["idx"]: r["r"] for r in mapped.collect()}
+    assert sorted(rj.values()) == list(range(1, 201))
+    assert set(joined.columns) == {"idx", "v", "x", "r"}
+
+    cj, cm = both_paths(
+        lambda: rank_mod.global_cumsum(df, order, ["x", "v"], num_partitions=4)
+    )
     j = {r["idx"]: (r["cum_x"], r["cum_v"]) for r in cj.collect()}
-    assert m == j
+    assert j == {r["idx"]: (r["cum_x"], r["cum_v"]) for r in cm.collect()}
     assert set(cj.columns) == {"idx", "v", "x", "cum_x", "cum_v"}
 
 
 def test_global_rank_auto_threshold_switches(spark, monkeypatch):
-    """offsets_via='auto' picks the literal map below
-    OFFSET_JOIN_THRESHOLD and the broadcast join above it — pinned by
-    lowering the threshold so a 4-partition rank crosses it; both
-    sides must stay value-identical."""
+    """The offsets inline as a literal map up to OFFSET_JOIN_THRESHOLD
+    partitions and ride a broadcast join above it — pinned by lowering
+    the threshold so a 4-partition rank crosses it; both sides must stay
+    value-identical."""
     from pyspark.sql import functions as F
 
     from fabrix_spark.operators import rank as rank_mod
@@ -382,12 +388,12 @@ def test_global_rank_auto_threshold_switches(spark, monkeypatch):
     monkeypatch.setattr(rank_mod, "OFFSET_JOIN_THRESHOLD", 1)
     joined, _ = rank_mod.global_rank(df, order, "r", num_partitions=4)
     plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # auto chose the join path
+    assert "BroadcastHashJoin" in plan  # above the threshold: the join path
 
     monkeypatch.setattr(rank_mod, "OFFSET_JOIN_THRESHOLD", 4096)
     mapped, _ = rank_mod.global_rank(df, order, "r", num_partitions=4)
     plan = mapped._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" not in plan  # auto inlined the map
+    assert "BroadcastHashJoin" not in plan  # at or below it: the inlined map
     assert {(r["idx"], r["r"]) for r in joined.collect()} == {
         (r["idx"], r["r"]) for r in mapped.collect()
     }

@@ -230,14 +230,14 @@ def test_pipeline_embedding_no_cartesian(spark):
 
 
 def test_jaccard_lsh_matches_exact(spark):
-    """jaccard_pairs defaults to the EXACT inverted-index contract;
-    the opt-in LSH path must key its candidate join on the banded
-    signature (no cartesian) and, on this corpus (dup pairs at high
-    J), recover the identical pair set."""
+    """jaccard_pairs is the EXACT inverted-index contract; the MinHash
+    LSH pipeline (32 hashes in 16 bands of 2 rows) must key its
+    candidate join on the banded signature (no cartesian) and, on this
+    corpus (dup pairs at high J), recover the identical pair set."""
     from fabrix_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    lsh = dedup.jaccard_pairs(docs, threshold=0.2, method="lsh")
+    lsh = dedup.minhash_dedup_pairs(docs, 0.2, n_hashes=32, bands=16)
     plan = lsh._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -335,12 +335,6 @@ def main() -> None:
             right_cols=["hr_avg_cents"],
         ).count()
 
-    def op_jaccard_prefix(sf_dir, m):
-        from fabrix_spark.operators import dedup
-
-        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        return dedup.jaccard_pairs(docs, threshold=0.2, method="prefix").count()
-
     # r10: the hot-LSH-bucket salt, MEASURED (r9 pinned pair-set
     # equality only). Pathological corpus: every doc identical, so all
     # 500m docs collapse into ONE bucket per band and pair generation
@@ -429,13 +423,6 @@ def main() -> None:
         ("d_dup_clusters", run_registry("d_dup_clusters"), None),
         # exact inverted-index + verify — the candidate-bound shape
         ("d_jaccard_pairs", run_registry("d_jaccard_pairs"), None),
-        # r9: the hot-shingle-robust exact alternative, measured on the
-        # same corpus so the inverted-vs-prefix crossover is data, not
-        # argument (prefix indexes only the rarity-sorted prefix of
-        # each doc, so it trades a df-aggregate + per-doc window for
-        # immunity to hot-shingle candidate blowup)
-        ("d_jaccard_prefix", op_jaccard_prefix, None),
-        # r8: the two paths previously argued from plan shape only
         ("stream_admission (3 batches)", op_stream_admission, None),
         ("gr_pagerank (|E|=3m·docs)", op_pagerank, None),
         ("gr_label_prop (|E|=3m·docs)", op_label_prop, None),
